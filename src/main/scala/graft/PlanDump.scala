@@ -34,21 +34,21 @@ object PlanDump {
     names.foreach { name =>
       // r19 ADVICE: a mistyped name must log-and-skip, not abort the
       // whole dump run with NoSuchElementException
-      val fn = SparkEntry.queries.getOrElse(name, null)
-      if (fn == null) {
-        System.err.println(s"[plandump] unknown query name: $name (skipped)")
-      } else {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
-          plan.getBytes("UTF-8"))
-        System.err.println(s"[plandump] wrote $name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-      }
+      SparkEntry.queries.get(name) match {
+        case None =>
+          System.err.println(s"[plandump] unknown query name: $name (skipped)")
+        case Some(fn) =>
+          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+          spark.catalog.clearCache()
+          try {
+            val plan = fn(spark, sfDir).queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+            Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
+              plan.getBytes("UTF-8"))
+            System.err.println(s"[plandump] wrote $name")
+          } catch { case e: Throwable =>
+            System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+          }
       }
     }
     spark.stop()

@@ -19,8 +19,10 @@ object Tables {
     * `events.parquet` has shipped with two physical time encodings across
     * driver generations — TIMESTAMP(NANOS) (rejected outright by Spark's
     * reader, [PARQUET_TYPE_ILLEGAL], so read via `nanosAsLong` as a ns
-    * BIGINT) and plain µs TIMESTAMP_NTZ. The loader adapts to whichever
-    * the file carries; both surface the same two columns: `ts` (a
+    * BIGINT) and plain µs TIMESTAMP_NTZ. The loader reads the footer
+    * first ([[ParquetSchema]]: no Spark job) and sets `nanosAsLong` on
+    * the session only when `ts` really is TIMESTAMP(NANOS); both
+    * generations surface the same two columns: `ts` (a
     * timestamp for bucketing/window/output use) and `ts_ns` (epoch-nanos
     * BIGINT, the declared ns projection domain). Range predicates belong
     * on the NATIVE scan column — `ts` for µs data (see [[tsLit]]),
@@ -33,9 +35,12 @@ object Tables {
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "graft.model.Tables requires spark.sql.session.timeZone=UTC " +
         s"(got '${spark.conf.get("spark.sql.session.timeZone")}')")
+    val path = s"$sfDir/$name.parquet"
+    val footer = ParquetSchema.footer(spark, path)
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      if (ParquetSchema.isNanosTimestamp(footer, "ts"))
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val raw = ParquetSchema.read(spark, path, footer)
       raw.schema("ts").dataType match {
         case LongType => // TIMESTAMP(NANOS) generation, read as ns BIGINT
           raw.withColumnRenamed("ts", "ts_ns")
@@ -51,7 +56,7 @@ object Tables {
       // here: filters on the native NTZ column push into the parquet
       // scan, while a wrapped cast(ntz as timestamp) defeats pushdown.
       // Use [[epochMs]] when projecting epoch millis.
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      ParquetSchema.read(spark, path, footer)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.model.ParquetSchema
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -211,7 +212,7 @@ object IvfIndex {
     val meta = readMeta(spark, store)
     requireModelMatches(meta, model, store)
     val ladder = nprobes.distinct.sorted
-    val stored = spark.read.parquet(store)
+    val stored = ParquetSchema.read(spark, store)
       .select(col("vec_id"), col("embedding")).persist()
     val probes = stored
       .withColumn("prk", md5(concat(col("vec_id").cast("string"), lit("|probe"))))
@@ -312,9 +313,10 @@ object IvfIndex {
           .mkString("[", ",", "]")
     // temp + atomic rename (r13, ADVICE): calibrate rewrites the meta of
     // a LIVE store — an in-place create(overwrite) lets a concurrent
-    // readMeta observe a truncated file. Same FileContext OVERWRITE
-    // idiom as Rollup.publish's _CURRENT flip; the raw (checksum-free)
-    // FS keeps a .crc sidecar from racing the rename.
+    // readMeta observe a truncated file. FileContext OVERWRITE rename;
+    // the raw (checksum-free) FS keeps a .crc sidecar from racing it.
+    // Known gap: on the local FS that rename is a delete plus a rename,
+    // and a readMeta inside it finds no meta (ROADMAP).
     val tmp = new org.apache.hadoop.fs.Path(store, s".$MetaFile.tmp")
     val out = graft.streaming.Rollup.rawFs(fs).create(tmp, true)
     try out.write(
@@ -408,7 +410,7 @@ object IvfIndex {
     // caller with one probe set can pre-filter cells explicitly
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy("probe_id").orderBy(col("sim").desc, col("vec_id"))
-    spark.read.parquet(store)
+    ParquetSchema.read(spark, store)
       .join(broadcast(probeCells), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),

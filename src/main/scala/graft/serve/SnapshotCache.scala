@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * The store tiers this serves are IMMUTABLE per version by
   * construction — Rollup's published `snap=<n>/` dirs behind the
-  * `_CURRENT` pointer, RawStore's generation dirs behind the manifest
-  * seq — which is exactly what makes caching safe: a version's content
+  * numbered `_CURRENT.<n>` pointers, RawStore's generation dirs behind
+  * the manifest seq — which is exactly what makes caching safe: a version's content
   * can never change, only the pointer can flip. So the cache:
   *
   *  - calls `version()` (one small pointer/manifest read) on EVERY
@@ -143,14 +143,14 @@ final class SnapshotCache(version: () => Long,
 object SnapshotCache {
 
   /** Cache over [[graft.streaming.Rollup]]'s published snapshot tier:
-    * version = the `_CURRENT` pointer, resolve = the immutable
+    * version = the highest `_CURRENT.<n>` pointer, resolve = the immutable
     * `snap=<n>` dir.
     */
   def forServedRollup(spark: SparkSession, servedDir: String,
                       maxResults: Int = 64): SnapshotCache =
     new SnapshotCache(
       () => graft.streaming.Rollup.currentSnapshot(spark, servedDir),
-      v => spark.read.parquet(s"$servedDir/snap=$v"),
+      v => graft.model.ParquetSchema.read(spark, s"$servedDir/snap=$v"),
       maxResults)
 
   /** Cache over the RAW tier (r13): version =

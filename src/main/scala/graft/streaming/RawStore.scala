@@ -73,14 +73,8 @@ object RawStore {
   }
   val EmptyManifest: Manifest = Manifest(0L, Map.empty, Map.empty)
 
-  private def manifestSeqs(fs: FileSystem, dir: String): Seq[Long] = {
-    val root = new Path(dir)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(ManifestPrefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(ManifestPrefix).toLong).toOption)
-  }
+  private def manifestSeqs(fs: FileSystem, dir: String): Seq[Long] =
+    NumberedFiles.list(fs, new Path(dir), ManifestPrefix)
 
   def readManifest(fs: FileSystem, dir: String): Manifest = {
     val seqs = manifestSeqs(fs, dir)
@@ -90,11 +84,11 @@ object RawStore {
     // RAW fs open: manifests are written sidecar-free (see commit), and
     // a checksummed open would race a .crc pair rename — the
     // ChecksumException flavor of the very race this module closes
-    // (observed on Rollup's _CURRENT in the soak)
+    // (observed on Rollup's snapshot pointer in the soak)
     val in = Rollup.rawFs(fs).open(p)
     val bos = new java.io.ByteArrayOutputStream()
-    try { // read to EOF from one handle (same TOCTOU discipline as
-      // Rollup.servedTable: never pre-size from a separate stat)
+    try { // read to EOF from one handle: never pre-size from a
+      // separate stat
       val buf = new Array[Byte](4096)
       var n = in.read(buf)
       while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
@@ -129,31 +123,14 @@ object RawStore {
     * commits old.
     */
   def commitManifest(fs: FileSystem, dir: String, next: Manifest): Unit = {
-    val root = new Path(dir)
-    val raw = Rollup.rawFs(fs)
     val sb = new StringBuilder("v1\n").append(s"seq ${next.seq}\n")
     next.active.toSeq.sorted.foreach { case (d, r) => sb.append(s"active $d $r\n") }
     next.retired.toSeq.sorted.foreach { case (r, at) => sb.append(s"retired $r $at\n") }
-    val tmp = new Path(root, s".${ManifestPrefix}tmp")
-    // sidecar-free write (see readManifest): no .crc, no pair race
-    val out = raw.create(tmp, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    try {
-      // rename WITHOUT Rename.OVERWRITE: fails iff the target exists —
-      // i.e. iff a concurrent writer won the race to this seq
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(root.toUri, fs.getConf)
-        .rename(tmp, new Path(root, s"$ManifestPrefix${next.seq}"))
-    } catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"manifest seq ${next.seq} already committed under $dir — a " +
-            "concurrent maintenance writer violated the single-writer " +
-            s"contract (this writer's update is NOT applied): $e")
-    }
-    manifestSeqs(fs, dir)
-      .filter(_ <= next.seq - ManifestKeep)
-      .foreach(s => raw.delete(new Path(root, s"$ManifestPrefix$s"), false))
+    NumberedFiles.commit(fs, new Path(dir), ManifestPrefix, next.seq,
+      sb.toString.getBytes("UTF-8"), ManifestKeep)(
+      s"manifest seq ${next.seq} already committed under $dir — a " +
+        "concurrent maintenance writer violated the single-writer " +
+        "contract (this writer's update is NOT applied)")
   }
 
   /** Active (day, path) pairs: live `p_date=` dirs that are neither
@@ -215,11 +192,14 @@ object RawStore {
 
   /** Record the latest committed ingest batch id at the table root —
     * the append half of [[versionStamp]]. One tiny sidecar-free write +
-    * atomic rename per micro-batch (the _CURRENT idiom), called by
+    * OVERWRITE rename per micro-batch, called by
     * [[Collector.writeBatch]] AFTER the batch data lands: a version
     * reader either sees the pre-batch stamp (and re-resolves on the
     * next request once the bump lands) or the post-batch stamp with the
-    * data already complete.
+    * data already complete. Known gap: on the local filesystem the
+    * OVERWRITE rename is a delete plus a rename, so a [[lastBatch]]
+    * landing between them fails its open (ROADMAP; [[NumberedFiles]] is
+    * the fix Rollup's pointer took).
     */
   def bumpLastBatch(fs: FileSystem, dir: String, batchId: Long): Unit = {
     val root = new Path(dir)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.model.ParquetSchema
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -97,10 +98,13 @@ object Rollup {
         found
       }
 
-      val todo: Seq[Any] =
-        if (!hasData) touched
-        else {
-          val lastByPart = spark.read.parquet(rollupDir)
+      // one frame serves the replay check and the merge: nothing writes
+      // the table between them
+      val stored = if (hasData) Some(ParquetSchema.read(spark, rollupDir)) else None
+      val todo: Seq[Any] = stored match {
+        case None => touched
+        case Some(table) =>
+          val lastByPart = table
             .filter(col(partCol).isin(touched: _*))
             .groupBy(partCol).agg(max("last_batch").as("lb"))
             .collect().map(r => r.get(0) -> r.getLong(1)).toMap
@@ -114,17 +118,14 @@ object Rollup {
           // == batchId: that partition's data is already in (crash landed
           // between its commit and the checkpoint's) — skip just it
           touched.filterNot(d => lastByPart.get(d).contains(batchId))
-        }
+      }
       if (todo.isEmpty) return false
 
       val partialTodo = partial.filter(col(partCol).isin(todo: _*))
-      val merged0 =
-        if (hasData)
-          spark.read.parquet(rollupDir)
-            .filter(col(partCol).isin(todo: _*))
-            .select("series", partCol, "cnt", "total", "vmin", "vmax")
-            .unionByName(partialTodo)
-        else partialTodo
+      val merged0 = stored.fold(partialTodo)(_
+        .filter(col(partCol).isin(todo: _*))
+        .select("series", partCol, "cnt", "total", "vmin", "vmax")
+        .unionByName(partialTodo))
       merged0
         .groupBy(col("series"), col(partCol))
         .agg(sum(col("cnt")).as("cnt"), sum(col("total")).as("total"),
@@ -207,11 +208,12 @@ object Rollup {
     val toMerge = old.filter { case (_, h) =>
       !watermarks.get(dayOf(h).toString).exists(w => !h.after(w))
     }
+    val hourTable = ParquetSchema.read(spark, hourDir)
     var daysTouched = 0
     toMerge.groupBy { case (_, h) => dayOf(h) }.toSeq
       .sortBy(_._1.toString)
       .foreach { case (day, hrs) =>
-        val hourRows = spark.read.parquet(hourDir)
+        val hourRows = hourTable
           .filter(col("p_hour").isin(hrs.map(_._2): _*))
           .select(col("series"), col("cnt"), col("total"),
             col("vmin"), col("vmax"))
@@ -249,9 +251,9 @@ object Rollup {
   }
 
   /** Publish the maintained table's CURRENT state as an immutable
-    * snapshot under `servedDir/snap=<n>/` and atomically flip the
-    * `_CURRENT` pointer file — snapshot isolation for readers that race
-    * the maintenance writer.
+    * snapshot under `servedDir/snap=<n>/` and commit the pointer
+    * `_CURRENT.<n>` — snapshot isolation for readers that race the
+    * maintenance writer.
     *
     * WHY (measured, LifecycleSoak r11): the merge keeps the live table
     * correct with in-place dynamic partition OVERWRITE, which deletes
@@ -273,8 +275,13 @@ object Rollup {
     * snapshot retention; at production scale this tier IS the table
     * format's manifest commit).
     *
-    * Pointer flip is write-temp + rename (atomic on one filesystem);
-    * readers resolve [[servedTable]] → pointer → immutable snapshot dir.
+    * Pointers are [[NumberedFiles]], like [[RawStore]]'s manifests:
+    * each publish adds an empty `_CURRENT.<n>` and the reader takes the
+    * highest number its listing shows ([[currentSnapshot]]). The pointer
+    * before the new one survives this publish, so a listing that
+    * overlaps it still holds an untouched pointer. A concurrent
+    * publisher that took the same id fails loudly
+    * (ConcurrentModificationException).
     * Returns the published snapshot id.
     */
   def publish(spark: SparkSession, tableDir: String, servedDir: String,
@@ -287,62 +294,42 @@ object Rollup {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("snap="))
       .map(_.getPath.getName.stripPrefix("snap=").toLong)
     val id = if (existing.isEmpty) 0L else existing.max + 1L
-    spark.read.parquet(tableDir)
+    ParquetSchema.read(spark, tableDir)
       .write.mode("overwrite").parquet(s"$servedDir/snap=$id")
-    val tmp = new Path(root, s"._CURRENT.tmp")
-    // write through the RAW (checksum-free) filesystem: the checksummed
-    // local FS pairs every file with a .crc sidecar, and rename moves
-    // the pair in two steps — a reader can open the new pointer against
-    // the old sidecar and die ChecksumException (observed in the
-    // composed soak as rollup-path retries). No sidecar, no pair race.
-    val out = rawFs(fs).create(tmp, true)
-    try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    // FileContext rename(OVERWRITE): atomic replace on one filesystem —
-    // FileSystem.rename refuses existing targets on the local FS, and a
-    // delete-then-rename pair would reopen the very window this closes
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(root.toUri, spark.sessionState.newHadoopConf())
-      .rename(tmp, new Path(root, "_CURRENT"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    NumberedFiles.commit(fs, root, PointerPrefix, id, Array.emptyByteArray, keep = 2)(
+      s"snapshot $id already published under $servedDir — a concurrent " +
+        "publisher violated the single-writer contract")
     // prune beyond the grace window, oldest first, never the current
     existing.sorted.dropRight(math.max(keep - 1, 0))
       .foreach(old => fs.delete(new Path(root, s"snap=$old"), true))
     id
   }
 
-  /** The reader half of [[publish]]: resolve `_CURRENT` and read that
-    * immutable snapshot. Plans built from this DataFrame never observe
-    * an in-place overwrite — they can only go stale, which for a rollup
-    * dashboard read is the correct trade.
+  private val PointerPrefix = "_CURRENT."
+
+  /** The reader half of [[publish]]: resolve the current pointer and
+    * read that immutable snapshot. Plans built from this DataFrame never
+    * observe an in-place overwrite — they can only go stale, which for a
+    * rollup dashboard read is the correct trade.
     */
   def servedTable(spark: SparkSession, servedDir: String): DataFrame =
-    spark.read.parquet(
+    ParquetSchema.read(spark,
       s"$servedDir/snap=${currentSnapshot(spark, servedDir)}")
 
-  /** Resolve the `_CURRENT` pointer to the published snapshot id — the
-    * cheap (one small file read) per-request freshness check a serving
-    * cache keys on ([[graft.serve.SnapshotCache]]); [[servedTable]] is
-    * this plus the snapshot read.
+  /** The published snapshot id: the highest `_CURRENT.<n>` under
+    * `servedDir` — the cheap (one listing, no file opened) per-request
+    * freshness check a serving cache keys on
+    * ([[graft.serve.SnapshotCache]]); [[servedTable]] is this plus the
+    * snapshot read. A reader racing [[publish]] gets the old or the new
+    * id, never an error (RollupSpec).
     */
   def currentSnapshot(spark: SparkSession, servedDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(servedDir, "_CURRENT")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"no _CURRENT under $servedDir — nothing published yet")
-    // read to EOF from ONE open handle — pre-sizing a buffer from a
-    // separate getFileStatus is a TOCTOU against publish's atomic
-    // replace (stat the 1-byte "9", open the 2-byte "10" ⇒ truncated id
-    // pointing at a pruned snapshot). RAW fs: the pointer is written
-    // sidecar-free, and a checksummed open would race any legacy .crc
-    val in = rawFs(fs).open(p)
-    val bos = new java.io.ByteArrayOutputStream()
-    try {
-      val buf = new Array[Byte](64)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    new String(bos.toByteArray, "UTF-8").trim.toLong
+    val root = new org.apache.hadoop.fs.Path(servedDir)
+    val ids = NumberedFiles.list(
+      rawFs(root.getFileSystem(spark.sessionState.newHadoopConf())), root, PointerPrefix)
+    if (ids.isEmpty) throw new IllegalStateException(
+      s"no ${PointerPrefix}<n> under $servedDir — nothing published yet")
+    ids.max
   }
 
   /** [[start]] + snapshot publication per committed batch: the stream

@@ -80,7 +80,7 @@ object ServeLatencyProbe {
       // the rollup once, then measure the three rollup read shapes a
       // thin serving layer can choose between —
       //   rollup_*t         : read the live table dir per request
-      //   served_*t         : resolve _CURRENT + read the snapshot per
+      //   served_*t         : resolve the pointer + read the snapshot per
       //                       request (the soak's isolation path)
       //   cached_*t         : SnapshotCache — pointer read per request,
       //                       pinned persisted frame, memoized JSON

@@ -129,7 +129,7 @@ object LifecycleSoak {
       spark.readStream.schema(Collector.rawSchema)
         .option("maxFilesPerTrigger", 100).json(dropDir))
     // served tier: merge + snapshot-publish per batch — readers resolve
-    // _CURRENT and never race the live table's in-place overwrites (the
+    // the snapshot pointer and never race the live table's in-place overwrites (the
     // r11 fix this soak's first run motivated: rollup reads of the live
     // dir failed FILE_NOT_EXIST through retries under the 1 s trigger)
     // SPARK_GRAFT_LC_PUBLISH_S > 0: slow-churn publish cadence (the
@@ -228,7 +228,8 @@ object LifecycleSoak {
           TimeRange(fmtTs(math.max(SimStartMs, nowSim - 2 * 24 * HourMs)), fmtTs(nowSim)), 200)
         // skip the rollup path until the first snapshot publishes so
         // startup noise doesn't read as failures
-        val rollupReady = new java.io.File(s"$servedDir/_CURRENT").exists()
+        val rollupReady =
+          scala.util.Try(Rollup.currentSnapshot(spark, servedDir)).isSuccess
         def once(): Unit =
           if (flip) { Grafana.query(store, req); () }
           else {

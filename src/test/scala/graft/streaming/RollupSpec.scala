@@ -295,14 +295,44 @@ class RollupSpec extends SparkSpec {
     }
   }
 
+  test("a reader racing publish resolves the old or the new snapshot, " +
+      "never an error") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("rollup_ptr_race").toString
+    val (live, served) = (s"$base/table", s"$base/served")
+    assert(Rollup.mergeBatch(spark,
+      Seq(("cpu", ts("2024-01-01 10:00:00"), 1.0)).toDF("series", "ts", "value"),
+      0L, live))
+    val first = Rollup.publish(spark, live, served)
+    val publishes = 25
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        try seen.add(Rollup.currentSnapshot(spark, served))
+        catch { case t: Throwable => failures.add(t) }
+      })
+    reader.start()
+    val last = try (1 to publishes).map(_ => Rollup.publish(spark, live, served)).last
+    finally { done.set(true); reader.join() }
+    val failed = failures.size
+    assert(failed == 0, s"$failed reads failed, first: ${failures.peek()}")
+    import scala.jdk.CollectionConverters._
+    val ids = seen.asScala.toSeq
+    assert(ids.nonEmpty && ids.forall(i => i >= first && i <= last))
+    // pointers never go backwards for one reader
+    assert(ids.zip(ids.drop(1)).forall { case (a, b) => a <= b })
+    assert(Rollup.currentSnapshot(spark, served) == last)
+  }
+
   test("startServed heals a lost publish on restart: a replayed batch " +
       "still snapshots the merged state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("rollup_heal").toString
     val (live, served, ckpt) = (s"$base/table", s"$base/served", s"$base/ckpt")
-    def currentSnap(): String =
-      Files.readString(java.nio.file.Paths.get(s"$served/_CURRENT")).trim
+    def currentSnap(): Long = Rollup.currentSnapshot(spark, served)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Timestamp, Double)]
     val points = input.toDS().toDF("series", "ts", "value")
@@ -349,8 +379,7 @@ class RollupSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("rollup_gate").toString
     val (live, served, ckpt) = (s"$base/table", s"$base/served", s"$base/ckpt")
-    def currentSnap(): String =
-      Files.readString(java.nio.file.Paths.get(s"$served/_CURRENT")).trim
+    def currentSnap(): Long = Rollup.currentSnapshot(spark, served)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Timestamp, Double)]
     val points = input.toDS().toDF("series", "ts", "value")
