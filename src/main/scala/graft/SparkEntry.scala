@@ -58,12 +58,10 @@ object SparkEntry {
     * constructions no longer accumulate corpus-scale persists); the
     * returned frame re-derives chunk+pack from the survivor
     * checkpoint blocks.
-    * r15: the LM-estimate jobs memoize per (dir, site) —
-    * re-constructing the same query on the same immutable dir runs
-    * zero estimate jobs. r18: the q122/q125 rich-vocab merge table
-    * memoizes the same way per (dir, dials) — after q122 learns
-    * in-session, q125's construction runs zero learning jobs. All
-    * other queries are construction-lazy.
+    * No construction state outlives the call: every construction
+    * pays its own estimate and learning jobs, so re-constructing a
+    * query repeats them, and q125 re-learns q122's merge table even
+    * right after q122. All other queries are construction-lazy.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Reference.queries ++ Relational.queries ++ Windows.queries ++

@@ -295,19 +295,8 @@ object Dedup {
     // billion-edge rounds still fan out through the volume term.
     val targetRowsPerPartition = 4000000L
     val p = math.ceil(edgeRows * 2.0 / targetRowsPerPartition).toInt
-    math.min(2048, math.max(ccFloorParts, p))
+    math.min(2048, math.max(16, p))
   }
-
-  /** The [[roundPartitions]] floor, env-overridable for the r19/r20
-    * optimization rounds' floor scan (SPARK_GRAFT_CC_MINPARTS); the
-    * default stays the measured r9/r16 value, confirmed by the r20
-    * 10×/100× scan (OPTIMIZATION_r20.md). r19 ADVICE: parsed
-    * defensively (malformed/non-positive → default) and read ONCE, not
-    * per round.
-    */
-  private val ccFloorParts: Int =
-    sys.env.get("SPARK_GRAFT_CC_MINPARTS").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(16)
 
   /** Fire the output-side structural probe only when the round's input
     * violation count is already this small: below it, the round likely
@@ -363,7 +352,6 @@ object Dedup {
     var edgeRows = l.count()
     var converged = false
     var rounds = 0
-    val tLoop0 = System.nanoTime()
     // r20 (guide §1/§2, same discipline as the BPE learner loops): the
     // contraction rounds size their own exchanges (the explicit
     // repartition(p, a) below, p derived from the round's edge count),
@@ -421,9 +409,6 @@ object Dedup {
         .localCheckpoint(false)
       edgeRows = next.count()
       converged = viol.value == 0L
-      if (sys.env.contains("SPARK_GRAFT_CC_TRACE"))
-        System.err.println(f"[cc] round=$rounds edges=$edgeRows " +
-          f"viol=${viol.value} p=$p t=${(System.nanoTime() - tLoop0) / 1e9}%.2f")
       // threshold-gated OUTPUT probe: the accumulator sees the round's
       // INPUT, so plain viol==0 discovers the fixpoint one identity
       // round late. When the input was ALMOST a forest, ask the output

@@ -59,42 +59,17 @@ object Similarity {
     * requiring all bits equal. Pass `bits` explicitly to pin a layout
     * (e.g. to match a stored index).
     */
-  /** Corpus metadata memo for the adaptive bits choice: the row count is
-    * parquet metadata (cheap) and the dimensionality one row, but each is
-    * still a job (~0.3 s of fixed overhead per call), and q91/q94/q99 all
-    * pass through here. Keyed by (session, directory): the session key is
-    * WEAK (a dropped session GCs its entries), and a fresh session re-reads
-    * the corpus metadata — so a session pointed at a path whose data was
-    * rewritten underneath an older session still sees current metadata.
-    * Within one session the corpora are treated as immutable (true of the
-    * fixtures; a deployment over a growing table would key by
-    * snapshot/version — staleness only nudges a log2, but the memo must
-    * not pin a layout forever).
-    */
-  private val embMetaMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]]())
-
-  /** (row count, embedding dimensionality) of `dir`'s embeddings table,
-    * memoized per (session, dir). Dim comes from the data (one row), not
-    * a literal — a fixture with a different embedding width changes the
-    * adaptive-bits cap instead of silently mismatching `slice`.
+  /** (row count, embedding dimensionality) of `dir`'s embeddings table.
+    * Two small jobs per call (q91/q94/q99 each pay them). Dim comes from
+    * the data (one row), not a literal — a fixture with a different
+    * embedding width changes the adaptive-bits cap instead of silently
+    * mismatching `slice`.
     */
   private[ops] def embMeta(s: SparkSession, dir: String): (Long, Int) = {
-    val perSession = embMetaMemo.synchronized {
-      var m = embMetaMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
-        embMetaMemo.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(dir, _ => {
-      val emb = Tables(s, dir, "embeddings")
-      val dim = emb.select(size(col("embedding")).as("d")).limit(1)
-        .collect().headOption.map(_.getInt(0)).getOrElse(8)
-      (emb.count().max(1L), dim.max(1))
-    })
+    val emb = Tables(s, dir, "embeddings")
+    val dim = emb.select(size(col("embedding")).as("d")).limit(1)
+      .collect().headOption.map(_.getInt(0)).getOrElse(8)
+    (emb.count().max(1L), dim.max(1))
   }
 
   /** The adaptive width, all-integer (r12): b = clamp(ceil_log2(⌈n/64⌉),

@@ -176,16 +176,7 @@ object TrainingPipeline {
       // bpeBatched. Costs one type count over the learner's own
       // checkpointed vocab frame — not a corpus pass.
       bpeHotPart: Option[Int] = None,
-      bpeEowMarker: Boolean = false,
-      // r20: when Some(dir), the decontamination dispatcher's eval-gram
-      // byte estimate memoizes per (dir fingerprint, site) — the same
-      // r15 estMemo discipline as the LM queries (correctness-free: the
-      // estimate only picks the shipping regime; SPARK_GRAFT_NO_MEMO
-      // bypasses). Set by the DECLARED pipeline queries, whose eval set
-      // is a deterministic slice of the immutable testdata dir; library
-      // callers with caller-built eval frames leave None and pay the
-      // one eval-sized estimate job per construction.
-      lmMemoDir: Option[String] = None)
+      bpeEowMarker: Boolean = false)
 
   /** Stage outputs: the surviving corpus and the packed bins, plus
     * per-stage survivor counts for the audit trail. `cleanup` unpersists
@@ -224,9 +215,7 @@ object TrainingPipeline {
     * never a sort-merge of the corpus gram stream.
     */
   private[graft] def contamIds(train: DataFrame, evalGrams: DataFrame,
-                               maxContamRatio: Double,
-                               memoKey: Option[(String, String)] = None)
-      : DataFrame = {
+                               maxContamRatio: Double): DataFrame = {
     val trainGrams = train
       .select(col("doc_id"),
         explode(array_distinct(expr("char_ngrams(text, 8)"))).as("g"))
@@ -242,9 +231,13 @@ object TrainingPipeline {
     // count(_eg) the old hit (0 when no gram matched, exactly the old
     // coalesce). One corpus gram pass instead of two, one aggregation
     // instead of two + a join; same contaminated-id set.
+    // the estimate prices the persisted PRE-distinct evalGrams, not egd:
+    // a deliberate upper bound on the build side (an overestimate can
+    // only demote a broadcastable eval set to SHUFFLE_HASH, never the
+    // reverse), and the pass doubles as evalGrams' materialization
     val egd = evalGrams.distinct().withColumn("_eg", lit(1))
     TextAnalysis.joinLm(trainGrams, egd, Seq("g"), "left",
-        TextAnalysis.estimateLmBytesMemo(memoKey, evalGrams))
+        TextAnalysis.estimateLmBytes(evalGrams))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("total"), count(col("_eg")).as("hit"))
       .filter(col("hit").cast("double") / col("total") > maxContamRatio)
@@ -409,17 +402,13 @@ object TrainingPipeline {
     // see contamIds.
     // evalGrams is persisted because the size estimate and the join
     // both consume it (the estimate pass doubles as materialization —
-    // one eager eval-sized job at prepare() time, the q75 bloom-build
-    // precedent; memo key only when cfg.lmMemoDir pins an immutable
-    // dir — the declared queries do; caller-built eval frames carry no
-    // immutability contract and estimate every construction). Dispatch
-    // can never change RESULTS, only plans — PlanLintSpec executes both
-    // regimes hash-equal.
+    // one eager eval-sized job at every prepare() call, the q75
+    // bloom-build precedent). Dispatch can never change RESULTS, only
+    // plans — PlanLintSpec executes both regimes hash-equal.
     val evalGrams = evalDocs
       .select(explode(array_distinct(expr("char_ngrams(text, 8)"))).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val contam = contamIds(nearDeduped, evalGrams, cfg.maxContamRatio,
-      cfg.lmMemoDir.map(d => (d, "pipeline.evalGrams")))
+    val contam = contamIds(nearDeduped, evalGrams, cfg.maxContamRatio)
     val clean = nearDeduped.join(contam, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (cfg.audit) {
@@ -542,10 +531,7 @@ object TrainingPipeline {
         case (None, None) =>
           TextAnalysis.learnBpeMerges(corpus, cfg.bpeMerges, cfg.bpeEowMarker)
       }
-      // no memo key: the survivor frame is pipeline-built, not an
-      // immutable testdata dir
-      Some(TextAnalysis.bpeEncodeTokens(corpus, merges,
-        eowMarker = cfg.bpeEowMarker))
+      Some(TextAnalysis.bpeEncodeTokens(corpus, merges, cfg.bpeEowMarker))
     }
 
     // unpersist is idempotent, so listing the already-released audit-mode
@@ -688,9 +674,7 @@ object TrainingPipeline {
       all.select(inCols: _*),
       all.filter(col("doc_id") % DeclaredEvalMod === 0)
         .select(col("doc_id"), col("text")),
-      // the declared eval set is a deterministic slice of the immutable
-      // testdata dir — exactly the estMemo contract (plan-only effect)
-      cfg.copy(lmMemoDir = Some(dir)))
+      cfg)
   }
 
   private def runPipeline(s: org.apache.spark.sql.SparkSession, dir: String,

@@ -2,10 +2,9 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.model.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** Guards for the adaptive-bits corpus-metadata memo (Similarity.embMeta)
+/** Guards for the adaptive-bits corpus metadata (Similarity.embMeta)
   * and the generation-aware events time predicates (Tables.tsRange /
   * tsAtLeast). Both exist so the 100 TB dials — sign-bucket width, parquet
   * row-group pruning — derive from the DATA rather than literals.
@@ -18,23 +17,6 @@ class AdaptiveBitsSpec extends SparkSpec {
       .select(size(col("embedding"))).head.getInt(0)
     assert(dim === expectedDim)
     assert(n === Tables(spark, sf(), "embeddings").count())
-  }
-
-  test("embMeta is memoized per (session, dir): second call runs no jobs") {
-    Similarity.embMeta(spark, sf()) // prime
-    @volatile var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.embMeta(spark, sf())
-      // listener events are async (and the bus is private); a memoized
-      // call returns without touching the scheduler, so after a generous
-      // drain window the count must still be zero
-      Thread.sleep(2000)
-      assert(jobs === 0, "memoized embMeta launched Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("tsRange/tsAtLeast select the same rows as the derived-column forms") {
