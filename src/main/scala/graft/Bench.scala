@@ -32,16 +32,7 @@ object Bench {
     // settled it: more partitions is slower at every decade on one JVM);
     // on a real cluster AQE owns this dial via runtime coalescing
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native graft expressions injected at session build; queries also
-      // call ensureRegistered (idempotent) for sessions built elsewhere
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = localSession(cpus, parts)
     def run(name: String,
             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: dump `.explain("formatted")` for declared queries to
   * plans/<round>/<query>_<suffix>.txt — the optimization rounds' plan
@@ -21,14 +20,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r19")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = localSession(cpus, cpus)
     Files.createDirectories(Paths.get(outDir))
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

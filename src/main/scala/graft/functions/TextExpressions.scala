@@ -608,135 +608,6 @@ object CdcChunks {
   }
 }
 
-/** Gear-rolling variant of [[CdcChunks]]: `cdc_chunks_gear(text
-  * [, maskBits])` → the SAME `array<struct<s, e, h>>` contract
-  * (1-based code-point ranges, h = md5 hex of the chunk text), but the
-  * per-position BOUNDARY test is the Gear rolling hash (Xia et al.
-  * FastCDC / the rsync family): `h = (h << 1) + GEAR[byte]` per byte,
-  * boundary at a code-point end iff the top `maskBits` bits of h are
-  * zero — expected rate 1/2^maskBits per position. Default 4 (rate
-  * 1/16, the same mean chunk ~16 chars as the md5 rule); the dial
-  * trades mean chunk length against short-span recall (r13 ADVICE:
-  * more bits → longer chunks → fewer boundaries inside short shared
-  * spans; fewer bits → shorter chunks → better short-span recall at
-  * more chunk rows — A/B'd at 3/4/5 bits in ChunkerAbProbe).
-  *
-  * WHY: CdcChunks computes a FULL md5 digest per code-point position —
-  * O(w)-byte digests on the hot loop (the r12 verdict's flagged
-  * optimization). Gear is O(1) per byte: one shift, one add, one table
-  * load, one mask test. Chunk-ID hashing stays md5 — per CHUNK, not
-  * per position, so it's amortized over ~16 chars and keeps the output
-  * contract identical.
-  *
-  * SEMANTICS DELTA (documented, spec-pinned in ScrubSpansSpec): the
-  * boundary SET differs from the md5 rule's — same cut-law (content-
-  * defined, position-free), different chunker. Gear's shift register
-  * makes the boundary at position i depend on the trailing ~64 BYTES
-  * (bit 63, the oldest surviving contribution, carries GEAR[b]'s bit 0
-  * from 63 bytes back) instead of exactly w code points — so phase
-  * invariance holds for shared spans with a ≥64-byte interior margin
-  * rather than w−1. Both chunkers miss spans containing no boundary
-  * position; which spans differ. The scrub pipeline accepts any
-  * content-defined chunker; q107 keeps the md5 rule because its DuckDB
-  * oracle replays the boundary rule in SQL (md5 exists there; a Gear
-  * table does not).
-  */
-case class GearChunks(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable =>
-        // the argument is foldable by this very check, so its range is
-        // knowable at ANALYSIS time — report an out-of-range literal
-        // here as a type-check failure instead of a per-task
-        // IllegalArgumentException at execution (r13 ADVICE)
-        right.eval() match {
-          case null => TypeCheckResult.TypeCheckFailure(
-            s"$prettyName maskBits must not be null")
-          case b: Integer if b < 1 || b > 63 => TypeCheckResult.TypeCheckFailure(
-            s"$prettyName maskBits must be in [1, 63], got $b")
-          case _ => TypeCheckResult.TypeCheckSuccess
-        }
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal int), got ($l, $r)")
-    }
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("s", LongType, nullable = false),
-      StructField("e", LongType, nullable = false),
-      StructField("h", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "cdc_chunks_gear"
-
-  override def nullSafeEval(t: Any, bits: Any): Any =
-    GearChunks.chunks(t.asInstanceOf[UTF8String], bits.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, b) =>
-      s"${ev.value} = graft.functions.GearChunks.chunks($t, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GearChunks =
-    copy(left = newLeft, right = newRight)
-}
-
-object GearChunks {
-  /** Deterministic 256-entry gear table via SplitMix64 (public-domain
-    * mixer, Steele et al.) from a fixed seed — stable forever, no
-    * java.util.Random.
-    */
-  private val Gear: Array[Long] = {
-    var x = 0x9E3779B97F4A7C15L
-    Array.fill(256) {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-  }
-  /** Default mask width: boundary rate 1/16 ⇒ mean chunk ~16 chars,
-    * matching CdcChunks' md5 top-nibble rule. */
-  val DefaultMaskBits = 4
-
-  def chunks(s: UTF8String): ArrayData = chunks(s, DefaultMaskBits)
-
-  def chunks(s: UTF8String, maskBits: Int): ArrayData = {
-    if (maskBits <= 0 || maskBits >= 64)
-      throw new IllegalArgumentException(
-        s"cdc_chunks_gear maskBits must be in [1, 63], got $maskBits")
-    val mask = -1L << (64 - maskBits) // top maskBits bits
-    val bytes = s.getBytes
-    val offs = Utf8CodePoints.offsets(bytes)
-    val cp = offs.length - 1
-    if (cp <= 0) return new GenericArrayData(Array.empty[Any])
-    val ends = new java.util.ArrayList[Int]()
-    var h = 0L
-    var i = 1
-    while (i <= cp) {
-      // roll all bytes of code point i (boundaries only at cp edges, so
-      // multi-byte sequences never split)
-      var b = offs(i - 1)
-      while (b < offs(i)) { h = (h << 1) + Gear(bytes(b) & 0xff); b += 1 }
-      if ((h & mask) == 0L && i < cp) ends.add(i)
-      i += 1
-    }
-    ends.add(cp)
-    val md = Md5Pool.get()
-    val out = new Array[Any](ends.size)
-    var prev = 0
-    var j = 0
-    while (j < ends.size) {
-      val e = ends.get(j)
-      md.update(bytes, offs(prev), offs(e) - offs(prev))
-      out(j) = org.apache.spark.sql.catalyst.InternalRow(
-        prev + 1L, e.toLong, UTF8String.fromString(HexBytes.lower(md.digest())))
-      prev = e
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 object TextShingles {
   /** One compiled pass: space positions → shingle byte ranges. Safe on
     * UTF-8 bytes (0x20 never occurs inside a multi-byte sequence).

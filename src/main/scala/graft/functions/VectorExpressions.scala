@@ -102,7 +102,6 @@ object VectorExpressions {
   val earliestKFnName = "earliest_k_agg"
   val cmsEstimateFnName = "cms_estimate"
   val cdcChunksFnName = "cdc_chunks"
-  val gearChunksFnName = "cdc_chunks_gear"
 
   private[functions] def bloomAggBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 3, s"$bloomAggFnName expects 3 arguments")
@@ -189,17 +188,6 @@ object VectorExpressions {
         { children =>
           require(children.length == 2, s"$cdcChunksFnName expects 2 arguments")
           CdcChunks(children.head, children(1))
-        })
-    if (!reg.functionExists(FunctionIdentifier(gearChunksFnName)))
-      reg.registerFunction(FunctionIdentifier(gearChunksFnName),
-        new ExpressionInfo(classOf[GearChunks].getName, gearChunksFnName),
-        { children =>
-          require(children.length == 1 || children.length == 2,
-            s"$gearChunksFnName expects (text[, maskBits])")
-          GearChunks(children.head,
-            if (children.length == 2) children(1)
-            else org.apache.spark.sql.catalyst.expressions.Literal(
-              GearChunks.DefaultMaskBits))
         })
     if (!reg.functionExists(FunctionIdentifier(minhashFnName)))
       reg.registerFunction(FunctionIdentifier(minhashFnName),

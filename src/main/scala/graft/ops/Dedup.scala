@@ -473,37 +473,40 @@ object Dedup {
     * are themselves sub-minSpan foreign runs in two docs that cut the
     * SAME middle span, the re-joined runs can reach minSpan on a second
     * pass. One pass removes every span the contract declares (>= minSpan
-    * of contiguous shared chunks in the ORIGINAL text); iterate to
-    * fixpoint if the stricter closure is wanted.
+    * of contiguous shared chunks in the ORIGINAL text); spans that only
+    * form once a cut re-joins their neighbors are left for the next run.
     */
-  /** The DETECTION half of [[scrubDupSpans]], exposed (r13): the
-    * maximal cross-doc repeated spans the scrub would cut — one row
-    * per (doc_id, cs, ce) with 1-based inclusive code-point bounds.
-    * SpanPrecisionProbe audits boundary rules against each other on
-    * this output; the scrub composes it with the rewrite walk.
+  private[graft] def scrubDupSpans(docs: DataFrame, w: Int = 8,
+                                   minSpan: Int = 50): DataFrame = {
+    val cuts = dupSpanRanges(docs, w, minSpan).groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("cs"), col("ce")))).as("cuts"),
+        count(lit(1)).as("n_spans_cut"))
+    // rewrite: walk the sorted non-overlapping cut list once, appending
+    // the kept segment before each cut and the tail after the last
+    // (aggregate HOF — interpreted, but it runs once per CUT doc over a
+    // handful of spans, not on the per-position hot path)
+    docs.join(cuts, Seq("doc_id"), "left")
+      .withColumn("scrubbed", expr(
+        """IF(cuts IS NULL, text,
+          |  aggregate(cuts, named_struct('p', 1L, 'acc', ''),
+          |    (a, c) -> named_struct('p', c.ce + 1L,
+          |      'acc', concat(a.acc,
+          |        substring(text, CAST(a.p AS INT), CAST(c.cs - a.p AS INT)))),
+          |    a -> concat(a.acc, substring(text, CAST(a.p AS INT)))))"""
+          .stripMargin))
+      .withColumn("n_spans_cut", coalesce(col("n_spans_cut"), lit(0L)))
+      .drop("cuts")
+  }
+
+  /** The DETECTION half of [[scrubDupSpans]]: the maximal cross-doc
+    * repeated spans the scrub cuts — one row per (doc_id, cs, ce) with
+    * 1-based inclusive code-point bounds.
     */
-  private[graft] def dupSpanRanges(docs: DataFrame, w: Int = 8,
-                                   minSpan: Int = 50,
-                                   boundary: String = "md5"): DataFrame = {
+  private def dupSpanRanges(docs: DataFrame, w: Int,
+                            minSpan: Int): DataFrame = {
     graft.functions.VectorExpressions.ensureRegistered(docs.sparkSession)
-    // pluggable boundary rule (r13, VERDICT #7): "md5" is the declared
-    // q107 chunker (oracle replays its boundary rule in DuckDB SQL);
-    // "gear" swaps the O(w)-per-position digest for the O(1) Gear
-    // rolling hash (same cut-law, different boundary SET — see
-    // GearChunks' scaladoc for the semantics delta and ChunkerAbProbe
-    // for the measured cost); "gear:<bits>" sets the mask width (the
-    // mean-chunk-length vs short-span-recall dial). Everything
-    // downstream of the chunk arrays is chunker-agnostic.
-    val GearBits = "gear:(\\d+)".r
-    val chunker = boundary match {
-      case "md5" => s"cdc_chunks(text, $w)"
-      case "gear" => "cdc_chunks_gear(text)"
-      case GearBits(bits) => s"cdc_chunks_gear(text, $bits)"
-      case other => throw new IllegalArgumentException(
-        s"unknown boundary rule '$other' (expected md5 | gear | gear:<bits>)")
-    }
     val base = docs.select(col("doc_id"), col("text"),
-      expr(chunker).as("cs"))
+      expr(s"cdc_chunks(text, $w)").as("cs"))
     val chunks = base
       .select(col("doc_id"), explode(col("cs")).as("c"))
       .select(col("doc_id"), col("c.s").as("s"), col("c.e").as("e"),
@@ -532,237 +535,6 @@ object Dedup {
       .agg(min(col("s")).as("cs"), max(col("e")).as("ce"))
       .filter(col("ce") - col("cs") + 1 >= minSpan)
       .select("doc_id", "cs", "ce")
-  }
-
-  /** Strict-contiguity confirm (r13 ADVICE close — the policy dial the
-    * span-precision audit asked for): keep only the spans of
-    * [[dupSpanRanges]] whose FULL text occurs contiguously in another
-    * document (Lee et al.'s exact-substring semantics), dropping the
-    * MOSAIC spans (runs of chunks individually duplicated but merged
-    * across DIFFERENT source docs — measured 93-97% of each rule's
-    * exclusive tail on the organic corpus).
-    *
-    * Scalable shape — no substring search: a span is a run of WHOLE
-    * chunks of its doc, so its text occurs contiguously in doc e iff e
-    * contains the same chunk-hash sequence adjacently (content-defined
-    * chunking cuts the copy identically). Confirm via ADJACENT-PAIR
-    * chaining: single-chunk spans are contiguous by foreignness
-    * definition (the chunk text verbatim occurs elsewhere — its hash is
-    * content md5 in ≥ 2 docs); a k-chunk span is confirmed iff some
-    * single other doc contains ALL of its distinct adjacent chunk-hash
-    * pairs. Pair chaining over-approximates only when a chunk hash
-    * repeats inside the candidate doc (the chain can jump between
-    * occurrences) — documented, and the audit measures confirmed spans
-    * at verbatim rate ~1.0. Cost class: one doc-local pair projection
-    * + one pair-hash join + a span-sized aggregate — the same shape as
-    * the scrub's own chunk⋈dup join, nothing quadratic.
-    *
-    * EDGE TOLERANCE (r13 VERDICT #4 — the recall tail): a verbatim
-    * copy's EDGE chunks can legitimately miss in the candidate doc —
-    * the boundary decision just before the copied region depends on
-    * bytes OUTSIDE the shared text, so the candidate's chunk covering
-    * the copy's start (or end) can absorb surrounding text and hash
-    * differently, killing exactly the FIRST and LAST adjacent pairs
-    * while every interior pair (both chunks fully inside the shared
-    * text, boundary context included) survives. `edgeTolerant = true`
-    * therefore requires only the INTERIOR pairs for spans of >= 4
-    * chunks. The cutoff is a deliberate asymmetry (r14 ADVICE): a
-    * 4-chunk span IS accepted on its single interior pair — one
-    * edge-insensitive adjacent pair shared with one other doc is the
-    * weakest evidence this confirm admits, and SpanPrecisionProbe
-    * measured the edge-tolerant confirmed class verbatim at 0.983
-    * (sf0.1, the calibration ceiling — see SURVEY's r14 record (§8)) WITH those
-    * spans included, so the 1-pair signature holds precision in
-    * practice. 2-/3-chunk spans keep the full requirement because
-    * dropping their edge pairs leaves ZERO interior pairs — no
-    * signature at all, which would confirm unconditionally. Callers
-    * needing >= 2-pair evidence floors should raise minSpan/w rather
-    * than the cutoff. Mosaics still reject: their interior pairs are
-    * adjacencies specific to the probing doc, not co-resident in any
-    * single other doc. Measured (SpanPrecisionProbe, sf0.01/sf0.1):
-    * recovered spans verbatim at the confirmed class's own rate, the
-    * numbers in the probe output and SURVEY's r14 record (§8).
-    */
-  private[graft] def confirmContiguous(docs: DataFrame, spans: DataFrame,
-                                       w: Int = 8,
-                                       boundary: String = "md5",
-                                       edgeTolerant: Boolean = true): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(docs.sparkSession)
-    val GearBits = "gear:(\\d+)".r
-    val chunker = boundary match {
-      case "md5" => s"cdc_chunks(text, $w)"
-      case "gear" => "cdc_chunks_gear(text)"
-      case GearBits(bits) => s"cdc_chunks_gear(text, $bits)"
-      case other => throw new IllegalArgumentException(
-        s"unknown boundary rule '$other' (expected md5 | gear | gear:<bits>)")
-    }
-    val ch = docs.select(col("doc_id"),
-        posexplode(expr(chunker)).as(Seq("idx", "c")))
-      .select(col("doc_id"), col("idx"),
-        col("c.s").as("s"), col("c.e").as("e"), col("c.h").as("h"))
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("idx")
-    // adjacent chunk-hash pairs, doc-local (one per-doc window)
-    val pairs = ch
-      .withColumn("nh", lead(col("h"), 1).over(byDoc))
-      .filter(col("nh").isNotNull)
-      .select(col("doc_id"), col("idx"),
-        concat(col("h"), col("nh")).as("ph"))
-    // span → covered chunk index range (spans are unions of whole chunks)
-    val spanIdx = spans.join(ch, Seq("doc_id"))
-      .filter(col("s") >= col("cs") && col("e") <= col("ce"))
-      .groupBy("doc_id", "cs", "ce")
-      .agg(min(col("idx")).as("i1"), max(col("idx")).as("i2"))
-    val single = spanIdx.filter(col("i1") === col("i2"))
-      .select("doc_id", "cs", "ce")
-    // multi-chunk spans: distinct REQUIRED adjacent pairs per span,
-    // then require some OTHER doc to carry all of them. Pair positions
-    // run i1..i2-1; with edge tolerance, >= 4-chunk spans (i2-i1 >= 3)
-    // drop the two edge pairs (idx == i1 and idx == i2-1) — see the
-    // scaladoc's phase argument.
-    val required =
-      if (!edgeTolerant) lit(true)
-      else col("i2") - col("i1") < 3 ||
-        (col("idx") > col("i1") && col("idx") < col("i2") - 1)
-    val spanPairs = spanIdx.filter(col("i2") > col("i1"))
-      .join(pairs, Seq("doc_id"))
-      .filter(col("idx") >= col("i1") && col("idx") < col("i2"))
-      .filter(required)
-      .select(col("doc_id"), col("cs"), col("ce"), col("ph"))
-      .distinct()
-    val need = spanPairs.groupBy("doc_id", "cs", "ce")
-      .agg(count(lit(1)).as("need"))
-    val confirmedMulti = spanPairs
-      .join(pairs.select(col("doc_id").as("e_doc"), col("ph"))
-        .hint("SHUFFLE_HASH"), Seq("ph"))
-      .filter(col("e_doc") =!= col("doc_id"))
-      .groupBy(col("doc_id"), col("cs"), col("ce"), col("e_doc"))
-      .agg(count_distinct(col("ph")).as("got"))
-      .join(need, Seq("doc_id", "cs", "ce"))
-      .filter(col("got") === col("need"))
-      .select("doc_id", "cs", "ce").distinct()
-    single.unionByName(confirmedMulti)
-  }
-
-  private[graft] def scrubDupSpans(docs: DataFrame, w: Int = 8,
-                                   minSpan: Int = 50,
-                                   boundary: String = "md5",
-                                   contiguousOnly: Boolean = false,
-                                   edgeTolerant: Boolean = true): DataFrame = {
-    val all = dupSpanRanges(docs, w, minSpan, boundary)
-    val spans =
-      if (!contiguousOnly) all
-      else confirmContiguous(docs, all, w, boundary, edgeTolerant)
-    val cuts = spans.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("cs"), col("ce")))).as("cuts"),
-        count(lit(1)).as("n_spans_cut"))
-    // rewrite: walk the sorted non-overlapping cut list once, appending
-    // the kept segment before each cut and the tail after the last
-    // (aggregate HOF — interpreted, but it runs once per CUT doc over a
-    // handful of spans, not on the per-position hot path)
-    docs.join(cuts, Seq("doc_id"), "left")
-      .withColumn("scrubbed", expr(
-        """IF(cuts IS NULL, text,
-          |  aggregate(cuts, named_struct('p', 1L, 'acc', ''),
-          |    (a, c) -> named_struct('p', c.ce + 1L,
-          |      'acc', concat(a.acc,
-          |        substring(text, CAST(a.p AS INT), CAST(c.cs - a.p AS INT)))),
-          |    a -> concat(a.acc, substring(text, CAST(a.p AS INT)))))"""
-          .stripMargin))
-      .withColumn("n_spans_cut", coalesce(col("n_spans_cut"), lit(0L)))
-      .drop("cuts")
-  }
-
-  /** Iterate [[scrubDupSpans]] to its fixpoint (r13, VERDICT #5 — the
-    * stricter closure the one-pass scaladoc promises on request): after
-    * the returned text, a further scrub pass cuts NOTHING — no
-    * qualifying span survives in the FINAL corpus, not just none from
-    * the original text.
-    *
-    * Termination argument: every productive pass cuts at least one span
-    * of >= minSpan chars, so total corpus length strictly decreases by
-    * >= minSpan per round; the loop therefore ends in at most
-    * totalChars/minSpan rounds, and `maxRounds` bounds it defensively
-    * far below that. Measured convergence (ScrubFixpointProbe, r13):
-    * the re-adjacency shape — cut spans whose CDC boundaries align
-    * exactly with sub-minSpan foreign neighbors in a second doc — is
-    * rare but OCCURS ORGANICALLY at sf0.1-scale corpora: md5 boundary
-    * takes 2 productive rounds at 1×/10×/100× (pass 2 adds 0.02-0.2%
-    * more spans), gear 1-2; the sf0.001 spec fixture converges in 1.
-    *
-    * Memory contract: each round's output is persisted, counted (the
-    * convergence check doubles as materialization), and the PREVIOUS
-    * round's backing released; the final round's backing and the
-    * cumulative count accumulator stay cached for the caller's action —
-    * released by the returned `cleanup` thunk (idempotent; call after
-    * the last action on `scrubbed`, like TrainingPipeline.Result).
-    *
-    * Returns the scrubbed frame (input rows + `scrubbed` + CUMULATIVE
-    * `n_spans_cut`), the productive round count (0 = the input was
-    * already a fixpoint), and the cleanup thunk.
-    */
-  case class FixpointResult(scrubbed: DataFrame, rounds: Int,
-                            cleanup: () => Unit)
-
-  private[graft] def scrubToFixpoint(docs: DataFrame, w: Int = 8,
-                                     minSpan: Int = 50,
-                                     maxRounds: Int = 8,
-                                     boundary: String = "md5",
-                                     contiguousOnly: Boolean = false,
-                                     edgeTolerant: Boolean = true): FixpointResult = {
-    import org.apache.spark.storage.StorageLevel
-    var cur = docs.select(col("doc_id"), col("text"))
-    var curBacking: DataFrame = null // previous round's persisted output
-    var acc: DataFrame = null        // (doc_id, n_spans_cut) cumulative
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val out = scrubDupSpans(cur, w, minSpan, boundary, contiguousOnly,
-          edgeTolerant)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val cut = out.agg(coalesce(sum(col("n_spans_cut")), lit(0L)))
-        .head().getLong(0)
-      if (cut == 0L) {
-        out.unpersist()
-        done = true
-      } else {
-        rounds += 1
-        val roundCounts = out.select(col("doc_id"),
-          col("n_spans_cut").as("r"))
-        val nextAcc =
-          (if (acc == null) roundCounts.select(col("doc_id"), col("r").as("n_spans_cut"))
-           else acc.join(roundCounts, Seq("doc_id"))
-             .select(col("doc_id"),
-               (col("n_spans_cut") + col("r")).as("n_spans_cut")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        nextAcc.count() // materialize off the old acc before releasing it
-        if (acc != null) acc.unpersist()
-        acc = nextAcc
-        // next round's input is a projection of THIS round's cached
-        // output; the round before it served its consumers and releases
-        if (curBacking != null) curBacking.unpersist()
-        curBacking = out
-        cur = out.select(col("doc_id"), col("scrubbed").as("text"))
-      }
-    }
-    val result =
-      if (rounds == 0)
-        docs.withColumn("scrubbed", col("text"))
-          .withColumn("n_spans_cut", lit(0L))
-      else
-        // docs keeps its ORIGINAL text column; `scrubbed` is the final
-        // round's text; acc covers every doc (scrubDupSpans preserves
-        // rows), so the joins are total
-        docs.join(
-          cur.select(col("doc_id"), col("text").as("scrubbed"))
-            .join(acc, Seq("doc_id")),
-          Seq("doc_id"))
-    val finalBacking = curBacking
-    val finalAcc = acc
-    FixpointResult(result, rounds, () => {
-      if (finalBacking != null) finalBacking.unpersist()
-      if (finalAcc != null) finalAcc.unpersist()
-    })
   }
 
   val queries: Map[String, Q] = Map(

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.model.ParquetSchema
+import graft.streaming.NumberedFiles
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -31,7 +33,7 @@ object IvfIndex {
   /** Outcome of one incremental [[append]]: how the new batch fits the
     * EXISTING quantizer. `meanAssignCosine` is the batch's mean exact
     * cosine to its assigned centroids; `baselineMeanCosine` is the same
-    * statistic at build time (from the store's `_ivf_meta.json`).
+    * statistic at build time (from the store's meta file).
     * `retrainRecommended` fires when the batch sits more than
     * `driftTolerance` below the baseline — cells no longer shaped like
     * the data, so nprobe recall quietly degrades until a rebuild.
@@ -40,15 +42,17 @@ object IvfIndex {
                                 baselineMeanCosine: Double,
                                 retrainRecommended: Boolean)
 
-  private val MetaFile = "_ivf_meta.json" // '_' prefix: invisible to parquet listing
+  // '_' prefix: invisible to parquet listing
+  private val MetaPrefix = "_ivf_meta.json."
 
   /** The store's identity + drift baseline, persisted as versioned JSON
-    * in `_ivf_meta.json`. k/dim/trainN identify the quantizer the store
-    * was laid out under — [[append]] refuses a model that disagrees
-    * BEFORE writing (a wrong KMeansModel would otherwise assign the
-    * batch into another store's cell numbering silently, poisoning
-    * every later probe). v3 adds `centroid_sha` — a hash of the exact
-    * centroid bits in cell order — because k/dim equality is NOT
+    * in `_ivf_meta.json.<n>` (the highest n is current). k/dim/trainN
+    * identify the quantizer the store was laid out under — [[append]]
+    * refuses a model that disagrees BEFORE writing (a wrong KMeansModel
+    * would otherwise assign the batch into another store's cell
+    * numbering silently, poisoning every later probe). v3 adds
+    * `centroid_sha` — a hash of the exact centroid bits in cell
+    * order — because k/dim equality is NOT
     * quantizer identity: two models trained with different seeds (or a
     * retrained model after drift) can share k and dim while numbering
     * cells completely differently, and a k/dim-only check would let them
@@ -58,6 +62,8 @@ object IvfIndex {
     * curve ([[calibrate]]): `recall_topk` and `recall_curve` =
     * [[nprobe, recall@topk], ...] sorted by nprobe — what turns
     * [[searchAtRecall]]'s target into an nprobe instead of a hand dial.
+    * A store written before the numbered files (one `_ivf_meta.json`)
+    * reads as having no meta: rebuild it.
     */
   final case class Meta(version: Int, k: Int, dim: Int, trainN: Long,
                         meanAssignCosine: Double, centroidSha: String = "",
@@ -86,7 +92,7 @@ object IvfIndex {
   /** Train the coarse quantizer and write cell-partitioned inverted
     * lists. Returns the trained model (k centroid vectors live on the
     * driver — broadcast-sized by construction). Also records the
-    * training-time mean assigned cosine in `<store>/_ivf_meta.json` —
+    * training-time mean assigned cosine in the store's meta file —
     * the drift baseline [[append]] compares against.
     */
   def build(emb: DataFrame, k: Int, store: String,
@@ -179,7 +185,7 @@ object IvfIndex {
   }
 
   /** Measure the store's OWN recall@topK curve over the given nprobe
-    * ladder and persist it into `_ivf_meta.json` (v4) — the measurement
+    * ladder and persist it into the store's meta (v4) — the measurement
     * that turns [[searchAtRecall]]'s recall target into an nprobe. Probes
     * are a deterministic md5-ordered sample of the store's own vectors
     * (salted differently from any centroid sampling; self-matches
@@ -298,57 +304,44 @@ object IvfIndex {
       .head().getDouble(0)
   }
 
-  private def metaPath(store: String) =
-    new org.apache.hadoop.fs.Path(store, MetaFile)
+  /** The store's current meta file: the highest-numbered one. */
+  private[ops] def metaPath(fs: FileSystem, store: String): Option[Path] = {
+    val root = new Path(store)
+    NumberedFiles.list(fs, root, MetaPrefix).maxOption
+      .map(n => new Path(root, s"$MetaPrefix$n"))
+  }
 
-  private def writeMeta(spark: SparkSession, store: String,
-                        meta: Meta): Unit = {
-    val p = metaPath(store)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
+  private[ops] def writeMeta(spark: SparkSession, store: String,
+                             meta: Meta): Unit = {
+    val root = new Path(store)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val curveJson =
       if (meta.recallCurve.isEmpty) ""
       else s""", "recall_topk": ${meta.recallTopK}, "recall_curve": """ +
         meta.recallCurve.map { case (np, r) => s"[$np,$r]" }
           .mkString("[", ",", "]")
-    // temp + atomic rename (r13, ADVICE): calibrate rewrites the meta of
-    // a LIVE store — an in-place create(overwrite) lets a concurrent
-    // readMeta observe a truncated file. FileContext OVERWRITE rename;
-    // the raw (checksum-free) FS keeps a .crc sidecar from racing it.
-    // Known gap: on the local FS that rename is a delete plus a rename,
-    // and a readMeta inside it finds no meta (ROADMAP).
-    val tmp = new org.apache.hadoop.fs.Path(store, s".$MetaFile.tmp")
-    val out = graft.streaming.Rollup.rawFs(fs).create(tmp, true)
-    try out.write(
+    // calibrate rewrites the meta of a LIVE store: each version is a new
+    // numbered file committed by exclusive rename, so a concurrent
+    // readMeta always finds a complete one
+    val n = NumberedFiles.list(fs, root, MetaPrefix).maxOption.fold(0L)(_ + 1)
+    NumberedFiles.commit(fs, root, MetaPrefix, n,
       (s"""{"version": ${meta.version}, "k": ${meta.k}, "dim": ${meta.dim}, """ +
         s""""train_n": ${meta.trainN}, "mean_assign_cosine": ${meta.meanAssignCosine}, """ +
         s""""centroid_sha": "${meta.centroidSha}"$curveJson}""")
-        .getBytes("UTF-8"))
-    finally out.close()
-    // stores written before the rename-based rewrite created the meta
-    // via the CHECKSUMMED fs, leaving a .crc sidecar the rename does not
-    // update — drop it so a checksummed reader never verifies new bytes
-    // against the stale sidecar (r13 ADVICE)
-    val crc = new org.apache.hadoop.fs.Path(store, s".$MetaFile.crc")
-    if (fs.exists(crc)) fs.delete(crc, false)
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        .getBytes("UTF-8"))(
+      s"meta $n already committed under $store — a concurrent build or " +
+        "calibrate raced this one")
   }
 
   private[ops] def readMeta(spark: SparkSession, store: String): Meta = {
-    val p = metaPath(store)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"no $MetaFile under $store — the store was not written by " +
+    val fs = new Path(store).getFileSystem(spark.sessionState.newHadoopConf())
+    val p = metaPath(fs, store).getOrElse(throw new IllegalStateException(
+      s"no $MetaPrefix<n> under $store — the store was not written by " +
         "IvfIndex.build (or the meta was deleted); rebuild to restore " +
-        "the drift baseline")
-    // RAW fs open + read to EOF from one handle (the readManifest /
-    // lastBatch idiom, r13 ADVICE): the meta is written sidecar-free and
-    // rename-swapped by writeMeta, so (a) a checksummed open would
-    // verify against a stale pre-rename .crc sidecar on old stores, and
-    // (b) pre-sizing from a separate getFileStatus lets a reader
-    // straddling the swap readFully a truncated prefix of the new file —
-    // the TOCTOU the readManifest comment forbids.
+        "the drift baseline"))
+    // RAW fs open + read to EOF from one handle (the readManifest idiom):
+    // metas are written sidecar-free, and pre-sizing from a separate
+    // getFileStatus would be a TOCTOU the single handle avoids
     val in = graft.streaming.Rollup.rawFs(fs).open(p)
     val bos = new java.io.ByteArrayOutputStream()
     try {
@@ -364,7 +357,7 @@ object IvfIndex {
       ("\"" + name + "\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)").r
         .findFirstMatchIn(json).map(_.group(1).toDouble)
     val mean = num("mean_assign_cosine").getOrElse(throw new IllegalStateException(
-      s"$MetaFile under $store has no mean_assign_cosine field: $json"))
+      s"$p has no mean_assign_cosine field: $json"))
     val sha = "\"centroid_sha\"\\s*:\\s*\"([0-9a-f]*)\"".r
       .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
     // v4 curve: the only nested array in the file — [nprobe, recall]

@@ -194,30 +194,22 @@ object TextAnalysis {
   }
 
   /** The symbol-sequence seed of a word under the space-wrapped
-    * representation (see [[learnBpeMerges]]); with `eowMarker`, a
-    * Sennrich-style `</w>` end-of-word symbol is appended — final
-    * position units then learn separately from word-internal ones
-    * (e.g. `s</w>` plural endings), matching what sentencepiece-style
-    * tokenizers produce. The marker chars are regex-inert and
-    * SQL-literal-safe, so every replace in the chain stays literal.
+    * representation (see [[learnBpeMerges]]).
     */
-  private def bpeSeed(w: Column, eowMarker: Boolean): Column = {
-    val core = rtrim(regexp_replace(w, "(.)", "$1  "))
-    if (eowMarker) concat(lit(" "), core, lit("  </w> "))
-    else concat(lit(" "), core, lit(" "))
-  }
+  private def bpeSeed(w: Column): Column =
+    concat(lit(" "), rtrim(regexp_replace(w, "(.)", "$1  ")), lit(" "))
 
   /** The (freq, symbol-sequence) vocab frame both learners iterate —
     * ONE corpus pass, eagerly checkpointed (see learnBpeMerges' cache
     * note). Shared so the "batched at k=1 is bit-for-bit sequential"
     * law holds by construction, not by parallel maintenance.
     */
-  private def bpeVocabSeqs(docs: DataFrame, eowMarker: Boolean): DataFrame = {
+  private def bpeVocabSeqs(docs: DataFrame): DataFrame = {
     val seqs = docs
       .select(explode(filter(split(col("text"), " "), w => w =!= "")).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-      .select(col("f"), bpeSeed(col("w"), eowMarker).as("s"))
+      .select(col("f"), bpeSeed(col("w")).as("s"))
       .localCheckpoint(true)
     // SIZE the loop's parallelism (r16): the checkpointed vocab
     // inherits the corpus's shuffle-partition dial, and a driver-
@@ -388,8 +380,7 @@ object TextAnalysis {
     * the standard reference-implementation asymmetry, mirrored exactly
     * by both engines.
     */
-  private[graft] def learnBpeMerges(docs: DataFrame, nMerges: Int,
-      eowMarker: Boolean = false)
+  private[graft] def learnBpeMerges(docs: DataFrame, nMerges: Int)
       : Seq[(Long, String, String, String, Long)] = {
     // localCheckpoint per round, NOT persist/release-previous: Spark's
     // CacheManager recaches dependent cached plans when a parent cache
@@ -398,7 +389,7 @@ object TextAnalysis {
     // before this was caught. Checkpointing truncates the lineage (the
     // q100 star-contraction discipline); superseded round blocks are
     // freed by the ContextCleaner once unreferenced.
-    var seqs = bpeVocabSeqs(docs, eowMarker)
+    var seqs = bpeVocabSeqs(docs)
     val out = Seq.newBuilder[(Long, String, String, String, Long)]
     withLearnerConf(docs.sparkSession, seqs.rdd.getNumPartitions) {
       for (k <- 1 to nMerges) {
@@ -411,8 +402,8 @@ object TextAnalysis {
         val (a, b, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         out += ((k.toLong, a, b, a + b, cnt))
-        // a, b are [a-z]+ (plus the optional regex-inert `</w>` marker)
-        // by seeding/concatenation — safe SQL string literals.
+        // a, b are [a-z]+ by seeding/concatenation — safe SQL string
+        // literals.
         // Lazy checkpoint, NO materializing count: the next round's pair
         // aggregation is the first action and materializes it then —
         // one driver-synchronous job per round instead of two (and the
@@ -456,10 +447,10 @@ object TextAnalysis {
     * either way.
     */
   private[graft] def learnBpeMergesBatched(docs: DataFrame, nRounds: Int,
-      k: Int, eowMarker: Boolean = false)
+      k: Int)
       : Seq[(Long, String, String, String, Long)] = {
     require(k >= 1 && nRounds >= 1, s"need k >= 1, nRounds >= 1 (got $k, $nRounds)")
-    learnRounds(bpeVocabSeqs(docs, eowMarker), nRounds)(
+    learnRounds(bpeVocabSeqs(docs), nRounds)(
       // ONE bounded collect per round: k rows (the q100/fixpoint
       // bounded-scalar-action discipline — k is a small constant)
       seqs => collectPairs(bpePairCounts(seqs).limit(k)),
@@ -514,8 +505,8 @@ object TextAnalysis {
       cand: IndexedSeq[(String, String, Long)])
       : IndexedSeq[(String, String, Long)] = {
     // triples precomputed once: the O(k²) pairwise scan then allocates
-    // nothing per comparison — at the deriveBatchK ceiling (k = 4096,
-    // 8.4M comparisons) this stays well under a second (BpeSpec law)
+    // nothing per comparison — at k = 4096 (8.4M comparisons) this
+    // stays well under a second (BpeSpec law)
     val triples = cand.map { case (a, b, _) => Set(a, b, a + b) }
     cand.indices.collect { case i if (0 until i).forall(h =>
         !triples(h).exists(triples(i).contains)) =>
@@ -534,7 +525,7 @@ object TextAnalysis {
     * [[keepAllHigherRanks]]: a DROPPED candidate no longer blocks lower
     * ones, because non-winners never enter the blocking set — measured
     * 5.6 vs 3.4 merges/round on the testdata corpus and 2.6× on the
-    * 100k prefix-heavy vocabulary (BpeLearnProbe).
+    * 100k prefix-heavy vocabulary (SURVEY.md).
     */
   private[graft] def keepDisjointWinners(
       winners: IndexedSeq[(String, String, Long)], capJ: Int)
@@ -544,18 +535,17 @@ object TextAnalysis {
   /** One-projection application of a mutually-disjoint kept batch:
     * disjointness makes the nesting order irrelevant; keep rank order
     * anyway so the expression text is deterministic. Symbols are
-    * [a-z]+ (plus the regex-inert `</w>` marker) — safe SQL literals.
+    * [a-z]+ — safe SQL literals.
     * Lazy checkpoint, no materializing count: the next round's pair
     * aggregation is the first action and materializes it then.
     */
   private def batchApply(seqs: DataFrame,
       kept: Seq[(String, String, Long)]): DataFrame = {
     // [[SegFoldChunk]] replaces per projection — the declared dials
-    // (capJ <= 24) keep one projection exactly as before; a derived-k
-    // caller (capJ up to 4096) chunks instead of building a 4096-deep
-    // expression (the q120 fold-depth guard, applied to the learner's
-    // apply side). Disjointness makes the split points semantically
-    // free.
+    // (capJ <= 24) keep one projection; a larger batch chunks instead
+    // of building one k-deep expression (the q120 fold-depth guard,
+    // applied to the learner's apply side). Disjointness makes the
+    // split points semantically free.
     kept.grouped(SegFoldChunk).foldLeft(seqs) { (df, g) =>
       val repl = g.foldLeft("s") { case (acc, (a, b, _)) =>
         s"replace($acc, ' $a  $b ', ' $a$b ')"
@@ -584,45 +574,19 @@ object TextAnalysis {
     * all-higher-ranks learner carries (BpeSpec). Kept batches are
     * mutually disjoint, so the one-pass [[batchApply]] argument (order
     * independence, exact pre-batch counts) holds unchanged.
-    *
-    * `k <= 0` (and/or `capJ <= 0`) derives the window from the
-    * vocabulary via [[deriveBatchK]] — the library entry point for
-    * callers whose corpus scale is unknown ahead of time.
     */
   private[graft] def learnBpeMergesHotPart(docs: DataFrame, nRounds: Int,
-      k: Int, capJ: Int, eowMarker: Boolean = false)
+      k: Int, capJ: Int)
       : Seq[(Long, String, String, String, Long)] = {
-    require(nRounds >= 1, s"need nRounds >= 1 (got $nRounds)")
-    val seqs0 = bpeVocabSeqs(docs, eowMarker)
-    // k/capJ <= 0 → derive from the vocabulary (r15 VERDICT #5): the
-    // type count is a cheap aggregate over the already-checkpointed
-    // vocab frame — NOT another corpus pass. The declared queries pass
-    // literal dials (their oracles unroll them); derivation serves
-    // callers whose corpus scale is unknown (TrainingPipeline).
-    val kEff = if (k > 0) k else deriveBatchK(seqs0.count())
-    val capEff = if (capJ > 0) capJ else kEff
-    learnRounds(seqs0, nRounds)(
+    require(k >= 1 && capJ >= 1 && nRounds >= 1,
+      s"need k >= 1, capJ >= 1, nRounds >= 1 (got $k, $capJ, $nRounds)")
+    learnRounds(bpeVocabSeqs(docs), nRounds)(
       // ONE bounded collect per round: <= k winner rows. r20: the
       // zero-join hotWinners consumes the pair aggregate exactly once,
       // so the per-round persist/unpersist is gone with the joins
-      seqs => collectPairs(hotWinners(bpePairCountsRaw(seqs)).limit(kEff)),
-      keepDisjointWinners(_, capEff))
+      seqs => collectPairs(hotWinners(bpePairCountsRaw(seqs)).limit(k)),
+      keepDisjointWinners(_, capJ))
   }
-
-  /** Candidate-window size derived from vocabulary statistics (r15
-    * VERDICT #5): one winner per live hot symbol means the useful
-    * window tracks the symbol pool, which tracks the type count —
-    * k = clamp(nTypes / 16, 8, 4096). At the 4096 ceiling the driver
-    * keep-rule budget is O(k²) 3-element set intersections — measured
-    * well under a second (BpeSpec's budget law), and the per-round
-    * collect stays a bounded k rows. The DECLARED queries do NOT pass
-    * through this derivation — their dials are literal constants
-    * because the oracle unrolls them (BpeSpec pins the constants);
-    * derivation is for library callers (TrainingPipeline) whose corpus
-    * scale is unknown ahead of time.
-    */
-  private[graft] def deriveBatchK(nTypes: Long): Int =
-    math.max(8L, math.min(4096L, nTypes / 16)).toInt
 
   /** Encode a (doc_id, text) corpus with learned BPE merges — q116's
     * core, shared with TrainingPipeline's export stage. TYPE-level
@@ -656,8 +620,7 @@ object TextAnalysis {
     * inter-chunk checkpoints materialize VOCAB-sized frames only.
     */
   private[graft] def segmentTypes(types: DataFrame,
-      merges: Seq[(String, String)],
-      eowMarker: Boolean = false): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     val isAlpha = col("w").rlike("^[a-z]+$")
     // r20 (guide §2.5 input skew / §1 empirical): the fold below is
     // CPU-bound per row (|merges| literal replaces per type), but its
@@ -672,42 +635,31 @@ object TextAnalysis {
     // null for non-alpha types: replaces propagate null for free and
     // the final projection never reads _seg_s for them
     var df = types.repartition(width)
-      .withColumn("_seg_s", when(isAlpha, bpeSeed(col("w"), eowMarker)))
+      .withColumn("_seg_s", when(isAlpha, bpeSeed(col("w"))))
     val groups = merges.grouped(SegFoldChunk).toSeq
     for ((g, gi) <- groups.zipWithIndex) {
       val folded = g.foldLeft(col("_seg_s")) { case (c, (a, b)) =>
-        // literal pattern/replacement (symbols are [a-z]+ plus the
-        // regex-inert marker); left-to-right non-overlapping scan IS
-        // greedy BPE pairing — learnBpeMerges' representation argument
+        // literal pattern/replacement (symbols are [a-z]+);
+        // left-to-right non-overlapping scan IS greedy BPE pairing —
+        // learnBpeMerges' representation argument
         regexp_replace(c, s" $a  $b ", s" $a$b ") }
       df = df.withColumn("_seg_s", folded)
       if (gi < groups.size - 1) df = df.localCheckpoint(false)
     }
     val segArr = split(trim(col("_seg_s")), "  ")
-    // marker mode covers pass-through types too (r15 VERDICT #5): a
-    // non-alpha type emits `w</w>` as its single token, so EVERY word
-    // ends in exactly one `</w>` and a consumer recovers word
-    // boundaries from the token stream alone by splitting the
-    // concatenation on the marker — without this, mixed-content docs
-    // lose boundaries at every non-alpha word (alpha words carry the
-    // marker from the seed; whether it merged into the last subword or
-    // stands alone, the concatenation still ends the word with it)
-    val passThrough =
-      if (eowMarker) concat(col("w"), lit("</w>")) else col("w")
     df.select(col("w"),
-      when(isAlpha, array_join(segArr, " ")).otherwise(passThrough).as("sws"),
+      when(isAlpha, array_join(segArr, " ")).otherwise(col("w")).as("sws"),
       when(isAlpha, size(segArr).cast("long")).otherwise(lit(1L)).as("n_sw"))
   }
 
   private[graft] def bpeEncodeTokens(docs: DataFrame,
-      merges: Seq[(Long, String, String, String, Long)],
-      eowMarker: Boolean = false)
+      merges: Seq[(Long, String, String, String, Long)])
       : (DataFrame, DataFrame) = {
     val tok = docs.select(col("doc_id"),
       posexplode(filter(split(col("text"), " "), w => w =!= ""))
         .as(Seq("pos", "w")))
     val seg = segmentTypes(tok.select("w").distinct(),
-        merges.map(m => (m._2, m._3)), eowMarker)
+        merges.map(m => (m._2, m._3)))
       .persist()
     val enc = joinLm(tok, seg, Seq("w"), "inner", estimateLmBytes(seg))
       .groupBy("doc_id")

@@ -93,44 +93,6 @@ object TrainingPipeline {
       // describes the ORIGINAL doc). Later stages — decontamination,
       // mixing, chunking, packing — all run on the scrubbed text.
       scrubDupSpans: Boolean = false,
-      // r13: boundary rule for the scrub chunker — "md5" (q107's
-      // declared, oracle-parity rule) or "gear" (the O(1) rolling
-      // boundary for production runs; same cut-law, different boundary
-      // set — GearChunks scaladoc carries the delta, ChunkerAbProbe
-      // the measured cost).
-      scrubBoundary: String = "md5",
-      // r13: when true (with scrubDupSpans), the scrub iterates to its
-      // FIXPOINT (Dedup.scrubToFixpoint) — no qualifying span survives
-      // in the final text, not just none from the pre-scrub text. The
-      // organic cost is ~1 extra productive pass + 1 dry verify pass
-      // (measured: md5 needs 2 productive rounds at sf0.1+ decades,
-      // the re-adjacency tail is 0.02-0.2% of spans).
-      scrubFixpoint: Boolean = false,
-      // r13: strict Lee-et-al. semantics — cut only spans whose FULL
-      // text occurs contiguously in another doc (Dedup.confirmContiguous:
-      // chunk-pair-chain confirm, no substring search), keeping the
-      // mosaic spans the default mode cuts. The span-precision audit
-      // (SURVEY's r14 record, §8) measured each rule's mosaic tail at 93-97% of its
-      // exclusive spans. r14: the confirm runs EDGE-TOLERANT (interior
-      // pairs only for >= 4-chunk spans — a verbatim copy's edge chunks
-      // can merge into the candidate doc's surrounding text), closing
-      // the r13 recall tail: rejected-class verbatim rate 0.200 → 0.000
-      // at sf0.1, confirmed-class rate at the audit's calibration
-      // ceiling. COMPOSITION NOTE: combine with scrubFixpoint
-      // only deliberately — the confirm re-runs every round while
-      // rejected spans recur identically (measured round-dominated,
-      // 174 s at 1×, and OOM on an 8 GB fork); strict's natural reading
-      // is the ONE-PASS cut of the original text's contiguous dups.
-      scrubContiguousOnly: Boolean = false,
-      // r15 (r14 ADVICE close): the edge-tolerance dial of the
-      // contiguity confirm, exposed rather than hard-wired — callers
-      // who calibrated against the r13 STRICT confirm (all adjacent
-      // pairs required, edge pairs included) set this false to keep
-      // that behavior; the default is the r14 edge-tolerant confirm
-      // (interior pairs only for >= 4-chunk spans — recovers the
-      // verbatim-copy recall tail at measured precision). Only read
-      // when scrubContiguousOnly is true.
-      scrubEdgeTolerant: Boolean = true,
       // r13: when true, q110's PII redaction (TextAnalysis.redactPii —
       // emails/phones/IPv4s → typed markers) rewrites `text` after
       // near-dup removal / span scrub and BEFORE decontamination, so
@@ -153,30 +115,10 @@ object TrainingPipeline {
       // the tokenizer never memorizes content the pipeline dropped),
       // then encode every survivor (type-level application, size-gated
       // map shipping — q116's exact machinery). Returned as Result.bpe:
-      // (doc_id, n_subwords, seq). EAGER like the fixpoint stage: the
-      // learning loop runs 2 bounded jobs per merge round.
+      // (doc_id, n_subwords, seq). EAGER: the learning loop runs 2
+      // bounded jobs per merge round.
       bpeEncode: Boolean = false,
-      bpeMerges: Int = TextAnalysis.BpeMerges,
-      // r15: when Some((rounds, k)), the learner runs BATCHED — up to k
-      // mutually-disjoint merges per round (q119's machinery; k x fewer
-      // driver round-trips, the path to realistic merge counts) —
-      // instead of `bpeMerges` sequential rounds. And the Sennrich
-      // `</w>` end-of-word marker, off by default: final-position units
-      // learn separately and the export compares against
-      // sentencepiece-style tokenizers; subword concatenation then
-      // reconstructs the words only after stripping the marker.
-      bpeBatched: Option[(Int, Int)] = None,
-      // r16: when Some(rounds), the learner runs HOT-PARTITIONED
-      // (q121's machinery — per-hot-symbol winners over the full pair
-      // table, cascade-free keep rule) with the window k DERIVED from
-      // the survivor vocabulary (TextAnalysis.deriveBatchK:
-      // clamp(types/16, 8, 4096); the declared queries pin literal
-      // dials for their oracles — derivation is exactly for THIS
-      // caller, whose corpus scale is unknown). Takes precedence over
-      // bpeBatched. Costs one type count over the learner's own
-      // checkpointed vocab frame — not a corpus pass.
-      bpeHotPart: Option[Int] = None,
-      bpeEowMarker: Boolean = false)
+      bpeMerges: Int = TextAnalysis.BpeMerges)
 
   /** Stage outputs: the surviving corpus and the packed bins, plus
     * per-stage survivor counts for the audit trail. `cleanup` unpersists
@@ -340,22 +282,10 @@ object TrainingPipeline {
     // counts docs that were actually rewritten, not survivors. Persisted
     // (it feeds the decontamination gram explodes AND the final
     // anti-join, same diamond as the raw near-dedup set it replaces).
-    var scrubExtraCleanup: () => Unit = () => ()
     val scrubbedOpt =
       if (!cfg.scrubDupSpans) None
-      else if (cfg.scrubFixpoint) {
-        val fx = Dedup.scrubToFixpoint(nearDedupedRaw,
-          boundary = cfg.scrubBoundary,
-          contiguousOnly = cfg.scrubContiguousOnly,
-          edgeTolerant = cfg.scrubEdgeTolerant)
-        scrubExtraCleanup = fx.cleanup
-        Some(fx.scrubbed
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      } else
-        Some(Dedup.scrubDupSpans(nearDedupedRaw, boundary = cfg.scrubBoundary,
-            contiguousOnly = cfg.scrubContiguousOnly,
-            edgeTolerant = cfg.scrubEdgeTolerant)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      else Some(Dedup.scrubDupSpans(nearDedupedRaw)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val scrubbed = scrubbedOpt match {
       case None => nearDedupedRaw
       case Some(sc) =>
@@ -423,7 +353,6 @@ object TrainingPipeline {
       nearDedupedRaw.unpersist()
       evalGrams.unpersist()
       scrubbedOpt.foreach(_.unpersist())
-      scrubExtraCleanup() // fixpoint internals; its frame materialized above
     }
 
     // 4b (optional). domain mixing: q103's machinery at a configured
@@ -519,19 +448,8 @@ object TrainingPipeline {
     // encode's seg cache joins the cleanup list.
     val bpe = if (!cfg.bpeEncode) None else {
       val corpus = survivors.select(col("doc_id"), col("text"))
-      val merges = (cfg.bpeHotPart, cfg.bpeBatched) match {
-        case (Some(rounds), _) =>
-          // k/capJ <= 0: the learner derives the window from its own
-          // (already-checkpointed) vocab frame — no extra corpus pass
-          TextAnalysis.learnBpeMergesHotPart(corpus, rounds, k = -1,
-            capJ = -1, cfg.bpeEowMarker)
-        case (None, Some((rounds, k))) =>
-          TextAnalysis.learnBpeMergesBatched(corpus, rounds, k,
-            cfg.bpeEowMarker)
-        case (None, None) =>
-          TextAnalysis.learnBpeMerges(corpus, cfg.bpeMerges, cfg.bpeEowMarker)
-      }
-      Some(TextAnalysis.bpeEncodeTokens(corpus, merges, cfg.bpeEowMarker))
+      val merges = TextAnalysis.learnBpeMerges(corpus, cfg.bpeMerges)
+      Some(TextAnalysis.bpeEncodeTokens(corpus, merges))
     }
 
     // unpersist is idempotent, so listing the already-released audit-mode
@@ -540,7 +458,6 @@ object TrainingPipeline {
       (Seq(exact, nearDedupedRaw, evalGrams, clean) ++ scrubbedOpt)
         .foreach(_.unpersist())
       bpe.foreach(_._2.unpersist()) // the encode's seg type-map cache
-      scrubExtraCleanup() // fixpoint-mode internal caches (idempotent)
     }
     Result(survivors, packed, audit.result(), cleanup, order, bpe.map(_._1),
       releaseCheckpoint)
@@ -760,13 +677,9 @@ object TrainingPipeline {
     * tails (pack — [[pipelineOracleSql]]; order export —
     * [[pipelineOrderOracleSql]]) append to it, so the chain has ONE
     * formulation. exportOrderSeed/bpeEncode are additive stages that
-    * never move the chain, so the envelope check ignores them here;
-    * each tail checks what it consumes.
+    * never move the chain; each tail checks what it consumes.
     */
   private def pipelineChainSql(c: Config): (String, String) = {
-    require(!c.scrubFixpoint && !c.scrubContiguousOnly
-        && c.scrubBoundary == "md5",
-      "pipelineChainSql covers the declared oracle-expressible configs")
     // optional stage 3b/3c: scrub (q107's chain re-sourced at nd) then
     // redaction (q110's three regexp_replace stages, same fixed order);
     // `prepped` names whichever relation carries the stage-final text
@@ -981,9 +894,8 @@ object TrainingPipeline {
     * declared depth no longer fits the corpus.
     */
   private[graft] def pipelineBpeOracleSql(c: Config): String = {
-    require(c.bpeEncode && c.bpeHotPart.isEmpty && c.bpeBatched.isEmpty
-        && !c.bpeEowMarker && c.bpeMerges == TextAnalysis.BpeMerges,
-      "pipelineBpeOracleSql models the sequential no-marker learner at " +
+    require(c.bpeEncode && c.bpeMerges == TextAnalysis.BpeMerges,
+      "pipelineBpeOracleSql models the sequential learner at " +
         s"the declared ${TextAnalysis.BpeMerges}-merge depth")
     val (ctes, survivors) = pipelineChainSql(c)
     s"$ctes${TextAnalysis.bpeSeqEncodeOracleTail(survivors)}"

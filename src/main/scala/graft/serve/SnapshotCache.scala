@@ -34,11 +34,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * The RAW table qualifies since r13: [[graft.streaming.RawStore
   * .versionStamp]] covers ALL content changes (maintenance commits via
-  * the manifest seq, ingest batches via the `_LAST_BATCH` counter
-  * [[graft.streaming.Collector.writeBatch]] bumps post-write), so
+  * the manifest seq, ingest batches via the `_LAST_BATCH.<id>` markers
+  * [[graft.streaming.Collector.writeBatch]] commits post-write), so
   * [[SnapshotCache.forRawStore]] gives the raw path the same
   * never-stale contract — up to versionStamp's documented transient
-  * window (its two reads are not atomic with the resolver's listings;
+  * window (its listing is not atomic with the resolver's listings;
   * the post-resolve stamp verify below narrows the pairing race, and
   * any residue clears on the next stamp bump). Two raw-specific dials:
   * the pin is

@@ -4,27 +4,38 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem
 
 /** Files named `<prefix><n>` that are committed by EXCLUSIVE rename and
   * never replaced — the commit protocol of [[RawStore]]'s manifests and
-  * [[Rollup]]'s snapshot pointers. A reader takes the highest number its
+  * last-batch markers, [[Rollup]]'s snapshot pointers and
+  * [[graft.ops.IvfIndex]]'s metadata. A reader takes the highest number its
   * listing shows; a writer that loses the race to a number fails instead
   * of overwriting. Replacing one fixed name is not an alternative: an
   * OVERWRITE rename on the local filesystem is a delete plus a rename,
   * and a reader inside that gap finds no file at all.
   */
-private[streaming] object NumberedFiles {
+private[graft] object NumberedFiles {
 
   /** The numbers `n` of the files `<prefix><n>` directly under `root`
     * (none if `root` does not exist).
     */
-  def list(fs: FileSystem, root: Path, prefix: String): Seq[Long] = {
-    val names =
-      try fs.listStatus(root).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
+  def list(fs: FileSystem, root: Path, prefix: String): Seq[Long] =
+    numbers(names(fs, root), prefix)
+
+  /** The entry names directly under `root` (none if it does not exist):
+    * one listing a caller can pass to [[numbers]] for several prefixes.
+    */
+  def names(fs: FileSystem, root: Path): Seq[String] =
+    try fs.listStatus(root).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  def numbers(names: Seq[String], prefix: String): Seq[Long] =
     names.filter(_.startsWith(prefix))
       .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
-  }
 
   /** Commit `bytes` as `<prefix><n>` under `root`, then delete the files
-    * numbered `n - keep` and below. Throws ConcurrentModificationException
+    * numbered `n - keep` and below. The files kept behind the newest only
+    * tolerate a reader's gap between listing the names and reading or
+    * stat-ing one (a local listing stats each name it read): it takes
+    * `keep` commits landing inside that gap to strand the reader.
+    * Throws ConcurrentModificationException
     * carrying `conflict` if `<prefix><n>` already exists, i.e. if a
     * concurrent writer took `n` first. Written through the raw
     * (checksum-free) filesystem: a .crc sidecar would follow the rename
@@ -32,7 +43,7 @@ private[streaming] object NumberedFiles {
     * with a missing or stale sidecar.
     */
   def commit(fs: FileSystem, root: Path, prefix: String, n: Long,
-             bytes: Array[Byte], keep: Int)(conflict: => String): Unit = {
+             bytes: Array[Byte], keep: Int = 8)(conflict: => String): Unit = {
     val raw = Rollup.rawFs(fs)
     val tmp = new Path(root, s".${prefix}tmp")
     val out = raw.create(tmp, true)

@@ -55,12 +55,6 @@ object RawStore {
 
   private val ManifestPrefix = "_MANIFEST."
   private val GenRoot = ".gen"
-  /** Manifest files kept behind the newest — only to tolerate a
-    * reader's list-then-open gap (it would take this many commits
-    * landing inside that gap to strand the reader; at the soak's 30 s
-    * cadence that is minutes of headroom for a microsecond window).
-    */
-  private val ManifestKeep = 8
 
   /** seq: commit counter (monotone, bumped by EVERY commit — also names
     * generation dirs, so gen paths are never reused); active: day
@@ -119,15 +113,16 @@ object RawStore {
     * the manifest the caller read, and if another writer committed that
     * seq first the rename fails (target exists) and this throws
     * ConcurrentModificationException instead of silently losing the
-    * other writer's update. Prunes manifests more than [[ManifestKeep]]
-    * commits old.
+    * other writer's update. Keeps the newest eight manifests (at the
+    * soak's 30 s maintenance cadence, minutes of headroom for a reader's
+    * list-then-open gap).
     */
   def commitManifest(fs: FileSystem, dir: String, next: Manifest): Unit = {
     val sb = new StringBuilder("v1\n").append(s"seq ${next.seq}\n")
     next.active.toSeq.sorted.foreach { case (d, r) => sb.append(s"active $d $r\n") }
     next.retired.toSeq.sorted.foreach { case (r, at) => sb.append(s"retired $r $at\n") }
     NumberedFiles.commit(fs, new Path(dir), ManifestPrefix, next.seq,
-      sb.toString.getBytes("UTF-8"), ManifestKeep)(
+      sb.toString.getBytes("UTF-8"))(
       s"manifest seq ${next.seq} already committed under $dir — a " +
         "concurrent maintenance writer violated the single-writer " +
         "contract (this writer's update is NOT applied)")
@@ -188,43 +183,30 @@ object RawStore {
       while (genCache.size > MaxGenLegs && it.hasNext) { it.next(); it.remove() }
     }
 
-  private val LastBatchFile = "_LAST_BATCH"
+  private val LastBatchPrefix = "_LAST_BATCH."
 
   /** Record the latest committed ingest batch id at the table root —
-    * the append half of [[versionStamp]]. One tiny sidecar-free write +
-    * OVERWRITE rename per micro-batch, called by
-    * [[Collector.writeBatch]] AFTER the batch data lands: a version
-    * reader either sees the pre-batch stamp (and re-resolves on the
-    * next request once the bump lands) or the post-batch stamp with the
-    * data already complete. Known gap: on the local filesystem the
-    * OVERWRITE rename is a delete plus a rename, so a [[lastBatch]]
-    * landing between them fails its open (ROADMAP; [[NumberedFiles]] is
-    * the fix Rollup's pointer took).
+    * the append half of [[versionStamp]]: an empty `_LAST_BATCH.<id>`
+    * committed through [[NumberedFiles]] (the newest eight are kept),
+    * called by [[Collector.writeBatch]] AFTER the batch data lands. A
+    * version reader either sees the pre-batch stamp (and re-resolves on
+    * the next request once the bump lands) or the post-batch stamp with
+    * the data already complete. A replayed batch id finds its file
+    * already committed and does nothing. Markers above `batchId` are
+    * left by an earlier stream over the same sink (a fresh checkpoint
+    * restarts ids at 0) and are deleted, so the stamp follows this
+    * stream. A store written before these markers (one `_LAST_BATCH`
+    * file) reads as batch -1 until its next bump.
     */
   def bumpLastBatch(fs: FileSystem, dir: String, batchId: Long): Unit = {
     val root = new Path(dir)
     fs.mkdirs(root)
-    val raw = Rollup.rawFs(fs)
-    val tmp = new Path(root, s".$LastBatchFile.tmp")
-    val out = raw.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(root.toUri, fs.getConf)
-      .rename(tmp, new Path(root, LastBatchFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def lastBatch(fs: FileSystem, dir: String): Long = {
-    val p = new Path(dir, LastBatchFile)
-    if (!fs.exists(p)) return -1L
-    val in = Rollup.rawFs(fs).open(p)
-    val bos = new java.io.ByteArrayOutputStream()
     try {
-      val buf = new Array[Byte](64)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    new String(bos.toByteArray, "UTF-8").trim.toLong
+      NumberedFiles.commit(fs, root, LastBatchPrefix, batchId,
+        Array.emptyByteArray)("batch already recorded")
+      NumberedFiles.list(fs, root, LastBatchPrefix).filter(_ > batchId)
+        .foreach(n => fs.delete(new Path(root, s"$LastBatchPrefix$n"), false))
+    } catch { case _: java.util.ConcurrentModificationException => () }
   }
 
   /** Append-visible version of the raw table (r13, VERDICT #8 — the
@@ -232,8 +214,8 @@ object RawStore {
     * tier's missing piece): changes on EVERY content change —
     * maintenance commits bump the manifest seq (high 32 bits), ingest
     * batches bump the [[bumpLastBatch]] counter (low 32 bits). Cost per
-    * call: one root listing + one tiny file read — the same order as
-    * the rollup pointer read.
+    * call: one root listing and no file read — the same as the rollup
+    * pointer read.
     *
     * Regime note (measured reasoning, not a limitation of the thunk):
     * under live 1 Hz ingest the stamp flips every second, so a cache
@@ -242,22 +224,22 @@ object RawStore {
     * or slow-batch store (dashboards over yesterday's data, paused
     * collectors), where repeat requests skip the resolver entirely.
     *
-    * ATOMICITY (r13 ADVICE, documented contract): the stamp composes
-    * two filesystem reads (manifest listing, then `_LAST_BATCH`) and a
-    * caller pairs it with listings taken later at resolve time — a
-    * commit landing between any of those reads yields a stamp matching
-    * neither pre- nor post-commit state, and a batch whose data files
-    * committed before its counter bump resolves under the pre-batch
-    * stamp until the bump lands. Both are TRANSIENT (the very next
+    * ATOMICITY (r13 ADVICE, documented contract): the stamp is one root
+    * listing, but a caller pairs it with listings taken later at
+    * resolve time — a commit landing in between pairs the stamp with a
+    * state it does not name, and a batch whose data files committed
+    * before its counter bump resolves under the pre-batch stamp until
+    * the bump lands. Both are TRANSIENT (the very next
     * bump/commit flips the stamp and invalidates the pairing) — never
     * persistent staleness. [[graft.serve.SnapshotCache]] narrows the
     * window mechanically by re-reading the stamp after resolving and
     * declining to pin when it moved.
     */
   def versionStamp(fs: FileSystem, dir: String): Long = {
-    val seqs = manifestSeqs(fs, dir)
-    val seq = if (seqs.isEmpty) 0L else seqs.max
-    (seq << 32) | ((lastBatch(fs, dir) + 1L) & 0xffffffffL)
+    val names = NumberedFiles.names(fs, new Path(dir))
+    val seq = NumberedFiles.numbers(names, ManifestPrefix).maxOption.getOrElse(0L)
+    val last = NumberedFiles.numbers(names, LastBatchPrefix).maxOption.getOrElse(-1L)
+    (seq << 32) | ((last + 1L) & 0xffffffffL)
   }
 
   /** Resolve the manifest and read the table's ACTIVE state. `schema`

@@ -295,19 +295,30 @@ class BpeSpec extends SparkSpec {
       IndexedSeq(("a", "b", 9L), ("e", "f", 2L)))
   }
 
-  test("deriveBatchK: clamp(nTypes/16, 8, 4096), and the declared dials stay literal") {
-    assert(TextAnalysis.deriveBatchK(0) == 8)
-    assert(TextAnalysis.deriveBatchK(31) == 8) // the testdata corpus
-    assert(TextAnalysis.deriveBatchK(1600) == 100)
-    assert(TextAnalysis.deriveBatchK(100000) == 4096) // the probe vocab
-    assert(TextAnalysis.deriveBatchK(Long.MaxValue) == 4096)
+  test("declared BPE dials stay literal") {
     // the declared queries' dials are literal constants the oracles
-    // unroll — the derivation must never silently retarget them
+    // unroll — nothing may silently retarget them
     assert(TextAnalysis.BpeBatchRounds == 25 && TextAnalysis.BpeBatchK == 8)
     assert(TextAnalysis.BpeHotRounds == 25 && TextAnalysis.BpeHotK == 8 &&
       TextAnalysis.BpeHotCap == 8)
     assert(TextAnalysis.RichVocabRounds == 28 &&
       TextAnalysis.RichVocabK == 128 && TextAnalysis.RichVocabCap == 24)
+  }
+
+  test("hot-partitioned learner rejects k < 1 or capJ < 1 before any Spark job") {
+    // a zero window is a caller error, not a request to derive one
+    val d = docs("aaab aaab aab")
+    val sc = spark.sparkContext
+    val group = "bpe-hot-dials"
+    sc.setJobGroup(group, group)
+    try {
+      for ((k, capJ) <- Seq((0, 4), (4, 0)))
+        intercept[IllegalArgumentException] {
+          TextAnalysis.learnBpeMergesHotPart(d, 3, k, capJ)
+        }
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "the dial check must fire before the vocabulary job")
   }
 
   test("keep-rule budget at the derived-k ceiling is driver-trivial (r15 VERDICT #5)") {
@@ -319,52 +330,6 @@ class BpeSpec extends SparkSpec {
     val dt = (System.nanoTime() - t0) / 1e9
     assert(kept.size == 4096)
     assert(dt < 2.0, f"O(k²) keep rule took $dt%.2fs at k = 4096")
-  }
-
-  // ───────────────────── end-of-word marker variant ─────────────────────
-
-  test("</w> marker learns final-position units the markerless form cannot") {
-    // type freqs: ab ×3, abc ×2. Markerless: (a,b)=5 then (ab,c)=2.
-    // With the marker, round 2's top pair is (ab, </w>)=3 — the
-    // FINAL-position 'ab' unit, distinct from the word-internal one.
-    val d = docs("ab ab ab abc abc")
-    assert(TextAnalysis.learnBpeMerges(d, 2) == Seq(
-      (1L, "a", "b", "ab", 5L),
-      (2L, "ab", "c", "abc", 2L)))
-    assert(TextAnalysis.learnBpeMerges(d, 2, eowMarker = true) == Seq(
-      (1L, "a", "b", "ab", 5L),
-      (2L, "ab", "</w>", "ab</w>", 3L)))
-  }
-
-  test("marker mode recovers word boundaries on mixed content, pass-through included") {
-    import spark.implicits._
-    // alpha words carry </w> from the seed; the r16 extension gives
-    // pass-through types (xyz9, 42) the SAME marker, so splitting the
-    // token concatenation on the marker IS word-boundary recovery —
-    // uniformly, with no side table of which words were alpha
-    val d = docs("ab ab ab abc abc xyz9 ab 42")
-    val merges = TextAnalysis.learnBpeMerges(d, 2, eowMarker = true)
-    val (enc, seg) = TextAnalysis.bpeEncodeTokens(d, merges, eowMarker = true)
-    val seqStr = enc.orderBy("doc_id").select("seq").as[String].head()
-    val words = seqStr.split(" ").mkString("").split("</w>", -1).toSeq
-      .filter(_.nonEmpty)
-    assert(words == Seq("ab", "ab", "ab", "abc", "abc", "xyz9", "ab", "42"),
-      s"recovered: $words from '$seqStr'")
-    seg.unpersist()
-  }
-
-  test("marker-mode encoding round-trips once markers are stripped") {
-    val d = docs("ab ab ab abc abc", "xyz9 ab")
-    val merges = TextAnalysis.learnBpeMerges(d, 2, eowMarker = true)
-    val (enc, seg) = TextAnalysis.bpeEncodeTokens(d, merges, eowMarker = true)
-    val bad = enc.join(d, "doc_id")
-      .select(
-        concat_ws("", filter(split(col("text"), " "), w => w =!= "")).as("orig"),
-        regexp_replace(concat_ws("", split(col("seq"), " ")), "</w>", "")
-          .as("rt"))
-      .filter(col("orig") =!= col("rt"))
-    assert(bad.isEmpty, s"${bad.count()} docs fail the marker round-trip")
-    seg.unpersist()
   }
 
   // ───────────────────── fold-depth guard (segmentTypes) ─────────────────────

@@ -357,112 +357,6 @@ class GenerativePropertiesSpec extends SparkSpec {
     }
   }
 
-  /** (s, e, h) triples off the GEAR variant's eval. */
-  private def gearChunks(text: String): Seq[(Long, Long, String)] = {
-    val arr = graft.functions.GearChunks.chunks(
-      org.apache.spark.unsafe.types.UTF8String.fromString(text))
-    (0 until arr.numElements()).map { i =>
-      val r = arr.getStruct(i, 3)
-      (r.getLong(0), r.getLong(1), r.getUTF8String(2).toString)
-    }
-  }
-
-  test("cdc_chunks_gear exactly partitions any text; every hash is the chunk's md5") {
-    // the OUTPUT contract is identical to cdc_chunks' — only the
-    // boundary rule differs
-    forAll(textGen, n = 12) { text =>
-      val ch = gearChunks(text)
-      val n = cps(text).length
-      if (n == 0) assert(ch.isEmpty)
-      else {
-        assert(ch.head._1 == 1L && ch.last._2 == n.toLong)
-        assert(ch.zip(ch.tail).forall { case ((_, e, _), (s2, _, _)) => s2 == e + 1 })
-        assert(ch.map { case (s, e, _) => cpSlice(text, s, e) }.mkString == text)
-        assert(ch.forall { case (s, e, h) => h == md5hex(cpSlice(text, s, e)) })
-      }
-    }
-  }
-
-  test("gear boundaries are phase-invariant beyond the 64-byte shift-register margin") {
-    // gear's rolling register carries the trailing ~64 BYTES (bit 63 is
-    // the oldest surviving contribution), so the invariance margin is
-    // byte-measured: every content boundary of `text` whose position
-    // has >= 64 preceding bytes reappears in `prefix + text` at the
-    // shifted position, for ANY prefix — and vice versa.
-    def byteOff(s: String, cpPos: Long): Int =
-      new String(cps(s).take(cpPos.toInt).toArray, 0, cpPos.toInt)
-        .getBytes("UTF-8").length
-    val gen = for { p <- textGen; t <- textGen } yield (p, t)
-    forAll(gen, n = 12) { case (prefix, text) =>
-      val np = cps(prefix).length
-      val nt = cps(text).length
-      whenever(nt >= 2) {
-        def contentEnds(s: String): Set[Long] = {
-          val n = cps(s).length
-          gearChunks(s).map(_._2).filter(_ < n).toSet
-        }
-        val direct = contentEnds(text)
-          .filter(i => byteOff(text, i) >= 64)
-        val shifted = contentEnds(prefix + text)
-          .filter(_ > np).map(_ - np)
-          .filter(i => byteOff(text, i) >= 64)
-          .filter(_ < nt)
-        assert(shifted == direct,
-          s"prefix len $np moved gear boundaries: $shifted vs $direct")
-      }
-    }
-  }
-
-  test("gear mask widths nest: every (k+1)-bit boundary is a k-bit boundary") {
-    // the r13 mask dial's structural law: the mask covers the TOP bits,
-    // so zeroing k+1 of them implies zeroing k — wider masks can only
-    // REMOVE boundaries (longer chunks), never move or add them. A
-    // violation would mean the dial changes the cut-law, not just rate.
-    def ends(text: String, bits: Int): Set[Long] = {
-      val arr = graft.functions.GearChunks.chunks(
-        org.apache.spark.unsafe.types.UTF8String.fromString(text), bits)
-      (0 until arr.numElements()).map(i => arr.getStruct(i, 3).getLong(1)).toSet
-    }
-    forAll(textGen, n = 10) { text =>
-      whenever(cps(text).nonEmpty) {
-        val n = cps(text).length.toLong
-        def content(bits: Int) = ends(text, bits) - n // forced end excluded
-        assert(content(5).subsetOf(content(4)))
-        assert(content(4).subsetOf(content(3)))
-        // and the default equals 4 bits
-        assert(ends(text, 4) ==
-          gearChunks(text).map(_._2).toSet)
-      }
-    }
-  }
-
-  test("gear maskBits out of [1, 63] fails at ANALYSIS, not per-task (r13 ADVICE)") {
-    // the argument is required foldable, so the range is knowable at
-    // analysis time — an out-of-range literal must surface as an
-    // AnalysisException when the plan is built, never as a per-task
-    // IllegalArgumentException at execution
-    graft.functions.VectorExpressions.ensureRegistered(spark)
-    import org.apache.spark.sql.functions.expr
-    for (bad <- Seq(0, -1, 64)) {
-      val e = intercept[org.apache.spark.sql.AnalysisException] {
-        spark.range(1).select(expr(s"cdc_chunks_gear('abc', $bad)")).queryExecution.analyzed
-      }
-      assert(e.getMessage.contains("maskBits"), s"bits=$bad: ${e.getMessage}")
-    }
-    // the boundary values analyze and execute
-    for (ok <- Seq(1, 63))
-      spark.range(1).select(expr(s"cdc_chunks_gear('abc def ghi', $ok)")).collect()
-  }
-
-  test("gear and md5 boundary SETS differ (same cut-law, different chunker — documented)") {
-    // not a defect: the semantics delta GearChunks' scaladoc declares.
-    // Find at least one generated text the two rules cut differently.
-    val texts = (0 until 40).map(i => s"seed$i " + ("the quick brown fox " * 8) + i)
-    val differs = texts.exists(t =>
-      cdc(t).map(c => (c._1, c._2)) != gearChunks(t).map(c => (c._1, c._2)))
-    assert(differs, "expected the two boundary rules to disagree somewhere")
-  }
-
   test("cdc boundaries are phase-invariant: any prefix shifts them, never moves them") {
     // q107's load-bearing claim, generatively: a boundary decision reads
     // only the trailing w code points, so every boundary of `text` at

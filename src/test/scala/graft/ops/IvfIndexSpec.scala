@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   */
 class IvfIndexSpec extends SparkSpec {
 
+  private def fsOf(store: String) = new org.apache.hadoop.fs.Path(store)
+    .getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The store's current (highest-numbered) meta file. */
+  private def metaFile(store: String) =
+    IvfIndex.metaPath(fsOf(store), store).get
+
   test("Lloyd training improves the quantizer objective vs the md5 sample (r15 VERDICT #3 law)") {
     graft.functions.VectorExpressions.ensureRegistered(spark)
     val emb = graft.model.Tables(spark, sf(), "embeddings")
@@ -268,9 +275,9 @@ class IvfIndexSpec extends SparkSpec {
 
     // a store without the drift baseline refuses BEFORE mutating: a
     // post-failure retry must not duplicate the batch
-    val fs = new org.apache.hadoop.fs.Path(store, "_ivf_meta.json")
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(store, "_ivf_meta.json"), false)
+    val fs = fsOf(store)
+    while (IvfIndex.metaPath(fs, store).nonEmpty)
+      fs.delete(metaFile(store), false)
     val e = intercept[IllegalStateException] {
       IvfIndex.append(clones, model, store)
     }
@@ -332,8 +339,8 @@ class IvfIndexSpec extends SparkSpec {
     // pre-sha v2 meta (k/dim/trainN but no centroid_sha): identity falls
     // back to the shape check, so the reseeded append PROCEEDS — the
     // refusal above is exactly what v3 adds
-    val p = new org.apache.hadoop.fs.Path(store, "_ivf_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val p = metaFile(store)
+    val fs = fsOf(store)
     val m = IvfIndex.readMeta(spark, store)
     val out = fs.create(p, true)
     try out.write(
@@ -452,8 +459,8 @@ class IvfIndexSpec extends SparkSpec {
     val model = IvfIndex.build(emb, k = 8, store)
 
     // rewrite the meta in the pre-identity single-field shape
-    val p = new org.apache.hadoop.fs.Path(store, "_ivf_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val p = metaFile(store)
+    val fs = fsOf(store)
     val baseline = IvfIndex.readMeta(spark, store).meanAssignCosine
     val out = fs.create(p, true)
     try out.write(s"""{"mean_assign_cosine": $baseline}""".getBytes("UTF-8"))
@@ -477,10 +484,12 @@ class IvfIndexSpec extends SparkSpec {
     val store = Files.createTempDirectory("ivf_crc").toString
     val model = IvfIndex.build(emb, k = 4, store)
 
-    // simulate a store written by the pre-r13 code path: meta created
-    // through the CHECKSUMMED fs, which drops a .crc sidecar next to it
-    val p = new org.apache.hadoop.fs.Path(store, "_ivf_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // a meta created through the CHECKSUMMED fs drops a .crc sidecar
+    // next to it; rewriting the bytes through the raw fs then leaves
+    // that sidecar stale
+    val p = metaFile(store)
+    val fs = fsOf(store)
+    val before = IvfIndex.readMeta(spark, store)
     val body = {
       val in = graft.streaming.Rollup.rawFs(fs).open(p)
       val bos = new java.io.ByteArrayOutputStream()
@@ -492,17 +501,45 @@ class IvfIndexSpec extends SparkSpec {
       bos.toByteArray
     }
     val out = fs.create(p, true) // checksummed create → .crc sidecar
-    try out.write(body) finally out.close()
-    val crc = new org.apache.hadoop.fs.Path(store, "._ivf_meta.json.crc")
+    try out.write(body ++ "   ".getBytes("UTF-8")) finally out.close()
+    val crc = new org.apache.hadoop.fs.Path(store, s".${p.getName}.crc")
     assert(fs.exists(crc), "precondition: checksummed create left a sidecar")
+    val raw = graft.streaming.Rollup.rawFs(fs).create(p, true)
+    try raw.write(body) finally raw.close()
+    // the raw-fs read never verifies the stale sidecar
+    assert(IvfIndex.readMeta(spark, store) == before)
 
-    // calibrate rewrites the meta via rename — the OLD sidecar would now
-    // mismatch the new bytes; both the sidecar cleanup and the raw-fs
-    // read must keep the store's baseline readable
+    // calibrate commits the next numbered meta; the store stays readable
     IvfIndex.calibrate(spark, store, model,
       nprobes = Seq(1, 4), topK = 2, sampleProbes = 5)
-    assert(!fs.exists(crc), "writeMeta must drop the stale sidecar")
     val meta = IvfIndex.readMeta(spark, store) // must not ChecksumException
     assert(meta.recallCurve.nonEmpty && meta.version == 4)
+  }
+
+  test("a reader racing writeMeta reads the old or the new meta, never an error") {
+    graft.functions.VectorExpressions.ensureRegistered(spark)
+    val emb = graft.model.Tables(spark, sf(), "embeddings")
+    val store = Files.createTempDirectory("ivf_meta_race").toString
+    IvfIndex.build(emb, k = 4, store)
+    val base = IvfIndex.readMeta(spark, store)
+    val writes = 300
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        try seen.add(IvfIndex.readMeta(spark, store).trainN)
+        catch { case t: Throwable => failures.add(t) }
+      })
+    reader.start()
+    try (1 to writes).foreach(i =>
+      IvfIndex.writeMeta(spark, store, base.copy(trainN = base.trainN + i)))
+    finally { done.set(true); reader.join() }
+    assert(failures.isEmpty,
+      s"${failures.size} reads failed, first: ${failures.peek()}")
+    import scala.jdk.CollectionConverters._
+    val ks = seen.asScala.toSeq
+    assert(ks.nonEmpty && ks.zip(ks.drop(1)).forall { case (a, b) => a <= b })
+    assert(IvfIndex.readMeta(spark, store).trainN == base.trainN + writes)
   }
 }

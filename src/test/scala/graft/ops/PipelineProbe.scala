@@ -1,12 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Composed-pipeline decade probe (test-scoped main) — wall-clock and
-  * output volume for the FULL published TrainingPipeline shape (every
-  * optional stage ON: span scrub, domain mixing, training-order export)
-  * at corpus decades. The per-stage queries all have canonical soak
+  * output volume for the r12 TrainingPipeline shape (span scrub,
+  * domain mixing and training-order export ON) at corpus decades. The per-stage queries all have canonical soak
   * rows; THIS measures their composition — shared scans, cache
   * contracts, and stage interleaving included — which per-query rows
   * cannot attribute.
@@ -24,77 +22,30 @@ object PipelineProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PipelineProbe <sfDir> [<sfDir> ...]")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.localSession(cpus, cpus)
     graft.functions.VectorExpressions.ensureRegistered(spark)
 
     for (dir <- args) {
       val docs = graft.model.Tables(spark, dir, "documents")
       val train = docs.filter(col("doc_id") % 2 === 0)
       val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-      // two shapes per decade: the r12 record's stage set (replayable
-      // baseline), and the r13 surface — gear:3 boundary, fixpoint
-      // scrub, PII redaction. Strict contiguity is deliberately NOT in
-      // the fixpoint shape: composing contiguousOnly with the fixpoint
-      // re-runs the pair-chain confirm EVERY round while rejected spans
-      // recur identically — measured round-dominated (174/210 s at
-      // 1×/10×, flat across decades) and memory-heavy (OOM'd an 8 GB
-      // fork at 1×). Strict mode's natural reading is ONE-PASS (cut
-      // every contiguous-dup span of the ORIGINAL text) and it is
-      // priced separately in ChunkerAbProbe.
-      val shapes = Seq(
-        "r12" -> TrainingPipeline.Config(audit = false,
-          scrubDupSpans = true, mixTokenBudgetFrac = Some(0.5),
-          exportOrderSeed = Some("probe"), exportShards = 64),
-        "r13-full" -> TrainingPipeline.Config(audit = false,
-          scrubDupSpans = true, scrubBoundary = "gear:3",
-          scrubFixpoint = true, redactPii = true,
-          mixTokenBudgetFrac = Some(0.5),
-          exportOrderSeed = Some("probe"), exportShards = 64),
-        // r14: the r13 surface + the tokenizer chain (q114 learn +
-        // q116 type-level encode over the survivors) — the full
-        // published stage set
-        "r14-full" -> TrainingPipeline.Config(audit = false,
-          scrubDupSpans = true, scrubBoundary = "gear:3",
-          scrubFixpoint = true, redactPii = true,
-          mixTokenBudgetFrac = Some(0.5),
-          exportOrderSeed = Some("probe"), exportShards = 64,
-          bpeEncode = true))
-      for ((shape, cfg) <- shapes) {
-        val t0 = System.nanoTime()
-        val res = TrainingPipeline.prepare(train, eval_, cfg)
-        val nSurv = res.survivors.count()
-        val nBins = res.packed.count()
-        val nOrder = res.order.get.count()
-        val nBpe = res.bpe.map(_.count())
-        val wall = (System.nanoTime() - t0) / 1e9
-        // bpe rows == survivors with >= 1 token. NOT simply nSurv: the
-        // quality gate drops token-less INPUT docs, but the span scrub
-        // rewrites text while keeping rows (documented contract), and
-        // on this dup-heavy word-soup fixture the fixpoint scrub cuts
-        // some survivors' text to EMPTY (measured: 9 of 24 at 1× under
-        // the r14-full dials) — those legitimately have no encoding.
-        // Untimed (reads the survivors cache): the wall above covers
-        // the four production actions only.
-        val nTok = res.survivors.filter(
-          size(filter(split(col("text"), " "), w => w =!= "")) > 0).count()
-        res.cleanup()
-        spark.catalog.clearCache()
-        require(nOrder == nSurv,
-          s"export law violated: order=$nOrder survivors=$nSurv")
-        nBpe.foreach(n => require(n == nTok,
-          s"bpe law violated: bpe=$n tokenized-survivors=$nTok"))
-        require(nSurv > 0 && nBins > 0, s"empty pipeline output at $dir")
-        println(f"[pipeline-probe] $dir shape=$shape wall=$wall%.1fs " +
-          f"survivors=$nSurv bins=$nBins order=$nOrder" +
-          nBpe.map(n => s" bpe=$n").getOrElse(""))
-      }
+      // the r12 record's stage set (replayable baseline)
+      val cfg = TrainingPipeline.Config(audit = false,
+        scrubDupSpans = true, mixTokenBudgetFrac = Some(0.5),
+        exportOrderSeed = Some("probe"), exportShards = 64)
+      val t0 = System.nanoTime()
+      val res = TrainingPipeline.prepare(train, eval_, cfg)
+      val nSurv = res.survivors.count()
+      val nBins = res.packed.count()
+      val nOrder = res.order.get.count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      res.cleanup()
+      spark.catalog.clearCache()
+      require(nOrder == nSurv,
+        s"export law violated: order=$nOrder survivors=$nSurv")
+      require(nSurv > 0 && nBins > 0, s"empty pipeline output at $dir")
+      println(f"[pipeline-probe] $dir shape=r12 wall=$wall%.1fs " +
+        f"survivors=$nSurv bins=$nBins order=$nOrder")
     }
     spark.stop()
   }

@@ -91,36 +91,6 @@ class ScrubSpansSpec extends SparkSpec {
       "fixture invariant: stride sampling must be blind to this phase pair")
   }
 
-  test("gear boundary: same cut-law on a margin-respecting fixture (canonical kept, span cut, complement exact)") {
-    // gear's invariance margin is the 64-BYTE shift register (vs md5's
-    // w-1 = 7 chars): only boundaries with >= 64 shared trailing bytes
-    // are guaranteed common, so the 120-char boilerplate the md5 test
-    // uses leaves < minSpan of guaranteed-shared interior. The gear
-    // fixture uses a 300-char span — the regime the scaladoc prescribes
-    // (production scrub spans, e.g. Lee et al.'s 50 TOKENS ≈ 250+
-    // chars, dwarf the register; tiny minSpan values belong to the md5
-    // rule).
-    val gBoiler = junk(29, 300, "abcdefgh ")
-    val gA = junk(11, 100, "xyzuvw ") + gBoiler + junk(13, 80, "pqrst ")
-    val gB = junk(17, 105, "klmno ") + gBoiler + junk(19, 90, "defgh ")
-    val docs = mk(1L -> gA, 2L -> gB, 3L -> docC)
-    val out = Dedup.scrubDupSpans(docs, boundary = "gear")
-      .orderBy("doc_id").collect()
-    val byId = out.map(r => r.getLong(0) ->
-      (r.getAs[String]("scrubbed"), r.getLong(r.fieldIndex("n_spans_cut")))).toMap
-    assert(byId(1L)._1 == gA && byId(1L)._2 == 0L)
-    assert(byId(3L)._1 == docC && byId(3L)._2 == 0L)
-    val (b2, n2) = byId(2L)
-    assert(n2 == 1L, s"expected 1 span cut in doc 2, got $n2")
-    // >= 300 - 64 - (2 chunk lengths of edge slack) must go
-    assert(b2.length < gB.length - 150,
-      s"expected >150 chars cut, got ${gB.length - b2.length}")
-    // complement law holds under any chunker: prefix + suffix of gB
-    assert((0 to b2.length).exists(i =>
-      gB.startsWith(b2.substring(0, i)) && gB.endsWith(b2.substring(i))),
-      "scrubbed text must be original minus one contiguous span")
-  }
-
   test("idempotence on constructed docs: a second pass rewrites nothing") {
     val docs = mk(1L -> docA, 2L -> docB, 3L -> docC)
     val once = Dedup.scrubDupSpans(docs)
@@ -153,123 +123,6 @@ class ScrubSpansSpec extends SparkSpec {
         "second pass must cut nothing on this fixture")
     } finally {
       out.unpersist()
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("contiguousOnly: verbatim-shared span still cut, mosaic span preserved") {
-    // MOSAIC fixture: doc 3 contains R (400 chars) contiguously; doc 1
-    // holds only R's first 260 chars, doc 2 only its last 260 (overlap
-    // 120 keeps the seam chunks foreign with full interior context) —
-    // every interior chunk of R is duplicated SOMEWHERE, so the default
-    // scrub merges ONE long run across the window seam and cuts it; but
-    // R's full run occurs contiguously in no other doc, so the strict
-    // mode must keep it. (The windows are sized so each side almost
-    // surely contributes chunks the other window lacks — a 120-char R
-    // failed here because its sparse boundary draw left window 1
-    // covering nothing beyond window 2.)
-    val R = junk(41, 400, "abcdefgh ")
-    val d1 = junk(43, 60, "xyzuvw ") + R.substring(0, 260) + junk(47, 60, "pqrst ")
-    val d2 = junk(53, 60, "klmno ") + R.substring(140) + junk(59, 60, "wxyzq ")
-    val c = junk(61, 60, "qrstu ") + R + junk(67, 60, "vutsr ")
-    // docs 4/5 reuse the verbatim boiler pair: 5 must STILL be cut in
-    // strict mode (its span occurs contiguously in doc 4)
-    val docs = mk(1L -> d1, 2L -> d2, 3L -> c, 4L -> docA, 5L -> docB)
-
-    val texts = Map(1L -> d1, 2L -> d2, 3L -> c, 4L -> docA, 5L -> docB)
-    // SPAN-LEVEL LAW (geometry-independent): every confirmed span's
-    // exact text occurs in another doc; no unconfirmed span's does.
-    // (A >= 50 sub-span of R lying inside ONE helper window is genuine
-    // contiguous duplication — strict mode rightly keeps cutting those;
-    // only the cross-window mosaic remainder must survive.)
-    val all = Dedup.dupSpanRanges(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val confirmed = Dedup.confirmContiguous(docs, Dedup.dupSpanRanges(docs))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(confirmed.subsetOf(all))
-    assert(all.exists(_._1 == 3L), "fixture precondition: doc 3 has a detected span")
-    def verbatimElsewhere(s: (Long, Long, Long)): Boolean = {
-      val sub = texts(s._1).substring(s._2.toInt - 1, s._3.toInt)
-      texts.exists { case (id, t) => id != s._1 && t.contains(sub) }
-    }
-    confirmed.foreach(s => assert(verbatimElsewhere(s),
-      s"confirmed span $s does not occur verbatim elsewhere"))
-    val mosaic = all -- confirmed
-    assert(mosaic.nonEmpty, "fixture precondition: a mosaic span exists")
-    mosaic.foreach(s => assert(!verbatimElsewhere(s),
-      s"unconfirmed span $s DOES occur verbatim elsewhere (confirm too strict)"))
-
-    // SCRUB-LEVEL: strict cuts a subset, keeps strictly more of the
-    // mosaic doc, and still cuts the verbatim boiler pair
-    val loose = Dedup.scrubDupSpans(docs).orderBy("doc_id").collect()
-      .map(r => r.getLong(0) ->
-        (r.getAs[String]("scrubbed"), r.getLong(r.fieldIndex("n_spans_cut")))).toMap
-    val strict = Dedup.scrubDupSpans(docs, contiguousOnly = true)
-      .orderBy("doc_id").collect()
-      .map(r => r.getLong(0) ->
-        (r.getAs[String]("scrubbed"), r.getLong(r.fieldIndex("n_spans_cut")))).toMap
-    assert(strict(5L)._2 == 1L && strict(5L)._1.length < docB.length,
-      "strict mode must still cut the verbatim-shared span")
-    assert(texts.keys.forall(id =>
-      strict(id)._2 <= loose(id)._2 && strict(id)._1.length >= loose(id)._1.length),
-      "strict must never cut more than default")
-    if (mosaic.exists(_._1 == 3L))
-      assert(strict(3L)._1.length > loose(3L)._1.length,
-        "strict must keep the mosaic portion of doc 3")
-  }
-
-  test("edge tolerance laws: strict confirms a subset of tolerant; the mosaic rejects under both") {
-    // same fixture as the contiguousOnly test — the interior-pairs
-    // relaxation (r14) must only ever ADD confirmations (it weakens
-    // the required-pair set), and the cross-window mosaic must stay
-    // rejected under BOTH modes (its interior pairs are adjacencies of
-    // the probing doc, co-resident in no single other doc). The
-    // recall-gain existence claim is the probe's job on the organic
-    // corpus (SpanPrecisionProbe: rejected_tol verbatim rate 0.000 at
-    // sf0.1 vs rejected_strict 0.200) — this spec pins the laws.
-    val R = junk(41, 400, "abcdefgh ")
-    val d1 = junk(43, 60, "xyzuvw ") + R.substring(0, 260) + junk(47, 60, "pqrst ")
-    val d2 = junk(53, 60, "klmno ") + R.substring(140) + junk(59, 60, "wxyzq ")
-    val c = junk(61, 60, "qrstu ") + R + junk(67, 60, "vutsr ")
-    val docs = mk(1L -> d1, 2L -> d2, 3L -> c, 4L -> docA, 5L -> docB)
-    val texts = Map(1L -> d1, 2L -> d2, 3L -> c, 4L -> docA, 5L -> docB)
-    val all = Dedup.dupSpanRanges(docs)
-    def spanSet(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val strictC = spanSet(Dedup.confirmContiguous(docs, all, edgeTolerant = false))
-    val tolC = spanSet(Dedup.confirmContiguous(docs, all, edgeTolerant = true))
-    assert(strictC.subsetOf(tolC),
-      s"tolerant must confirm a superset; strict-only: ${strictC -- tolC}")
-    // the mosaic (any doc-3 span NOT verbatim elsewhere) rejects in both
-    val allSet = spanSet(all)
-    def verbatimElsewhere(s: (Long, Long, Long)): Boolean = {
-      val sub = texts(s._1).substring(s._2.toInt - 1, s._3.toInt)
-      texts.exists { case (id, t) => id != s._1 && t.contains(sub) }
-    }
-    val mosaics = allSet.filterNot(verbatimElsewhere)
-    assert(mosaics.nonEmpty, "fixture precondition: a mosaic span exists")
-    mosaics.foreach { m =>
-      assert(!tolC.contains(m), s"tolerant confirmed the mosaic $m")
-      assert(!strictC.contains(m), s"strict confirmed the mosaic $m")
-    }
-  }
-
-  test("pipeline fixpoint scrub: survivors' text carries no qualifying span") {
-    val docs = graft.model.Tables(spark, sf(), "documents")
-    val train = docs.filter(col("doc_id") % 2 === 0)
-    val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val res = TrainingPipeline.prepare(train, eval_,
-      TrainingPipeline.Config(scrubDupSpans = true, scrubFixpoint = true))
-    try {
-      assert(res.audit.toMap.contains("span_scrubbed"))
-      // the fixpoint law END TO END: one more scrub pass over the
-      // surviving corpus cuts nothing (the one-pass stage can leave the
-      // organic re-adjacency tail; the fixpoint stage cannot)
-      val again = Dedup.scrubDupSpans(res.survivors.select("doc_id", "text"))
-      assert(again.filter(col("n_spans_cut") > 0).isEmpty,
-        "fixpoint-scrubbed survivors must be scrub-stable")
-    } finally {
-      res.cleanup()
       spark.catalog.clearCache()
     }
   }

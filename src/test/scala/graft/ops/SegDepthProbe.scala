@@ -62,7 +62,11 @@ object SegDepthProbe {
     // 8-14 chars) under the same padded merge lists — per-stage cost is
     // now 100k regexp scans, the regime a real corpus vocabulary
     // (Heaps, 10⁵-10⁸ types) runs in.
-    val synth = SynthTypes.types(spark)
+    val synth = spark.range(100000).selectExpr(
+      """concat('w', translate(lpad(CAST(id AS STRING), 7, '0'),
+        |'0123456789', 'abcdefghij'),
+        |substring('abcdefghijklmnopqrstuvwxyz', 1 + CAST(id % 7 AS INT),
+        |CAST(id % 7 AS INT))) AS w""".stripMargin).localCheckpoint(true)
     val nSynth = synth.count()
     println(s"[segdepth] phase2 synthetic types=$nSynth")
     for (n <- Seq(20, 200, 1000)) {

@@ -238,64 +238,6 @@ class TrainingPipelineSpec extends SparkSpec {
     } finally { res.cleanup(); spark.catalog.clearCache() }
   }
 
-  test("bpeEncode dials: batched learner + </w> marker round-trip after stripping") {
-    val docs = graft.model.Tables(spark, sf(), "documents")
-    val train = docs.filter(col("doc_id") % 2 === 0)
-    val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val res = TrainingPipeline.prepare(train, eval_,
-      TrainingPipeline.Config(audit = false, bpeEncode = true,
-        bpeBatched = Some((3, 4)), bpeEowMarker = true))
-    try {
-      val bpe = res.bpe.getOrElse(fail("bpe export missing"))
-      val sv = res.survivors.select(col("doc_id"),
-        concat_ws("", filter(split(col("text"), " "), w => w =!= ""))
-          .as("orig"))
-        .filter(length(col("orig")) > 0)
-      val joined = sv.join(bpe, Seq("doc_id"), "left")
-      assert(joined.filter(col("seq").isNull).isEmpty,
-        "a tokenized survivor is missing from the batched bpe export")
-      // marker-mode law: concatenation reconstructs the words only
-      // after the `</w>` markers strip (BpeSpec's law, composed here)
-      assert(joined.filter(
-        regexp_replace(regexp_replace(col("seq"), " ", ""), "</w>", "")
-          =!= col("orig")).isEmpty,
-        "batched+marker bpe round-trip must reconstruct the words")
-      // every alphabetic-token doc's seq actually carries markers
-      // (non-alpha tokens pass through whole and carry none)
-      assert(joined.filter(col("seq").contains("</w>")).count() > 0,
-        "marker mode produced no </w> symbols at all")
-    } finally { res.cleanup(); spark.catalog.clearCache() }
-  }
-
-  test("bpeEncode dials: hot-partitioned learner with derived k round-trips and out-learns batched") {
-    val docs = graft.model.Tables(spark, sf(), "documents")
-    val train = docs.filter(col("doc_id") % 2 === 0)
-    val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val res = TrainingPipeline.prepare(train, eval_,
-      TrainingPipeline.Config(audit = false, bpeEncode = true,
-        bpeHotPart = Some(6)))
-    try {
-      val bpe = res.bpe.getOrElse(fail("bpe export missing"))
-      val sv = res.survivors.select(col("doc_id"),
-        concat_ws("", filter(split(col("text"), " "), w => w =!= ""))
-          .as("orig"))
-        .filter(length(col("orig")) > 0)
-      val joined = sv.join(bpe, Seq("doc_id"), "left")
-      assert(joined.filter(col("seq").isNull).isEmpty,
-        "a tokenized survivor is missing from the hot-part bpe export")
-      assert(joined.filter(
-        regexp_replace(col("seq"), " ", "") =!= col("orig")).isEmpty,
-        "hot-part bpe round-trip must reconstruct the survivor words")
-      // the derived-k hot rule must learn at least as much per round as
-      // the same-rounds batched rule at its k = 8 declared dial — the
-      // yield law, composed through the pipeline entry point
-      val corpus = res.survivors.select("doc_id", "text")
-      val hot = TextAnalysis.learnBpeMergesHotPart(corpus, 6, 8, 8)
-      val bat = TextAnalysis.learnBpeMergesBatched(corpus, 6, 8)
-      assert(hot.size >= bat.size, s"${hot.size} < ${bat.size}")
-    } finally { res.cleanup(); spark.catalog.clearCache() }
-  }
-
   test("cleanup() releases the caches prepare() created, in non-audit mode too") {
     val docs = graft.model.Tables(spark, sf(), "documents")
     val train = docs.filter(col("doc_id") % 2 === 0)
@@ -342,14 +284,13 @@ class TrainingPipelineSpec extends SparkSpec {
   test("the declared pipeline configs stay inside the oracle-expressible stage subset (drift tripwire)") {
     // pipelineChainSql models the mandatory chain plus one-pass md5
     // scrub, staged PII redaction, q103 mixing, and (r19, VERDICT #1)
-    // q104's keep-best-quality selection — but NOT fixpoint/contiguous
-    // scrub variants or gear boundaries; the BPE tail (r19, VERDICT #2)
-    // models only the sequential no-marker learner at the declared
-    // depth. A future default flip (or a Declared*Cfg edit enabling an
-    // unmodeled stage) must extend the generator, not silently run a
-    // stage the SQL doesn't express. The generators' own require()s
-    // guard the same envelope at construction; this pins the DECLARED
-    // configs' wiring.
+    // q104's keep-best-quality selection; the BPE tail (r19, VERDICT
+    // #2) models only the sequential learner at the declared depth. A
+    // future default flip (or a Declared*Cfg edit enabling an unmodeled
+    // stage) must extend the generator, not silently run a stage the
+    // SQL doesn't express. The generators' own require()s guard the
+    // same envelope at construction; this pins the DECLARED configs'
+    // wiring.
     // (name, cfg, expected keepBestQuality, expected bpeEncode) — the
     // heavyweight optional stages are pinned EXACTLY per config: a
     // future default flip turning the 20-round eager learner (or the
@@ -369,11 +310,8 @@ class TrainingPipelineSpec extends SparkSpec {
       assert(!c.audit, s"$name must not pay the audit counts")
       assert(c.keepBestQuality == wantBest && c.bpeEncode == wantBpe,
         s"$name keep-policy/BPE wiring drifted from its declaration: $c")
-      assert(!c.scrubFixpoint &&
-        !c.scrubContiguousOnly && c.scrubBoundary == "md5" &&
-        c.bpeHotPart.isEmpty && c.bpeBatched.isEmpty && !c.bpeEowMarker &&
-        c.bpeMerges == graft.ops.TextAnalysis.BpeMerges,
-        s"$name config enables a stage its oracle does not express: $c")
+      assert(c.bpeMerges == graft.ops.TextAnalysis.BpeMerges,
+        s"$name config sets a BPE depth its oracle does not express: $c")
     }
     // the stage wiring each declared config exists to prove
     val c126 = TrainingPipeline.DeclaredCfg
@@ -405,28 +343,14 @@ class TrainingPipelineSpec extends SparkSpec {
   }
 
   test("the oracle generators refuse configs outside their envelopes") {
-    // chain-moving stages the SQL cannot express; additive stages
-    // (exportOrderSeed, bpeEncode) deliberately pass the CHAIN check —
-    // they never move the chain, and the order/bpe tails consume them
-    for (bad <- Seq(
-        TrainingPipeline.DeclaredCfg.copy(scrubDupSpans = true,
-          scrubFixpoint = true),
-        TrainingPipeline.DeclaredCfg.copy(scrubDupSpans = true,
-          scrubBoundary = "gear")))
-      intercept[IllegalArgumentException] {
-        TrainingPipeline.pipelineOracleSql(bad)
-      }
-    // the order tail additionally needs the seed
+    // the order tail needs the seed
     intercept[IllegalArgumentException] {
       TrainingPipeline.pipelineOrderOracleSql(TrainingPipeline.DeclaredCfg)
     }
-    // the bpe tail models exactly the sequential no-marker learner at
-    // the declared merge depth — every other learner/dial refuses
+    // the bpe tail models exactly the sequential learner at the
+    // declared merge depth — any other depth refuses
     for (bad <- Seq(
         TrainingPipeline.DeclaredCfg, // bpeEncode off
-        TrainingPipeline.DeclaredBpeCfg.copy(bpeHotPart = Some(3)),
-        TrainingPipeline.DeclaredBpeCfg.copy(bpeBatched = Some((3, 4))),
-        TrainingPipeline.DeclaredBpeCfg.copy(bpeEowMarker = true),
         TrainingPipeline.DeclaredBpeCfg.copy(
           bpeMerges = graft.ops.TextAnalysis.BpeMerges + 1)))
       intercept[IllegalArgumentException] {

@@ -191,6 +191,46 @@ class RawStoreSpec extends SparkSpec {
       .filter(col("p_date") === lit("2024-01-01").cast("date"))) == Seq(12.0))
   }
 
+  test("a reader racing bumpLastBatch sees the old or the new stamp, " +
+      "never an error or a step back") {
+    val dir = Files.createTempDirectory("rawstore_batch_race").toString
+    val fs = fsOf(dir)
+    RawStore.bumpLastBatch(fs, dir, 0L)
+    val bumps = 2000
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() => {
+      var prev = RawStore.versionStamp(fs, dir)
+      while (!done.get()) {
+        try {
+          val v = RawStore.versionStamp(fs, dir)
+          if (v < prev) failures.add(s"stamp went back: $prev -> $v")
+          prev = v
+        } catch { case t: Throwable => failures.add(t.toString) }
+      }
+    })
+    reader.start()
+    try (1 to bumps).foreach(b => RawStore.bumpLastBatch(fs, dir, b.toLong))
+    finally { done.set(true); reader.join() }
+    assert(failures.isEmpty,
+      s"${failures.size} reads failed, first: ${failures.peek()}")
+    assert(RawStore.versionStamp(fs, dir) == bumps + 1L)
+  }
+
+  test("bumpLastBatch: a replayed id is a no-op, a fresh stream's ids " +
+      "take over, and a legacy _LAST_BATCH file reads as no batch") {
+    val dir = Files.createTempDirectory("rawstore_batch_ids").toString
+    val fs = fsOf(dir)
+    Files.writeString(java.nio.file.Paths.get(dir, "_LAST_BATCH"), "41")
+    assert(RawStore.versionStamp(fs, dir) == 0L) // batch -1, manifest 0
+    RawStore.bumpLastBatch(fs, dir, 41L)
+    RawStore.bumpLastBatch(fs, dir, 41L) // replay
+    assert(RawStore.versionStamp(fs, dir) == 42L)
+    // a new checkpoint over the same sink restarts batch ids at 0
+    RawStore.bumpLastBatch(fs, dir, 0L)
+    assert(RawStore.versionStamp(fs, dir) == 1L)
+  }
+
   test("appends into a remapped day's plain dir fail the read loudly " +
       "instead of silently vanishing") {
     val dir = Files.createTempDirectory("rawstore_rogue").toString
