@@ -199,8 +199,8 @@ object TextAnalysis {
   private def bpeSeed(w: Column): Column =
     concat(lit(" "), rtrim(regexp_replace(w, "(.)", "$1  ")), lit(" "))
 
-  /** The (freq, symbol-sequence) vocab frame both learners iterate —
-    * ONE corpus pass, eagerly checkpointed (see learnBpeMerges' cache
+  /** The (freq, symbol-sequence) vocab frame every learner iterates —
+    * ONE corpus pass, eagerly checkpointed (see learnRounds' cache
     * note). Shared so the "batched at k=1 is bit-for-bit sequential"
     * law holds by construction, not by parallel maintenance.
     */
@@ -365,8 +365,8 @@ object TextAnalysis {
     * and the entire iterative loop runs over that vocab table — per
     * round one pair aggregation (vocab-sized, map-side combinable) and
     * one LIMIT-1 collect (the q100/fixpoint bounded-scalar-action
-    * discipline), with per-round persist → materialize → release-
-    * previous cache hygiene. The corpus is never rescanned.
+    * discipline), with a lazy per-round localCheckpoint (see
+    * learnRounds). The corpus is never rescanned.
     *
     * Representation (shared verbatim with the DuckDB oracle): a word's
     * symbol sequence is the string ` s1  s2  …  sk ` — every symbol
@@ -382,38 +382,15 @@ object TextAnalysis {
     */
   private[graft] def learnBpeMerges(docs: DataFrame, nMerges: Int)
       : Seq[(Long, String, String, String, Long)] = {
-    // localCheckpoint per round, NOT persist/release-previous: Spark's
-    // CacheManager recaches dependent cached plans when a parent cache
-    // is dropped, so the persist idiom silently rebuilds each round
-    // from the round-0 lineage — measured time-DOUBLING per round
-    // before this was caught. Checkpointing truncates the lineage (the
-    // q100 star-contraction discipline); superseded round blocks are
-    // freed by the ContextCleaner once unreferenced.
-    var seqs = bpeVocabSeqs(docs)
-    val out = Seq.newBuilder[(Long, String, String, String, Long)]
-    withLearnerConf(docs.sparkSession, seqs.rdd.getNumPartitions) {
-      for (k <- 1 to nMerges) {
-        val best = bpePairCounts(seqs).limit(1).collect()
-        // fail loudly rather than silently diverge from the unrolled
-        // oracle: exhausting mergeable pairs inside nMerges rounds
-        // would need the whole vocab collapsed to single symbols
-        require(best.nonEmpty,
-          s"BPE: no mergeable pairs left at round $k of $nMerges")
-        val (a, b, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        out += ((k.toLong, a, b, a + b, cnt))
-        // a, b are [a-z]+ by seeding/concatenation — safe SQL string
-        // literals.
-        // Lazy checkpoint, NO materializing count: the next round's pair
-        // aggregation is the first action and materializes it then —
-        // one driver-synchronous job per round instead of two (and the
-        // final round's seqs, which nothing consumes, never computes).
-        seqs = seqs
-          .withColumn("s", expr(s"replace(s, ' $a  $b ', ' $a$b ')"))
-          .localCheckpoint(false)
-      }
-    }
-    out.result()
+    // the k = 1 batched learner IS this schedule (BpeSpec law): one
+    // LIMIT-1 collect and one replace per round over the shared loop.
+    // Fail loudly rather than silently diverge from the unrolled
+    // oracle: exhausting mergeable pairs inside nMerges rounds would
+    // need the whole vocab collapsed to single symbols
+    val out = learnBpeMergesBatched(docs, nMerges, 1)
+    require(out.size == nMerges,
+      s"BPE: no mergeable pairs left at round ${out.size + 1} of $nMerges")
+    out
   }
 
   /** BATCHED BPE merge learning (r14 VERDICT #2 — the path to realistic
@@ -457,13 +434,20 @@ object TextAnalysis {
       keepAllHigherRanks)
   }
 
-  /** The round-loop scaffolding BOTH batched learners share (factored
-    * r16 self-review: the rank counter, exhaustion early-exit, and
-    * batch-apply must not be maintained twice): per round, `candidates`
+  /** The round-loop scaffolding every BPE learner shares (the rank
+    * counter, exhaustion early-exit, and batch-apply are maintained
+    * once; [[learnBpeMerges]] is its k = 1 call): per round, `candidates`
     * runs the one bounded collect, `keep` the pure driver-side rule.
     * A round with no candidates left ends the loop (r15 ADVICE) —
     * output-equivalent to running the remaining rounds, whose unrolled
     * oracle stages are no-ops.
+    *
+    * Cache note: each round's apply is a localCheckpoint, NOT
+    * persist/release-previous — Spark's CacheManager recaches dependent
+    * cached plans when a parent cache is dropped, so the persist idiom
+    * silently rebuilds each round from the round-0 lineage (measured
+    * time-DOUBLING per round). Superseded round blocks are freed by the
+    * ContextCleaner once unreferenced.
     */
   private def learnRounds(seqs0: DataFrame, nRounds: Int)(
       candidates: DataFrame => IndexedSeq[(String, String, Long)],

@@ -44,107 +44,105 @@ import org.apache.spark.sql.functions._
   */
 object TrainingPipeline {
 
-  /** Thresholds for the drop stages; defaults match the declared
-    * queries' constants where one exists. maxContamRatio defaults to
-    * effectively-full containment: on a real corpus the eval set is tiny
-    * and organic 8-gram overlap is low (0.5-0.8 thresholds are sane
-    * there), but the synthetic testdata draws train and eval from one
-    * generator vocabulary — measured train-doc contamination runs
-    * 0.90-1.0 with median 0.96 — so only ~1.0 separates "the eval doc
-    * leaked" from "same vocabulary".
+  /** The stage dials, one value each — every declared pipeline runs
+    * them, and both the Spark stages and the oracle generators below
+    * read them, so a value has exactly one home: q88's quality floor,
+    * q78's hamming radius, the decontamination ratio, q58's bin size
+    * and shard count, q103's mixing budget fraction, and q106's order
+    * seed and shard count (the BPE depth is [[TextAnalysis.BpeMerges]]).
+    * MaxContamRatio is effectively-full containment: on a real corpus
+    * the eval set is tiny and organic 8-gram overlap is low (0.5-0.8
+    * thresholds are sane there), but the synthetic testdata draws train
+    * and eval from one generator vocabulary — measured train-doc
+    * contamination runs 0.90-1.0 with median 0.96 — so only ~1.0
+    * separates "the eval doc leaked" from "same vocabulary".
     */
-  /** `audit = false` skips the four eager per-stage counts (each one an
-    * action re-triggering upstream stages): a production run gets the
-    * identical survivors/bins lazily, with an EMPTY audit trail. (Both
-    * modes still run ONE eager eval-sized job: the decontamination
-    * dispatcher's gram-set size estimate — see stage 4.) In that
-    * mode the intermediate persists are left in place for the caller's
-    * first action to populate (diamond subplans still compute once) —
-    * and `Result.cleanup()` releases them once the caller has
-    * materialized what it needs (in audit mode the upstream caches are
-    * already released eagerly; cleanup then frees only `survivors`).
+  private[graft] val MinQuality = 0.05
+  private[graft] val MaxHam = Dedup.maxHamDefault
+  private[graft] val MaxContamRatio = 0.99
+  private[graft] val BinTokens = 512
+  private[graft] val Shards = 8
+  private[graft] val MixFrac = 0.5
+  private[graft] val OrderSeed = "42"
+  private[graft] val ExportShards = 8
+
+  /** The optional stages, each off by default. prepare() builds one
+    * lazy graph: nothing materializes until the caller's first action
+    * (apart from the decontamination dispatcher's eval-sized estimate
+    * job — see stage 4, and the BPE learner when `bpeEncode` is on), and
+    * `Result.cleanup()` releases the stage caches once the caller has
+    * materialized what it needs.
     */
   case class Config(
-      minQuality: Double = 0.05,
-      maxHam: Int = 3,
-      maxContamRatio: Double = 0.99,
-      binTokens: Int = 512,
-      shards: Int = 8,
-      audit: Boolean = true,
-      // r11b: near-dup survivors chosen per CLUSTER (q104 semantics —
-      // keep each component's max-quality member, min doc_id tie-break)
+      // near-dup survivors chosen per CLUSTER (q104 semantics — keep
+      // each component's max-quality member, min doc_id tie-break)
       // instead of the greedy drop-every-doc_b rule. Both guarantee
       // pairwise non-near-dup output (any surviving pair would be an
       // edge inside one component, which keeps exactly one member);
       // this one keeps the BEST text where greedy keeps the smallest id
       // — at the cost of the O(log n) component rounds
       keepBestQuality: Boolean = false,
-      // r11b: when Some(f), q103's domain mixing runs after
-      // decontamination — per-source token budget = f·total/n_sources,
-      // deterministic md5-Bernoulli accept. Requires a `source` column.
-      mixTokenBudgetFrac: Option[Double] = None,
-      // r12: when true, q107's span scrub runs after near-dup removal —
-      // cross-doc repeated spans (>= 50 chars of shared content-defined
-      // chunks) are CUT from every non-canonical doc, one occurrence
-      // kept corpus-wide (the Lee et al. 2022 substring step the
-      // doc-granular near-dup stage cannot express: shared boilerplate
-      // inside otherwise-distinct documents). Rows unchanged; `text` is
-      // rewritten (any length-derived input column, e.g. n_chars, then
-      // describes the ORIGINAL doc). Later stages — decontamination,
-      // mixing, chunking, packing — all run on the scrubbed text.
+      // q107's span scrub after near-dup removal — cross-doc repeated
+      // spans (>= 50 chars of shared content-defined chunks) are CUT
+      // from every non-canonical doc, one occurrence kept corpus-wide
+      // (the Lee et al. 2022 substring step the doc-granular near-dup
+      // stage cannot express: shared boilerplate inside otherwise-
+      // distinct documents). Rows unchanged; `text` is rewritten (any
+      // length-derived input column, e.g. n_chars, then describes the
+      // ORIGINAL doc). Later stages — decontamination, mixing,
+      // chunking, packing — all run on the scrubbed text.
       scrubDupSpans: Boolean = false,
-      // r13: when true, q110's PII redaction (TextAnalysis.redactPii —
-      // emails/phones/IPv4s → typed markers) rewrites `text` after
-      // near-dup removal / span scrub and BEFORE decontamination, so
-      // eval-gram matching and all later stages see the text a training
-      // run would. A pure doc-local projection (three codegen'd
-      // regexes) — no persist needed; downstream consumers re-evaluate
-      // it over the already-cached survivors (the q75 scans-are-cheap
-      // lesson, at projection not explode cost).
+      // q110's PII redaction (TextAnalysis.redactPii — emails/phones/
+      // IPv4s → typed markers) rewrites `text` after near-dup removal /
+      // span scrub and BEFORE decontamination, so eval-gram matching and
+      // all later stages see the text a training run would. A pure
+      // doc-local projection (three codegen'd regexes) — no persist
+      // needed; downstream consumers re-evaluate it over the
+      // already-cached survivors.
       redactPii: Boolean = false,
-      // r12: when Some(seed), the pipeline ends with q106's
-      // deterministic training-order export over the survivors
-      // (Extensions.trainOrder at `exportShards` shards) — the final
-      // step a pretraining run actually consumes. Returned as
-      // Result.order; a writer follows with Extensions.writeTrainOrder.
-      exportOrderSeed: Option[String] = None,
-      exportShards: Int = 64,
-      // r14: when true, the pipeline ends with the q114+q116 tokenizer
-      // chain over the SURVIVORS — learn `bpeMerges` merges on the
-      // surviving corpus (post-scrub/redaction/decontamination text, so
-      // the tokenizer never memorizes content the pipeline dropped),
-      // then encode every survivor (type-level application, size-gated
-      // map shipping — q116's exact machinery). Returned as Result.bpe:
+      // q103's domain mixing after decontamination — per-source token
+      // budget = MixFrac·total/n_sources, deterministic md5-Bernoulli
+      // accept. Requires a `source` column.
+      mixDomains: Boolean = false,
+      // the pipeline ends with q106's deterministic training-order
+      // export over the survivors (Extensions.trainOrder at OrderSeed,
+      // ExportShards shards) — the final step a pretraining run
+      // actually consumes. Returned as Result.order; a writer follows
+      // with Extensions.writeTrainOrder.
+      exportOrder: Boolean = false,
+      // the pipeline ends with the q114+q116 tokenizer chain over the
+      // SURVIVORS — learn BpeMerges merges on the surviving corpus
+      // (post-scrub/redaction/decontamination text, so the tokenizer
+      // never memorizes content the pipeline dropped), then encode
+      // every survivor (type-level application, size-gated map shipping
+      // — q116's exact machinery). Returned as Result.bpe:
       // (doc_id, n_subwords, seq). EAGER: the learning loop runs 2
       // bounded jobs per merge round.
-      bpeEncode: Boolean = false,
-      bpeMerges: Int = TextAnalysis.BpeMerges)
+      bpeEncode: Boolean = false)
 
-  /** Stage outputs: the surviving corpus and the packed bins, plus
-    * per-stage survivor counts for the audit trail. `cleanup` unpersists
-    * every cache this prepare() call created (idempotent; safe after the
-    * caller's last action on `survivors`/`packed`) — the selective
-    * release the non-audit mode needs, without reaching for
-    * `spark.catalog.clearCache()` and dropping unrelated caches.
+  /** Stage outputs: the surviving corpus and the packed bins. `cleanup`
+    * unpersists every cache this prepare() call created (idempotent;
+    * safe after the caller's last action on `survivors`/`packed`) — a
+    * selective release, without reaching for `spark.catalog.clearCache()`
+    * and dropping unrelated caches.
     */
   case class Result(survivors: DataFrame, packed: DataFrame,
-                    audit: Seq[(String, Long)],
-                    cleanup: () => Unit = () => (),
+                    cleanup: () => Unit,
                     // the (shard, pos, doc_id) training order over the
-                    // survivors — Some iff cfg.exportOrderSeed is set
-                    order: Option[DataFrame] = None,
+                    // survivors — Some iff cfg.exportOrder
+                    order: Option[DataFrame],
                     // (doc_id, n_subwords, seq) BPE encoding of the
                     // survivors — Some iff cfg.bpeEncode
-                    bpe: Option[DataFrame] = None,
+                    bpe: Option[DataFrame],
                     // drops the survivor localCheckpoint blocks themselves
-                    // (r18 ADVICE: tight-loop callers shouldn't wait on
+                    // (tight-loop callers shouldn't wait on
                     // GC/ContextCleaner). STRICTLY LAST-RITES: survivors/
                     // packed/order/bpe ALL read these blocks, so call only
                     // after the final action on every Result frame —
                     // lineage is truncated, nothing can recompute them.
                     // Idempotent; independent of cleanup() (which releases
                     // only the stage caches and stays action-safe).
-                    release: () => Unit = () => ())
+                    release: () => Unit)
 
   private def words(c: Column): Column = filter(split(c, " "), w => w =!= "")
 
@@ -192,27 +190,19 @@ object TrainingPipeline {
     */
   def prepare(docs: DataFrame, evalDocs: DataFrame,
               cfg: Config = Config()): Result = {
-    val spark = docs.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
-    import spark.implicits._
-    // validate inputs against cfg BEFORE any action runs (r12, ADVICE):
-    // the per-stage requirements used to fire where the stage ran — a
-    // misconfigured mix input failed only at stage 4b, after the
-    // expensive quality/dedup/decontamination counts had all executed
+    graft.functions.VectorExpressions.ensureRegistered(docs.sparkSession)
+    // validate inputs against cfg BEFORE any job runs: a misconfigured
+    // mix input would otherwise fail only at stage 4b
     val missing = (Seq("doc_id", "text") ++
-      (if (cfg.mixTokenBudgetFrac.isDefined) Seq("source") else Nil))
+      (if (cfg.mixDomains) Seq("source") else Nil))
       .filterNot(docs.columns.contains)
     require(missing.isEmpty,
       s"input docs lack required column(s) ${missing.mkString(", ")} " +
         s"(have: ${docs.columns.mkString(", ")})" +
         (if (missing.contains("source"))
-          "; mixTokenBudgetFrac requires a `source` column" else ""))
+          "; mixDomains requires a `source` column" else ""))
     require(evalDocs.columns.contains("text"),
       s"evalDocs lacks a `text` column (have: ${evalDocs.columns.mkString(", ")})")
-    cfg.mixTokenBudgetFrac.foreach(f => require(f > 0.0 && f <= 1.0,
-      s"mixTokenBudgetFrac must be in (0, 1], got $f"))
-    val audit = Seq.newBuilder[(String, Long)]
-    if (cfg.audit) audit += ("input" -> docs.count())
 
     // 1. quality: q88's composite — including its final round(·, 4), so
     // threshold-boundary docs classify exactly as the declared score does
@@ -222,9 +212,8 @@ object TrainingPipeline {
       .withColumn("q", round(
         round(size(array_distinct(col("ws"))).cast("double") / size(col("ws")), 4) *
           round(least(lit(1.0), size(col("ws")).cast("double") / 100), 4), 4))
-      .filter(col("q") >= cfg.minQuality)
+      .filter(col("q") >= MinQuality)
       .drop("ws", "q")
-    if (cfg.audit) audit += ("quality" -> scored.count())
 
     // 2. exact dedup, keep-first by doc_id (q73's row_number discipline
     // on q80's md5 key — dropDuplicates would keep an arbitrary row)
@@ -234,7 +223,6 @@ object TrainingPipeline {
       .withColumn("rn", row_number().over(wMd5))
       .filter(col("rn") === 1).drop("rn")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (cfg.audit) audit += ("exact_dedup" -> exact.count())
 
     // 3. near-dup removal: q78's banded pairs (the shared
     // Dedup.nearDupPairs), then either greedily drop every doc_b or —
@@ -243,7 +231,7 @@ object TrainingPipeline {
     // max-quality member. Both ways survivors are pairwise non-near-dup
     // by construction. Persisted: feeds the gram explode AND the final
     // anti-join.
-    val pairs = Dedup.nearDupPairs(exact, cfg.maxHam)
+    val pairs = Dedup.nearDupPairs(exact, MaxHam)
     val dropIds =
       if (!cfg.keepBestQuality)
         pairs.select(col("doc_b").as("doc_id")).distinct()
@@ -274,40 +262,24 @@ object TrainingPipeline {
       }
     val nearDedupedRaw = exact.join(dropIds, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (cfg.audit) audit += ("near_dedup" -> nearDedupedRaw.count())
 
     // 3b (optional). span scrub: q107's semantics (Dedup.scrubDupSpans)
     // — cut cross-doc repeated spans out of non-canonical docs, keep the
-    // docs. Row count is UNCHANGED by construction, so the audit entry
-    // counts docs that were actually rewritten, not survivors. Persisted
-    // (it feeds the decontamination gram explodes AND the final
-    // anti-join, same diamond as the raw near-dedup set it replaces).
+    // docs (row count UNCHANGED by construction). Persisted (it feeds
+    // the decontamination gram explodes AND the final anti-join, same
+    // diamond as the raw near-dedup set it replaces).
     val scrubbedOpt =
       if (!cfg.scrubDupSpans) None
       else Some(Dedup.scrubDupSpans(nearDedupedRaw)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val scrubbed = scrubbedOpt match {
-      case None => nearDedupedRaw
-      case Some(sc) =>
-        if (cfg.audit)
-          audit += ("span_scrubbed" -> sc.filter(col("n_spans_cut") > 0).count())
-        sc.withColumn("text", col("scrubbed")).drop("scrubbed", "n_spans_cut")
-    }
+    val scrubbed = scrubbedOpt.fold(nearDedupedRaw)(
+      _.withColumn("text", col("scrubbed")).drop("scrubbed", "n_spans_cut"))
 
-    // 3c (optional). PII redaction: q110's shared redactPii — the audit
-    // entry counts docs actually rewritten (rows unchanged by
-    // construction, like 3b). The count's regex pass runs over the
-    // cached upstream set, doc-local.
+    // 3c (optional). PII redaction: q110's shared redactPii, a doc-local
+    // rewrite of `text` (rows unchanged, like 3b)
     val nearDeduped =
       if (!cfg.redactPii) scrubbed
-      else {
-        val red = scrubbed
-          .withColumn("red", TextAnalysis.redactPii(col("text")))
-        if (cfg.audit)
-          audit += ("pii_redacted" ->
-            red.filter(col("red") =!= col("text")).count())
-        red.withColumn("text", col("red")).drop("red")
-      }
+      else scrubbed.withColumn("text", TextAnalysis.redactPii(col("text")))
 
     // 4. decontamination, q76's gram machinery with roles swapped: drop
     // TRAIN docs whose distinct 8-grams are mostly present in the eval
@@ -338,31 +310,20 @@ object TrainingPipeline {
     val evalGrams = evalDocs
       .select(explode(array_distinct(expr("char_ngrams(text, 8)"))).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val contam = contamIds(nearDeduped, evalGrams, cfg.maxContamRatio)
+    val contam = contamIds(nearDeduped, evalGrams, MaxContamRatio)
+    // the upstream persists stay for the caller's first action to
+    // populate once; cleanup() releases them
     val clean = nearDeduped.join(contam, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (cfg.audit) {
-      audit += ("decontaminated" -> clean.count())
-      // clean is materialized: the upstream caches served their consumers
-      // and can release now. `clean` itself stays cached until the
-      // caller's cleanup() (same contract as SparkEntry.queries'
-      // persisted subplans). Without audit nothing has materialized yet,
-      // so the upstream persists stay for the caller's first action to
-      // populate once — cleanup() releases them too.
-      exact.unpersist()
-      nearDedupedRaw.unpersist()
-      evalGrams.unpersist()
-      scrubbedOpt.foreach(_.unpersist())
-    }
 
-    // 4b (optional). domain mixing: q103's machinery at a configured
-    // budget fraction — per-source token totals, rate = min(1,
+    // 4b (optional). domain mixing: q103's machinery at budget fraction
+    // MixFrac — per-source token totals, rate = min(1,
     // f·T/n_src / tokens_s), deterministic md5-Bernoulli accept. One
     // agg + a broadcast rate table back onto the cached survivors; the
     // semi-join keeps `clean`'s persisted plan as the only corpus scan.
-    val mixed = cfg.mixTokenBudgetFrac match {
-      case None => clean
-      case Some(frac) =>
+    val mixed =
+      if (!cfg.mixDomains) clean
+      else {
         // `source` presence already validated at the top of prepare()
         val d = clean.select(col("doc_id"), col("source"),
           size(words(col("text"))).cast("long").as("n_tokens"))
@@ -380,7 +341,7 @@ object TrainingPipeline {
           .select(col("source"),
             when(col("tokens_in") > 0,
               least(lit(1.0),
-                (col("t_all").cast("double") * frac / col("n_src")) /
+                (col("t_all").cast("double") * MixFrac / col("n_src")) /
                   col("tokens_in").cast("double")))
               .otherwise(lit(1.0)).as("rate"))
         val keep = d.join(broadcast(rates), "source")
@@ -389,9 +350,7 @@ object TrainingPipeline {
               lower(lpad(hex(floor(col("rate") * lit(281474976710656.0))), 12, "0")))
           .select("doc_id")
         clean.join(keep, Seq("doc_id"), "left_semi")
-    }
-    if (cfg.audit && cfg.mixTokenBudgetFrac.isDefined)
-      audit += ("mixed" -> mixed.count())
+      }
 
     // LINEAGE TRUNCATION at the survivors boundary (r14, measured): the
     // composed logical tree (quality → dedup → near-dup → scrub →
@@ -402,8 +361,8 @@ object TrainingPipeline {
     // data work; 3 consumer actions ≈ 27 s of pure overhead, growing
     // with decade). localCheckpoint collapses the plan to a LogicalRDD:
     // post-truncation actions measured 0.1 s. Lazy (eager = false), so
-    // the non-audit "nothing materializes until the caller's first
-    // action" contract holds; the checkpoint blocks free with the
+    // the "nothing materializes until the caller's first action"
+    // contract holds; the checkpoint blocks free with the
     // Result's GC (ContextCleaner), while cleanup() releases the named
     // upstream caches — which the checkpoint makes safe to drop even
     // before the caller's last action. Known localCheckpoint caveat
@@ -430,16 +389,16 @@ object TrainingPipeline {
     val chunks = Extensions.docChunks(survivors)
       .select(col("doc_id"), col("chunk_idx"),
         size(col("chunk")).cast("long").as("n_tokens"))
-    val packed = Extensions.packBins(chunks, cfg.binTokens, cfg.shards)
+    val packed = Extensions.packBins(chunks, BinTokens, Shards)
       .select("shard", "bin", "n_chunks", "tok_total")
 
     // 7 (optional). training-order export: q106's engine API over the
     // survivors — same seed ⇒ same (shard, pos) on any cluster, any day
     // (TrainOrderSpec's laws apply verbatim: exactly the survivor set,
     // per-shard contiguous positions)
-    val order = cfg.exportOrderSeed.map(seed =>
-      Extensions.trainOrder(survivors.select(col("doc_id")), seed,
-        cfg.exportShards))
+    val order = if (!cfg.exportOrder) None else Some(
+      Extensions.trainOrder(survivors.select(col("doc_id")), OrderSeed,
+        ExportShards))
 
     // 8 (optional). tokenizer chain over the SURVIVORS: learn BPE
     // merges on what training will actually see (q114), encode every
@@ -448,32 +407,26 @@ object TrainingPipeline {
     // encode's seg cache joins the cleanup list.
     val bpe = if (!cfg.bpeEncode) None else {
       val corpus = survivors.select(col("doc_id"), col("text"))
-      val merges = TextAnalysis.learnBpeMerges(corpus, cfg.bpeMerges)
+      val merges = TextAnalysis.learnBpeMerges(corpus, TextAnalysis.BpeMerges)
       Some(TextAnalysis.bpeEncodeTokens(corpus, merges))
     }
 
-    // unpersist is idempotent, so listing the already-released audit-mode
-    // caches here is harmless — one cleanup covers both modes
     val cleanup = () => {
       (Seq(exact, nearDedupedRaw, evalGrams, clean) ++ scrubbedOpt)
         .foreach(_.unpersist())
       bpe.foreach(_._2.unpersist()) // the encode's seg type-map cache
     }
-    Result(survivors, packed, audit.result(), cleanup, order, bpe.map(_._1),
-      releaseCheckpoint)
+    Result(survivors, packed, cleanup, order, bpe.map(_._1), releaseCheckpoint)
   }
 
-  /** q126's pinned configuration: the default dials (quality 0.05,
-    * simhash near-dup at hamming <= 3 with the greedy drop rule,
-    * decontamination ratio 0.99, 512-token bins over 8 shards), audit
-    * off, every stochastic/iterative stage (scrub, redaction, mixing,
-    * BPE, order export) disabled — exactly the mandatory chain whose
-    * stages all have proven oracle formulations. The oracle below
-    * interpolates THESE fields, so a dial edit here retargets both
-    * engines together.
+  /** q126's pinned configuration: every optional stage (keep-best,
+    * scrub, redaction, mixing, order export, BPE) off, with the greedy
+    * near-dup drop rule — exactly the mandatory chain whose stages all
+    * have proven oracle formulations. Each Declared*Cfg below switches
+    * stages on; the dials are the shared constants above, so the
+    * oracle generators and prepare() cannot disagree on a value.
     */
-  private[graft] val DeclaredCfg =
-    Config(audit = false, maxHam = Dedup.maxHamDefault)
+  private[graft] val DeclaredCfg = Config()
 
   /** q126/q127/q128's eval slice: every 10th doc_id of the raw table —
     * a planted leak (the slice is also pipeline input, so each surviving
@@ -493,15 +446,13 @@ object TrainingPipeline {
     DeclaredCfg.copy(scrubDupSpans = true, redactPii = true)
 
   /** q128's pinned configuration (r17 VERDICT #5): [[DeclaredCfg]] with
-    * domain mixing enabled at half the corpus token budget — the
-    * remaining oracle-expressible optional stage, and the riskiest
+    * domain mixing enabled at [[MixFrac]] of the corpus token budget —
+    * the remaining oracle-expressible optional stage, and the riskiest
     * composition still unchecked after q127 because mixing changes
     * survivor SETS (not just text) between decontamination and
     * chunking. Requires the documents table's `source` column.
     */
-  private[graft] val DeclaredMixFrac = 0.5
-  private[graft] val DeclaredMixCfg =
-    DeclaredCfg.copy(mixTokenBudgetFrac = Some(DeclaredMixFrac))
+  private[graft] val DeclaredMixCfg = DeclaredCfg.copy(mixDomains = true)
 
   /** q129's pinned configuration (r18, self-set): ALL THREE
     * oracle-expressible optional stages composed at once — scrub,
@@ -514,21 +465,19 @@ object TrainingPipeline {
     */
   private[graft] val DeclaredFullCfg =
     DeclaredCfg.copy(scrubDupSpans = true, redactPii = true,
-      mixTokenBudgetFrac = Some(DeclaredMixFrac))
+      mixDomains = true)
 
   /** q130's pinned configuration (r18, self-set): the ORDER-EXPORT
-    * stage composed under the hash gate — prepare() with
-    * exportOrderSeed, declared output = Result.order (shard, pos,
-    * doc_id), the frame a pretraining loader actually consumes. Unlike
+    * stage composed under the hash gate — prepare() with exportOrder
+    * ([[OrderSeed]], [[ExportShards]] shards), declared output =
+    * Result.order (shard, pos, doc_id), the frame a pretraining loader
+    * actually consumes. Unlike
     * q106 (which pins keyHexDigits=1 for its legacy oracle), this
     * covers trainOrder's production-default 12-hex shard key, AND the
     * wiring claim that the order runs over exactly the pipeline's
     * survivor set.
     */
-  private[graft] val DeclaredOrderSeed = "42"
-  private[graft] val DeclaredOrderCfg =
-    DeclaredCfg.copy(exportOrderSeed = Some(DeclaredOrderSeed),
-      exportShards = 8)
+  private[graft] val DeclaredOrderCfg = DeclaredCfg.copy(exportOrder = true)
 
   /** q131's pinned configuration (r18 VERDICT #1): [[DeclaredCfg]] with
     * `keepBestQuality = true` — the pipeline's only production-real
@@ -558,8 +507,7 @@ object TrainingPipeline {
     * chain only) left unexercised. Same seed and shard count as q130.
     */
   private[graft] val DeclaredOrderFullCfg =
-    DeclaredFullCfg.copy(exportOrderSeed = Some(DeclaredOrderSeed),
-      exportShards = 8)
+    DeclaredFullCfg.copy(exportOrder = true)
 
   /** The shared composed-pipeline query body: run [[prepare]] ITSELF at
     * `cfg` over the documents table, with the [[DeclaredEvalMod]] slice
@@ -586,7 +534,7 @@ object TrainingPipeline {
                              dir: String, cfg: Config): Result = {
     val all = Tables(s, dir, "documents")
     val inCols = Seq(col("doc_id"), col("text")) ++
-      (if (cfg.mixTokenBudgetFrac.isDefined) Seq(col("source")) else Nil)
+      (if (cfg.mixDomains) Seq(col("source")) else Nil)
     prepare(
       all.select(inCols: _*),
       all.filter(col("doc_id") % DeclaredEvalMod === 0)
@@ -639,10 +587,10 @@ object TrainingPipeline {
     * re-sourced at the near-deduped CTE) and q110's staged redaction
     * when the config enables them, q76's gram machinery with the roles
     * swapped, q103's mixing CTEs when enabled, and q97/q58's chunk +
-    * pack tail. The SQL is GENERATED from the same [[Config]] the Spark
-    * lambda runs ([[pipelineOracleSql]]), so a dial edit retargets both
-    * engines together and the optional-stage wiring has exactly one
-    * formulation per stage. Any stage diverging — or the composition
+    * pack tail. The SQL is GENERATED from the same [[Config]] and dial
+    * constants the Spark lambda runs ([[pipelineOracleSql]]), so a dial
+    * edit retargets both engines together and the optional-stage wiring
+    * has exactly one formulation per stage. Any stage diverging — or the composition
     * wiring them differently — moves bins and fails the hash.
     */
   val queries: Map[String, graft.Q] = Map(
@@ -665,19 +613,13 @@ object TrainingPipeline {
         .orderBy("shard", "pos"))
   )
 
-  /** Generate the DuckDB oracle for [[packQuery]] at `c` — the CTE
-    * chain follows prepare()'s stage order literally: quality → exact
-    * dedup → simhash near-dup → (scrub → redaction) → decontamination →
-    * (mixing) → chunk → pack. Only the stages `c` enables are emitted;
-    * with every option off this is byte-for-byte r17's q126 oracle.
-    */
   /** The shared CTE chain through the SURVIVOR relation — everything
     * from quality filtering to (optional) mixing, ending with a
     * trailing comma. Returns (ctes, survivorRelationName). Both oracle
     * tails (pack — [[pipelineOracleSql]]; order export —
     * [[pipelineOrderOracleSql]]) append to it, so the chain has ONE
-    * formulation. exportOrderSeed/bpeEncode are additive stages that
-    * never move the chain; each tail checks what it consumes.
+    * formulation. exportOrder/bpeEncode are additive stages that never
+    * move the chain; each tail checks what it consumes.
     */
   private def pipelineChainSql(c: Config): (String, String) = {
     // optional stage 3b/3c: scrub (q107's chain re-sourced at nd) then
@@ -704,7 +646,7 @@ object TrainingPipeline {
       if (c.redactPii) "red"
       else if (c.scrubDupSpans) "sc_scrubbed"
       else "nd"
-    val mixOn = c.mixTokenBudgetFrac.isDefined
+    val mixOn = c.mixDomains
     // when mixing is on the upstream chain carries `source` through to
     // `clean` (prepare() carries every input column through its stages;
     // the scrub/redaction CTEs emit (doc_id, text) only, so `clean`
@@ -722,11 +664,11 @@ object TrainingPipeline {
            |  JOIN nd n USING (doc_id)
            |  WHERE p.doc_id NOT IN (SELECT doc_id FROM contam))"""
           .stripMargin
-    // optional stage 4b: q103's mixing machinery at the configured
-    // budget fraction — the rate expression mirrors prepare()'s Column
-    // chain operation-for-operation (left-assoc * then /, one rounding
-    // per step), and the md5-vs-hex accept test is q103's proven pairing
-    val mixCtes = c.mixTokenBudgetFrac.map { frac =>
+    // optional stage 4b: q103's mixing machinery at budget fraction
+    // MixFrac — the rate expression mirrors prepare()'s Column chain
+    // operation-for-operation (left-assoc * then /, one rounding per
+    // step), and the md5-vs-hex accept test is q103's proven pairing
+    val mixCtes = if (!mixOn) "" else
       s"""mixd AS MATERIALIZED (
          |  SELECT doc_id, source,
          |         CAST(len(list_filter(string_split(text, ' '), w -> w <> '')) AS BIGINT) AS n_tokens
@@ -738,7 +680,7 @@ object TrainingPipeline {
          |mixrates AS (
          |  SELECT source,
          |         CASE WHEN tokens_in > 0
-         |              THEN least(1.0, (CAST(t_all AS DOUBLE) * $frac / n_src)
+         |              THEN least(1.0, (CAST(t_all AS DOUBLE) * $MixFrac / n_src)
          |                    / CAST(tokens_in AS DOUBLE))
          |              ELSE 1.0 END AS rate
          |  FROM mixst CROSS JOIN mixtot),
@@ -751,7 +693,6 @@ object TrainingPipeline {
          |  SELECT doc_id, text FROM clean
          |  WHERE doc_id IN (SELECT doc_id FROM mixkeep)),
          |""".stripMargin
-    }.getOrElse("")
     val chSrc = if (mixOn) "mixed" else "clean"
     // stage-3 drop rule: greedy (drop every qualifying doc_b — q126's
     // declared rule) or — keepBestQuality — q104's cluster-canonical
@@ -764,12 +705,12 @@ object TrainingPipeline {
     // byte-identical to their r18 green forms.
     val kbqCtes =
       if (!c.keepBestQuality) ""
-      else s"${Dedup.keepBestCtesFrom("ex", "kbq_", c.maxHam)},\n"
+      else s"${Dedup.keepBestCtesFrom("ex", "kbq_", MaxHam)},\n"
     val ndBody =
       if (!c.keepBestQuality)
         s"""  SELECT doc_id, text$srcCol FROM ex
            |  WHERE doc_id NOT IN (
-           |    SELECT doc_b FROM ham WHERE hamming <= ${c.maxHam})"""
+           |    SELECT doc_b FROM ham WHERE hamming <= $MaxHam)"""
           .stripMargin
       else
         s"""  SELECT doc_id, text$srcCol FROM ex
@@ -785,7 +726,7 @@ object TrainingPipeline {
        |  WHERE len(ws) > 0
        |    AND round(round(CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 4)
        |        * round(least(1.0, CAST(len(ws) AS DOUBLE) / 100), 4), 4)
-       |        >= ${c.minQuality}),
+       |        >= $MinQuality),
        |ex AS MATERIALIZED (
        |  SELECT doc_id, text$srcCol FROM (
        |    SELECT doc_id, text$srcCol,
@@ -814,12 +755,18 @@ object TrainingPipeline {
        |contam AS (
        |  SELECT t.doc_id FROM tot t LEFT JOIN hits h USING (doc_id)
        |  WHERE CAST(COALESCE(h.hit, 0) AS DOUBLE) / t.total
-       |        > ${c.maxContamRatio}),
+       |        > $MaxContamRatio),
        |$cleanCte,
        |$mixCtes""".stripMargin
     (ctes, chSrc)
   }
 
+  /** Generate the DuckDB oracle for [[packQuery]] at `c` — the CTE
+    * chain follows prepare()'s stage order literally: quality → exact
+    * dedup → simhash near-dup → (scrub → redaction) → decontamination →
+    * (mixing) → chunk → pack. Only the stages `c` enables are emitted;
+    * with every option off this is byte-for-byte r17's q126 oracle.
+    */
   private[graft] def pipelineOracleSql(c: Config): String = {
     val (ctes, survivors) = pipelineChainSql(c)
     s"""${ctes}cws AS (
@@ -834,7 +781,7 @@ object TrainingPipeline {
        |chunks AS (
        |  SELECT doc_id, CAST(e.idx AS BIGINT) AS chunk_idx,
        |         CAST(e.n AS BIGINT) AS n_tokens,
-       |         doc_id % ${c.shards} AS shard
+       |         doc_id % $Shards AS shard
        |  FROM ch),
        |binned AS (
        |  SELECT shard, doc_id, chunk_idx, n_tokens,
@@ -842,7 +789,7 @@ object TrainingPipeline {
        |              PARTITION BY shard ORDER BY doc_id, chunk_idx
        |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum0
        |  FROM chunks)
-       |SELECT shard, CAST(floor(cum0 / ${c.binTokens}) AS BIGINT) AS bin,
+       |SELECT shard, CAST(floor(cum0 / $BinTokens) AS BIGINT) AS bin,
        |       count(*) AS n_chunks, CAST(sum(n_tokens) AS BIGINT) AS tok_total
        |FROM binned GROUP BY shard, bin ORDER BY shard, bin""".stripMargin
   }
@@ -857,18 +804,16 @@ object TrainingPipeline {
     * bit-for-bit; the key is non-negative, so `%` equals pmod.
     */
   private[graft] def pipelineOrderOracleSql(c: Config): String = {
+    require(c.exportOrder, "pipelineOrderOracleSql needs exportOrder")
     val (ctes, survivors) = pipelineChainSql(c)
-    val seed = c.exportOrderSeed.getOrElse(
-      throw new IllegalArgumentException(
-        "pipelineOrderOracleSql needs exportOrderSeed"))
     s"""${ctes}ord AS (
-       |  SELECT doc_id, md5('$seed|' || CAST(doc_id AS VARCHAR)) AS rk
+       |  SELECT doc_id, md5('$OrderSeed|' || CAST(doc_id AS VARCHAR)) AS rk
        |  FROM $survivors),
        |shd AS (
        |  SELECT doc_id, rk,
        |         CAST(CAST(list_sum(list_transform(range(1, 13),
        |              i -> (strpos('0123456789abcdef', substr(rk, CAST(i AS INT), 1)) - 1)
-       |                   * power(16.0, 12 - i))) AS BIGINT) % ${c.exportShards} AS BIGINT) AS shard
+       |                   * power(16.0, 12 - i))) AS BIGINT) % $ExportShards AS BIGINT) AS shard
        |  FROM ord)
        |SELECT shard,
        |       CAST(row_number() OVER (PARTITION BY shard ORDER BY rk, doc_id) AS BIGINT) AS pos,
@@ -885,8 +830,8 @@ object TrainingPipeline {
     *
     * Failure-mode asymmetry (r19 self-review #6, known and LOUD): if a
     * survivor corpus ever exhausts mergeable pairs before the declared
-    * 20 rounds, the ENGINE fails fast (learnBpeMerges'
-    * `require(best.nonEmpty)`) while this SQL's per-round `LIMIT 1`
+    * 20 rounds, the ENGINE fails fast (learnBpeMerges' round-count
+    * `require`) while this SQL's per-round `LIMIT 1`
     * over an empty pair table silently collapses the vocab CTE to zero
     * rows and passes every word through whole. The mismatch cannot
     * produce a silent wrong-pass: the engine side errors, so the gate
@@ -894,9 +839,7 @@ object TrainingPipeline {
     * declared depth no longer fits the corpus.
     */
   private[graft] def pipelineBpeOracleSql(c: Config): String = {
-    require(c.bpeEncode && c.bpeMerges == TextAnalysis.BpeMerges,
-      "pipelineBpeOracleSql models the sequential learner at " +
-        s"the declared ${TextAnalysis.BpeMerges}-merge depth")
+    require(c.bpeEncode, "pipelineBpeOracleSql needs bpeEncode")
     val (ctes, survivors) = pipelineChainSql(c)
     s"$ctes${TextAnalysis.bpeSeqEncodeOracleTail(survivors)}"
   }

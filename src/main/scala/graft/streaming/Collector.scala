@@ -106,9 +106,8 @@ object Collector {
     * reference's due-check loop.
     */
   def start(spark: SparkSession, sources: Seq[SourceConfig], sinkDir: String,
-            checkpointDir: String,
-            fetchBody: String => String = defaultFetch,
-            sinkFormat: String = "json"): StreamingQuery = {
+            checkpointDir: String, sinkFormat: String,
+            fetchBody: String => String = defaultFetch): StreamingQuery = {
     import spark.implicits._
     val dim = spark.createDataset(sources.filter(s => s.active && s.intervalS > 0)).toDF()
     val fetch = udf(fetchBody)
@@ -149,7 +148,7 @@ object Collector {
     */
   private[graft] def writeBatch(batch: DataFrame, batchId: Long,
                                 sinkDir: String,
-                                format: String = "json"): Unit = {
+                                format: String): Unit = {
     batch.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -186,9 +185,8 @@ object Collector {
     * [[StreamingDedup]] applied to the metric stream's natural key).
     */
   def startFromDropDir(spark: SparkSession, dropDir: String, sinkDir: String,
-                       checkpointDir: String,
-                       dedupWithin: Option[String] = None,
-                       sinkFormat: String = "json"): StreamingQuery = {
+                       checkpointDir: String, sinkFormat: String,
+                       dedupWithin: Option[String] = None): StreamingQuery = {
     val raw = spark.readStream
       .schema(rawSchema)
       .option("maxFilesPerTrigger", 100)

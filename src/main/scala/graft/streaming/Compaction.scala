@@ -46,7 +46,7 @@ object Compaction {
     * delete) so concurrent [[RawStore.read]] readers never lose their
     * planned files; `None` keeps the in-place swap.
     */
-  def compact(spark: SparkSession, tableDir: String, format: String = "json",
+  def compact(spark: SparkSession, tableDir: String, format: String,
               maxFiles: Int = 8, targetFiles: Int = 1,
               closedBefore: Option[java.time.LocalDate] = None,
               grace: Option[Long] = None): Int = {

@@ -61,7 +61,7 @@ object Retention {
     */
   def enforcePerSeries(spark: SparkSession, tableDir: String,
                        cutoffs: Map[String, Timestamp],
-                       format: String = "parquet",
+                       format: String,
                        allSeries: Set[String] = Set.empty,
                        grace: Option[Long] = None): (Int, Int) = {
     if (cutoffs.isEmpty) return (0, 0)
@@ -131,7 +131,7 @@ object Retention {
     * the resolver.
     */
   def enforce(spark: SparkSession, tableDir: String, cutoff: Timestamp,
-              format: String = "parquet",
+              format: String,
               grace: Option[Long] = None): (Int, Int) = {
     val cutoffDate = cutoff.toLocalDateTime.toLocalDate
     val midnight =

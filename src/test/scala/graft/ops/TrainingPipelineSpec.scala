@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** End-to-end composition contract of the training-data flow on the real
-  * corpus: monotone audit counts, no exact-dup or near-dup pair among
-  * survivors, contamination bounded, and token conservation through
-  * chunk+pack.
+  * corpus: survivors a non-empty subset of the input, no exact-dup or
+  * near-dup pair among them, contamination bounded, and token
+  * conservation through chunk+pack.
   */
 class TrainingPipelineSpec extends SparkSpec {
 
@@ -14,21 +14,17 @@ class TrainingPipelineSpec extends SparkSpec {
     val docs = graft.model.Tables(spark, sf(), "documents")
     val train = docs.filter(col("doc_id") % 2 === 0)
     val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val cfg = TrainingPipeline.Config()
-    val res = TrainingPipeline.prepare(train, eval_, cfg)
+    val res = TrainingPipeline.prepare(train, eval_)
     try {
-      // audit trail: every stage only drops rows, nothing is empty
-      val counts = res.audit.map(_._2)
-      assert(res.audit.map(_._1) ==
-        Seq("input", "quality", "exact_dedup", "near_dedup", "decontaminated"))
-      assert(counts.zip(counts.tail).forall { case (a, b) => b <= a })
-      assert(counts.last > 0)
-
       val survivors = res.survivors.persist()
+      // every stage only drops rows, and something survives
+      assert(survivors.select("doc_id")
+        .exceptAll(train.select("doc_id")).isEmpty)
+      assert(!survivors.isEmpty)
       // no exact dups among survivors
       assert(survivors.select("content_md5").distinct().count() == survivors.count())
       // no near-dup pair among survivors (greedy drop-doc_b guarantee)
-      assert(Dedup.nearDupPairs(survivors, cfg.maxHam).isEmpty)
+      assert(Dedup.nearDupPairs(survivors, TrainingPipeline.MaxHam).isEmpty)
       // no survivor over the contamination threshold vs the eval grams
       val evalGrams = eval_
         .select(explode(expr("char_ngrams(text, 8)")).as("g")).distinct()
@@ -39,7 +35,7 @@ class TrainingPipelineSpec extends SparkSpec {
         .join(sGrams.join(evalGrams, Seq("g"), "left_semi")
           .groupBy("doc_id").agg(count(lit(1)).as("hit")), Seq("doc_id"), "left")
         .filter(coalesce(col("hit"), lit(0L)).cast("double") / col("total")
-          > cfg.maxContamRatio)
+          > TrainingPipeline.MaxContamRatio)
       assert(over.isEmpty)
 
       // token conservation: packed bins hold exactly the survivors'
@@ -58,58 +54,40 @@ class TrainingPipelineSpec extends SparkSpec {
       // no bin except possibly each shard's last exceeds... every bin is
       // CLOSED at >= binTokens cumulative; bins may overshoot by one
       // chunk (standard greedy packing) but never start beyond it
-      assert(res.packed.filter(col("tok_total") > cfg.binTokens + 50).isEmpty)
-    } finally spark.catalog.clearCache()
-  }
-
-  test("audit=false yields identical survivors and bins with an empty audit trail") {
-    val docs = graft.model.Tables(spark, sf(), "documents")
-    val train = docs.filter(col("doc_id") % 2 === 0)
-    val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    try {
-      val audited = TrainingPipeline.prepare(train, eval_,
-        TrainingPipeline.Config())
-      val silent = TrainingPipeline.prepare(train, eval_,
-        TrainingPipeline.Config(audit = false))
-      assert(silent.audit.isEmpty)
-      assert(audited.audit.nonEmpty)
-      // identical outputs, both directions
-      val aIds = audited.survivors.select("doc_id")
-      val sIds = silent.survivors.select("doc_id")
-      assert(aIds.exceptAll(sIds).isEmpty && sIds.exceptAll(aIds).isEmpty)
-      val aP = audited.packed.select("shard", "bin", "n_chunks", "tok_total")
-      val sP = silent.packed.select("shard", "bin", "n_chunks", "tok_total")
-      assert(aP.exceptAll(sP).isEmpty && sP.exceptAll(aP).isEmpty)
-      assert(silent.survivors.count() == audited.audit.last._2)
+      assert(res.packed.filter(
+        col("tok_total") > TrainingPipeline.BinTokens + 50).isEmpty)
     } finally spark.catalog.clearCache()
   }
 
   test("keepBestQuality keeps exactly each near-dup cluster's best member") {
     val docs = graft.model.Tables(spark, sf(), "documents")
     // arrange the input so the pipeline's first two stages are identity:
-    // non-empty docs, exact dups pre-collapsed keep-first — then the
-    // near-dup stage's input IS `train` and the expectation is directly
-    // computable from the library primitives it composes
+    // non-empty docs at or above the q88 quality floor, exact dups
+    // pre-collapsed keep-first — then the near-dup stage's input IS
+    // `train` and the expectation is directly computable from the
+    // library primitives it composes
+    val qual = graft.SparkEntry.queries("q88_quality_score")(spark, sf())
+      .select("doc_id", "quality")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
     val train = docs
       .filter(size(filter(split(col("text"), " "), x => x =!= "")) > 0)
+      .join(qual.filter(col("quality") >= TrainingPipeline.MinQuality)
+        .select("doc_id"), Seq("doc_id"), "left_semi")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
     val evalEmpty = docs.filter(lit(false)).select("doc_id", "text")
-    val cfg = TrainingPipeline.Config(minQuality = 0.0, keepBestQuality = true)
-    val res = TrainingPipeline.prepare(train, evalEmpty, cfg)
+    val res = TrainingPipeline.prepare(train, evalEmpty,
+      TrainingPipeline.Config(keepBestQuality = true))
     try {
       val survivors = res.survivors.persist()
       // pairwise non-near-dup, same guarantee as the greedy mode
-      assert(Dedup.nearDupPairs(survivors, cfg.maxHam).isEmpty)
+      assert(Dedup.nearDupPairs(survivors, TrainingPipeline.MaxHam).isEmpty)
       // expected drop set: per component, everything but the
       // max-quality (min doc_id tie-break) member
-      val pairs = Dedup.nearDupPairs(train, cfg.maxHam)
+      val pairs = Dedup.nearDupPairs(train, TrainingPipeline.MaxHam)
       val labels = Dedup.connectedComponents(
         pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      val qual = graft.SparkEntry.queries("q88_quality_score")(spark, sf())
-        .select("doc_id", "quality")
       val keepPerCluster = labels.join(qual, "doc_id")
         .withColumn("k", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("cluster")
@@ -123,8 +101,7 @@ class TrainingPipelineSpec extends SparkSpec {
         expectedDrops.exceptAll(actualDrops).isEmpty)
       // cluster mode dedups at least as hard as greedy (one survivor
       // per component vs one per doc_b-cover)
-      val greedy = TrainingPipeline.prepare(train, evalEmpty,
-        TrainingPipeline.Config(minQuality = 0.0))
+      val greedy = TrainingPipeline.prepare(train, evalEmpty)
       assert(survivors.count() <= greedy.survivors.count())
     } finally spark.catalog.clearCache()
   }
@@ -133,34 +110,26 @@ class TrainingPipelineSpec extends SparkSpec {
     val docs = graft.model.Tables(spark, sf(), "documents")
     val train = docs.filter(col("doc_id") % 2 === 0)
     val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val cfg = TrainingPipeline.Config(mixTokenBudgetFrac = Some(0.5))
+    val cfg = TrainingPipeline.Config(mixDomains = true)
     val res = TrainingPipeline.prepare(train, eval_, cfg)
     try {
-      // the mixing stage ran and audited — looked up by KEY (r12,
-      // ADVICE): position-based `.last` would fail if a later audit
-      // stage is ever appended, for reasons unrelated to sampling
-      val auditMap = res.audit.toMap
-      assert(auditMap.contains("mixed"))
-      val mixedN = auditMap("mixed")
-      val cleanN = auditMap("decontaminated")
-      assert(mixedN > 0 && mixedN <= cleanN)
       // strict shrinkage is only warranted when some source actually
       // clamps below rate 1.0 — assert that PRECONDITION separately
       // (from the unmixed pipeline's survivors, i.e. the mixing
       // stage's true input) so a fixture where every source fits the
       // budget fails here with a clear message, not inside the
       // sampling logic's assertion
-      val unmixed = TrainingPipeline.prepare(train, eval_,
-        TrainingPipeline.Config(audit = false)).survivors
+      val unmixed = TrainingPipeline.prepare(train, eval_).survivors
       val st = unmixed.select(col("source"),
           size(filter(split(col("text"), " "), x => x =!= ""))
             .cast("long").as("n")).groupBy("source").agg(sum("n").as("tok"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val budgetPerSrc = st.values.sum * 0.5 / st.size
+      val budgetPerSrc = st.values.sum * TrainingPipeline.MixFrac / st.size
       assert(st.values.exists(_ > budgetPerSrc),
         s"fixture precondition: no source exceeds the per-source budget " +
           s"($budgetPerSrc) — strict shrinkage below is meaningless: $st")
-      assert(mixedN < cleanN)
+      val mixedN = res.survivors.count()
+      assert(mixedN > 0 && mixedN < unmixed.count())
       // deterministic: a second run keeps the identical doc set
       val res2 = TrainingPipeline.prepare(train, eval_, cfg)
       val a = res.survivors.select("doc_id")
@@ -185,11 +154,10 @@ class TrainingPipelineSpec extends SparkSpec {
     val docs = graft.model.Tables(spark, sf(), "documents")
     val train = docs.filter(col("doc_id") % 2 === 0)
     val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val cfg = TrainingPipeline.Config(audit = false,
-      exportOrderSeed = Some("run-1"), exportShards = 16)
+    val cfg = TrainingPipeline.Config(exportOrder = true)
     val res = TrainingPipeline.prepare(train, eval_, cfg)
     try {
-      val order = res.order.getOrElse(fail("exportOrderSeed set but no order"))
+      val order = res.order.getOrElse(fail("exportOrder set but no order"))
       // membership: exactly the survivors, each exactly once
       val a = res.survivors.select("doc_id").as[Long].collect().sorted.toSeq
       val b = order.select("doc_id").as[Long].collect().sorted.toSeq
@@ -206,8 +174,7 @@ class TrainingPipelineSpec extends SparkSpec {
         assert(o1 == o2)
       } finally res2.cleanup()
       // absent unless requested
-      assert(TrainingPipeline.prepare(train, eval_,
-        TrainingPipeline.Config(audit = false)).order.isEmpty)
+      assert(TrainingPipeline.prepare(train, eval_).order.isEmpty)
     } finally { res.cleanup(); spark.catalog.clearCache() }
   }
 
@@ -216,7 +183,7 @@ class TrainingPipelineSpec extends SparkSpec {
     val train = docs.filter(col("doc_id") % 2 === 0)
     val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
     val res = TrainingPipeline.prepare(train, eval_,
-      TrainingPipeline.Config(audit = false, bpeEncode = true, bpeMerges = 8))
+      TrainingPipeline.Config(bpeEncode = true))
     try {
       val bpe = res.bpe.getOrElse(fail("bpe export missing"))
       // one encoding row per survivor with >= 1 token; subword
@@ -233,8 +200,7 @@ class TrainingPipelineSpec extends SparkSpec {
         regexp_replace(col("seq"), " ", "") =!= col("orig")).isEmpty,
         "bpe round-trip must reconstruct the survivor text's words")
       // absent unless requested
-      assert(TrainingPipeline.prepare(train, eval_,
-        TrainingPipeline.Config(audit = false)).bpe.isEmpty)
+      assert(TrainingPipeline.prepare(train, eval_).bpe.isEmpty)
     } finally { res.cleanup(); spark.catalog.clearCache() }
   }
 
@@ -245,11 +211,10 @@ class TrainingPipelineSpec extends SparkSpec {
     try {
       spark.catalog.clearCache()
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val res = TrainingPipeline.prepare(train, eval_,
-        TrainingPipeline.Config(audit = false))
+      val res = TrainingPipeline.prepare(train, eval_)
       res.packed.count() // first action populates the lazy persists
       val afterMat = spark.sparkContext.getPersistentRDDs.keySet -- before
-      // non-audit, no optional stages: exact + nearDeduped + evalGrams
+      // no optional stages: exact + nearDeduped + evalGrams
       // (r18: the decontamination dispatcher's estimate input) + clean
       // caches, plus the survivors lineage-truncation checkpoint (r14)
       assert(afterMat.size == 5,
@@ -283,78 +248,37 @@ class TrainingPipelineSpec extends SparkSpec {
 
   test("the declared pipeline configs stay inside the oracle-expressible stage subset (drift tripwire)") {
     // pipelineChainSql models the mandatory chain plus one-pass md5
-    // scrub, staged PII redaction, q103 mixing, and (r19, VERDICT #1)
-    // q104's keep-best-quality selection; the BPE tail (r19, VERDICT
-    // #2) models only the sequential learner at the declared depth. A
-    // future default flip (or a Declared*Cfg edit enabling an unmodeled
-    // stage) must extend the generator, not silently run a stage the
-    // SQL doesn't express. The generators' own require()s guard the
-    // same envelope at construction; this pins the DECLARED configs'
-    // wiring.
-    // (name, cfg, expected keepBestQuality, expected bpeEncode) — the
-    // heavyweight optional stages are pinned EXACTLY per config: a
-    // future default flip turning the 20-round eager learner (or the
-    // recursive-closure keep policy) on for the other seven queries
-    // must trip here, not silently run at every verify/bench
-    // construction (r19 self-review #2 — the widened loop had dropped
-    // the one-way !bpeEncode assert entirely)
-    for ((name, c, wantBest, wantBpe) <- Seq(
-        ("q126", TrainingPipeline.DeclaredCfg, false, false),
-        ("q127", TrainingPipeline.DeclaredScrubCfg, false, false),
-        ("q128", TrainingPipeline.DeclaredMixCfg, false, false),
-        ("q129", TrainingPipeline.DeclaredFullCfg, false, false),
-        ("q130", TrainingPipeline.DeclaredOrderCfg, false, false),
-        ("q131", TrainingPipeline.DeclaredBestCfg, true, false),
-        ("q132", TrainingPipeline.DeclaredBpeCfg, false, true),
-        ("q133", TrainingPipeline.DeclaredOrderFullCfg, false, false))) {
-      assert(!c.audit, s"$name must not pay the audit counts")
-      assert(c.keepBestQuality == wantBest && c.bpeEncode == wantBpe,
-        s"$name keep-policy/BPE wiring drifted from its declaration: $c")
-      assert(c.bpeMerges == graft.ops.TextAnalysis.BpeMerges,
-        s"$name config sets a BPE depth its oracle does not express: $c")
-    }
-    // the stage wiring each declared config exists to prove
-    val c126 = TrainingPipeline.DeclaredCfg
-    assert(!c126.scrubDupSpans && !c126.redactPii &&
-      c126.mixTokenBudgetFrac.isEmpty && !c126.keepBestQuality)
-    val c127 = TrainingPipeline.DeclaredScrubCfg
-    assert(c127.scrubDupSpans && c127.redactPii &&
-      c127.mixTokenBudgetFrac.isEmpty)
-    val c128 = TrainingPipeline.DeclaredMixCfg
-    assert(!c128.scrubDupSpans && !c128.redactPii &&
-      c128.mixTokenBudgetFrac.contains(TrainingPipeline.DeclaredMixFrac))
-    val c129 = TrainingPipeline.DeclaredFullCfg
-    assert(c129.scrubDupSpans && c129.redactPii &&
-      c129.mixTokenBudgetFrac.contains(TrainingPipeline.DeclaredMixFrac))
-    val c130 = TrainingPipeline.DeclaredOrderCfg
-    assert(c130.exportOrderSeed.contains(TrainingPipeline.DeclaredOrderSeed) &&
-      c130.exportShards == 8 && !c130.scrubDupSpans && !c130.redactPii &&
-      c130.mixTokenBudgetFrac.isEmpty)
-    val c131 = TrainingPipeline.DeclaredBestCfg
-    assert(c131.keepBestQuality && !c131.scrubDupSpans && !c131.redactPii &&
-      c131.mixTokenBudgetFrac.isEmpty && !c131.bpeEncode)
-    val c132 = TrainingPipeline.DeclaredBpeCfg
-    assert(c132.bpeEncode && c132.scrubDupSpans && c132.redactPii &&
-      c132.mixTokenBudgetFrac.isEmpty && !c132.keepBestQuality)
-    val c133 = TrainingPipeline.DeclaredOrderFullCfg
-    assert(c133.exportOrderSeed.contains(TrainingPipeline.DeclaredOrderSeed) &&
-      c133.exportShards == 8 && c133.scrubDupSpans && c133.redactPii &&
-      c133.mixTokenBudgetFrac.contains(TrainingPipeline.DeclaredMixFrac))
+    // scrub, staged PII redaction, q103 mixing, and q104's
+    // keep-best-quality selection; the order and BPE tails model the
+    // export and the sequential learner at the shared dial constants.
+    // Each declared config is pinned EXACTLY: a flipped switch (say,
+    // the 20-round eager learner or the recursive-closure keep policy
+    // turned on for another query) must trip here, not silently run a
+    // stage at every verify/bench construction
+    import TrainingPipeline._
+    val c = Config()
+    for ((name, got, want) <- Seq(
+        ("q126", DeclaredCfg, c),
+        ("q127", DeclaredScrubCfg, c.copy(scrubDupSpans = true, redactPii = true)),
+        ("q128", DeclaredMixCfg, c.copy(mixDomains = true)),
+        ("q129", DeclaredFullCfg,
+          c.copy(scrubDupSpans = true, redactPii = true, mixDomains = true)),
+        ("q130", DeclaredOrderCfg, c.copy(exportOrder = true)),
+        ("q131", DeclaredBestCfg, c.copy(keepBestQuality = true)),
+        ("q132", DeclaredBpeCfg,
+          c.copy(scrubDupSpans = true, redactPii = true, bpeEncode = true)),
+        ("q133", DeclaredOrderFullCfg, c.copy(scrubDupSpans = true,
+          redactPii = true, mixDomains = true, exportOrder = true))))
+      assert(got == want, s"$name stage wiring drifted from its declaration")
   }
 
   test("the oracle generators refuse configs outside their envelopes") {
-    // the order tail needs the seed
+    // the order tail needs the export stage, the bpe tail the encoder
     intercept[IllegalArgumentException] {
       TrainingPipeline.pipelineOrderOracleSql(TrainingPipeline.DeclaredCfg)
     }
-    // the bpe tail models exactly the sequential learner at the
-    // declared merge depth — any other depth refuses
-    for (bad <- Seq(
-        TrainingPipeline.DeclaredCfg, // bpeEncode off
-        TrainingPipeline.DeclaredBpeCfg.copy(
-          bpeMerges = graft.ops.TextAnalysis.BpeMerges + 1)))
-      intercept[IllegalArgumentException] {
-        TrainingPipeline.pipelineBpeOracleSql(bad)
-      }
+    intercept[IllegalArgumentException] {
+      TrainingPipeline.pipelineBpeOracleSql(TrainingPipeline.DeclaredCfg)
+    }
   }
 }

@@ -113,7 +113,7 @@ class ServingCacheSpec extends SparkSpec {
         .withColumn("p_date", to_date(col("ts")))
 
     // batch 0 lands through the collector's sink (which bumps the stamp)
-    Collector.writeBatch(batch("2024-01-01 05:00:00", 1.0), 0L, dir)
+    Collector.writeBatch(batch("2024-01-01 05:00:00", 1.0), 0L, dir, "json")
     val cache = SnapshotCache.forRawStore(spark, dir, schema, "json")
     val t1 = cache.table()
     assert(t1.count() == 1)
@@ -123,7 +123,7 @@ class ServingCacheSpec extends SparkSpec {
       "raw pin must be plan-only — the raw tier is corpus-sized")
 
     // an APPEND (new batch) is visible to the very next request
-    Collector.writeBatch(batch("2024-01-02 05:00:00", 2.0), 1L, dir)
+    Collector.writeBatch(batch("2024-01-02 05:00:00", 2.0), 1L, dir, "json")
     val t2 = cache.table()
     assert(!(t2 eq t1), "append must flip the stamp and re-resolve")
     assert(t2.count() == 2)
@@ -143,7 +143,7 @@ class ServingCacheSpec extends SparkSpec {
       calls += 1; df.count().toString
     }
     assert(render() == "1" && render() == "1" && calls == 1)
-    Collector.writeBatch(batch("2024-01-03 05:00:00", 3.0), 2L, dir)
+    Collector.writeBatch(batch("2024-01-03 05:00:00", 3.0), 2L, dir, "json")
     assert(render() == "2" && calls == 2)
   }
 }

@@ -87,7 +87,7 @@ class CollectorSpec extends SparkSpec {
         |{"series":"cpu","ts":"2024-01-02T10:00:00.000Z","body":"{\"count\": 7}"}
         |{"series":"bad","ts":"2024-01-01T10:00:00.000Z","body":"nope"}
         |""".stripMargin)
-    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt)
+    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json")
     try q.processAllAvailable() finally q.stop()
     val out = spark.read
       .schema("series STRING, ts TIMESTAMP, value DOUBLE, p_date DATE")
@@ -114,7 +114,7 @@ class CollectorSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dropDir/a_retry.json"),
       """{"series":"cpu","ts":"2024-01-01T10:00:00.000Z","body":"{\"count\": 5}"}
         |""".stripMargin)
-    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt,
+    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json",
       dedupWithin = Some("1 hour"))
     try q.processAllAvailable() finally q.stop()
     val vals = spark.read
@@ -129,9 +129,9 @@ class CollectorSpec extends SparkSpec {
     val sinkDir = java.nio.file.Files.createTempDirectory("sink_idem").toString
     val batch = Seq(("cpu", ts("2024-01-01 10:00:00"), 1.0))
       .toDF("series", "ts", "value").withColumn("p_date", to_date(col("ts")))
-    Collector.writeBatch(batch, 0L, sinkDir)
-    Collector.writeBatch(batch, 0L, sinkDir) // replay after a simulated crash
-    Collector.writeBatch(batch, 1L, sinkDir) // a genuinely new batch
+    Collector.writeBatch(batch, 0L, sinkDir, "json")
+    Collector.writeBatch(batch, 0L, sinkDir, "json") // replay after a simulated crash
+    Collector.writeBatch(batch, 1L, sinkDir, "json") // a genuinely new batch
     val n = spark.read.json(sinkDir).count()
     assert(n == 2) // the replay overwrote its own batch partition
   }
@@ -166,14 +166,14 @@ class CollectorSpec extends SparkSpec {
       """{"series":"cpu","ts":"2024-01-01T10:00:00.000Z","body":"{\"count\": 1}"}
         |{"series":"cpu","ts":"2024-01-01T11:00:00.000Z","body":"{\"count\": 2}"}
         |""".stripMargin)
-    val q1 = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt)
+    val q1 = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json")
     try q1.processAllAvailable() finally q1.stop()
     // second batch arrives while the collector is DOWN
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dropDir/b.json"),
       """{"series":"cpu","ts":"2024-01-02T10:00:00.000Z","body":"{\"count\": 3}"}
         |""".stripMargin)
-    val q2 = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt)
+    val q2 = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json")
     try q2.processAllAvailable() finally q2.stop()
     val vals = spark.read.json(sinkDir)
       .select(col("value").cast("double")).as[Double].collect().sorted.toSeq
@@ -199,7 +199,7 @@ class CollectorSpec extends SparkSpec {
         |{"series":"mem","ts":"2024-01-01T10:02:00.000Z","body":"{\"count\": 5}"}
         |{"series":"cpu","ts":"2024-01-01T10:03:00.000Z","body":"broken"}
         |""".stripMargin)
-    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt)
+    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json")
     try q.processAllAvailable() finally q.stop()
     val metrics = spark.read
       .schema("series STRING, ts TIMESTAMP, value DOUBLE, p_date DATE")

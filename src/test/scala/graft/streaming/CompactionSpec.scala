@@ -63,7 +63,7 @@ class CompactionSpec extends SparkSpec {
       Collector.writeBatch(
         Seq(("cpu", Timestamp.valueOf(s"$day 10:00:00"), v))
           .toDF("series", "ts", "value").withColumn("p_date", to_date(col("ts"))),
-        id, dir)
+        id, dir, "json")
     (0 until 12).foreach(i => batch("2024-01-01", i.toLong, i.toDouble))
     (100 until 102).foreach(i => batch("2024-01-02", i.toLong, i.toDouble))
 

@@ -30,7 +30,7 @@ class LifecycleSpec extends SparkSpec {
         |{"series":"mem","ts":"2024-01-03T06:00:00.000Z","body":"{\"count\": 30}"}
         |{"series":"mem","ts":"2024-01-03T07:00:00.000Z","body":"not json"}
         |""".stripMargin)
-    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt)
+    val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json")
     try q.processAllAvailable() finally q.stop()
 
     def store = spark.read

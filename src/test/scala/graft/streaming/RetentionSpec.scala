@@ -26,7 +26,8 @@ class RetentionSpec extends SparkSpec {
     rows.write.mode("overwrite").partitionBy("p_date").parquet(dir)
 
     val (dropped, rewritten) =
-      Retention.enforce(spark, dir, Timestamp.valueOf("2024-01-03 12:00:00"))
+      Retention.enforce(spark, dir, Timestamp.valueOf("2024-01-03 12:00:00"),
+        "parquet")
     assert(dropped == 2)   // 01-01, 01-02 gone without a read
     assert(rewritten == 1) // 01-03 filtered to ts >= cutoff
 
@@ -54,7 +55,7 @@ class RetentionSpec extends SparkSpec {
 
     val (dropped, rewritten) = Retention.enforcePerSeries(spark, dir, Map(
       "cpu" -> Timestamp.valueOf("2024-01-03 12:00:00"),
-      "mem" -> Timestamp.valueOf("2024-01-01 00:00:00")))
+      "mem" -> Timestamp.valueOf("2024-01-01 00:00:00")), "parquet")
     // no day is before EVERY cutoff (mem keeps from 01-01) → no drops;
     // days 01-01..01-03 rewritten with the per-series predicate
     assert(dropped == 0 && rewritten == 3)
@@ -76,7 +77,7 @@ class RetentionSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("p_date").parquet(dir)
     val (dropped, rewritten) = Retention.enforcePerSeries(spark, dir, Map(
       "cpu" -> Timestamp.valueOf("2024-01-04 00:00:00"),
-      "mem" -> Timestamp.valueOf("2024-01-03 00:00:00")),
+      "mem" -> Timestamp.valueOf("2024-01-03 00:00:00")), "parquet",
       allSeries = Set("cpu", "mem"))
     // 01-01 is before both cutoffs AND the inventory proves every series
     // has a policy → metadata drop; 01-05 is at/after the latest cutoff's
@@ -99,7 +100,7 @@ class RetentionSpec extends SparkSpec {
     // 01-01 must go through the per-series rewrite (keeping gpu) rather
     // than a wholesale fs.delete
     val (dropped, rewritten) = Retention.enforcePerSeries(spark, dir, Map(
-      "cpu" -> Timestamp.valueOf("2024-01-04 00:00:00")))
+      "cpu" -> Timestamp.valueOf("2024-01-04 00:00:00")), "parquet")
     assert(dropped == 0 && rewritten == 1)
     val left = spark.read.parquet(dir)
       .select("series", "value").as[(String, Double)].collect().toSet
@@ -115,7 +116,8 @@ class RetentionSpec extends SparkSpec {
       .withColumn("p_date", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("p_date").parquet(dir)
     val (dropped, rewritten) =
-      Retention.enforce(spark, dir, Timestamp.valueOf("2024-01-02 00:00:00"))
+      Retention.enforce(spark, dir, Timestamp.valueOf("2024-01-02 00:00:00"),
+        "parquet")
     assert(dropped == 1 && rewritten == 0)
     val left = spark.read.parquet(dir).select("value").as[Double].collect().toSeq
     assert(left == Seq(2.0))

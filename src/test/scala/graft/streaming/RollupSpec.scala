@@ -422,7 +422,7 @@ class RollupSpec extends SparkSpec {
     ).toDF("series", "ts", "value")
     assert(Rollup.mergeBatch(spark, b, 0L, dir))
     val (dropped, rewritten) =
-      Retention.enforce(spark, dir, ts("2024-01-02 00:00:00"))
+      Retention.enforce(spark, dir, ts("2024-01-02 00:00:00"), "parquet")
     assert(dropped == 1 && rewritten == 0)
     val r = spark.read.parquet(dir)
     assert(r.count() == 2)
