@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -100,38 +101,44 @@ object VectorExpressions {
   val minhashPairsFnName = "minhash_pairs"
   val topkMinFnName = "topk_min_agg"
   val earliestKFnName = "earliest_k_agg"
-  val cmsEstimateFnName = "cms_estimate"
   val cdcChunksFnName = "cdc_chunks"
 
-  private[functions] def bloomAggBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 3, s"$bloomAggFnName expects 3 arguments")
-    new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-      new XxHash64(Seq(children.head)), children(1), children(2))
-      .toAggregateExpression()
-  }
-  private[functions] def bloomContainsBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 2, s"$bloomContainsFnName expects 2 arguments")
-    BloomFilterMightContain(children.head, new XxHash64(Seq(children(1))))
-  }
-  private[functions] def hammingPairsBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 2, s"$hammingPairsFnName expects 2 arguments")
-    HammingPairs(children.head, children(1))
-  }
-  private[functions] def minhashPairsBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 1, s"$minhashPairsFnName expects 1 argument")
-    MinHashAgreePairs(children.head)
-  }
-  private[functions] def topkMinBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 3, s"$topkMinFnName expects 3 arguments")
-    TopKMinAgg(children.head, children(1), children(2)).toAggregateExpression()
-  }
-  private[functions] def earliestKBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 3, s"$earliestKFnName expects 3 arguments")
-    EarliestKAgg(children.head, children(1), children(2)).toAggregateExpression()
-  }
-  private[functions] def cmsEstimateBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 2, s"$cmsEstimateFnName expects 2 arguments")
-    CmsEstimate(children.head, children(1))
+  /** Every graft native function as (identifier, info, builder) — the
+    * one table both registration routes read. Each builder checks its
+    * argument count first, so a wrong call fails at analysis with
+    * "<name> expects <n> argument(s)" on either route.
+    */
+  private[functions] val functions: Seq[SparkSessionExtensions#FunctionDescription] = {
+    def fn(name: String, cls: String, arity: Int)(
+        build: Seq[Expression] => Expression): SparkSessionExtensions#FunctionDescription =
+      (FunctionIdentifier(name), new ExpressionInfo(cls, name), { children =>
+        require(children.length == arity,
+          s"$name expects $arity argument${if (arity == 1) "" else "s"}")
+        build(children)
+      })
+    Seq(
+      fn(fnName, classOf[FloatVecCosine].getName, 2)(c => FloatVecCosine(c(0), c(1))),
+      fn(shinglesFnName, classOf[TextShingles].getName, 1)(c => TextShingles(c(0))),
+      fn(pairsFnName, classOf[ArrayPairs].getName, 1)(c => ArrayPairs(c(0))),
+      fn(simhashFnName, classOf[SimHashAgg].getName, 1)(c =>
+        SimHashAgg(c(0)).toAggregateExpression()),
+      fn(ngramsFnName, classOf[CharNGrams].getName, 2)(c => CharNGrams(c(0), c(1))),
+      fn(winnowFnName, classOf[WinnowFps].getName, 3)(c => WinnowFps(c(0), c(1), c(2))),
+      fn(cdcChunksFnName, classOf[CdcChunks].getName, 2)(c => CdcChunks(c(0), c(1))),
+      fn(minhashFnName, classOf[MinHashAgg].getName, 1)(c =>
+        MinHashAgg(c(0)).toAggregateExpression()),
+      fn(hammingPairsFnName, classOf[HammingPairs].getName, 2)(c => HammingPairs(c(0), c(1))),
+      fn(minhashPairsFnName, classOf[MinHashAgreePairs].getName, 1)(c =>
+        MinHashAgreePairs(c(0))),
+      fn(topkMinFnName, classOf[TopKMinAgg].getName, 3)(c =>
+        TopKMinAgg(c(0), c(1), c(2)).toAggregateExpression()),
+      fn(earliestKFnName, classOf[EarliestKAgg].getName, 3)(c =>
+        EarliestKAgg(c(0), c(1), c(2)).toAggregateExpression()),
+      fn(bloomAggFnName, classOf[BloomFilterAggregate].getName, 3)(c =>
+        new BloomFilterAggregate(new XxHash64(Seq(c(0))), c(1), c(2))
+          .toAggregateExpression()),
+      fn(bloomContainsFnName, classOf[BloomFilterMightContain].getName, 2)(c =>
+        BloomFilterMightContain(c(0), new XxHash64(Seq(c(1))))))
   }
 
   /** Idempotent runtime registration of ALL graft native expressions
@@ -140,93 +147,8 @@ object VectorExpressions {
     */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(fnName)))
-      reg.registerFunction(FunctionIdentifier(fnName),
-        new ExpressionInfo(classOf[FloatVecCosine].getName, fnName),
-        { children =>
-          require(children.length == 2, s"$fnName expects 2 arguments")
-          FloatVecCosine(children.head, children(1))
-        })
-    if (!reg.functionExists(FunctionIdentifier(shinglesFnName)))
-      reg.registerFunction(FunctionIdentifier(shinglesFnName),
-        new ExpressionInfo(classOf[TextShingles].getName, shinglesFnName),
-        { children =>
-          require(children.length == 1, s"$shinglesFnName expects 1 argument")
-          TextShingles(children.head)
-        })
-    if (!reg.functionExists(FunctionIdentifier(pairsFnName)))
-      reg.registerFunction(FunctionIdentifier(pairsFnName),
-        new ExpressionInfo(classOf[ArrayPairs].getName, pairsFnName),
-        { children =>
-          require(children.length == 1, s"$pairsFnName expects 1 argument")
-          ArrayPairs(children.head)
-        })
-    if (!reg.functionExists(FunctionIdentifier(simhashFnName)))
-      reg.registerFunction(FunctionIdentifier(simhashFnName),
-        new ExpressionInfo(classOf[SimHashAgg].getName, simhashFnName),
-        { children =>
-          require(children.length == 1, s"$simhashFnName expects 1 argument")
-          SimHashAgg(children.head).toAggregateExpression()
-        })
-    if (!reg.functionExists(FunctionIdentifier(ngramsFnName)))
-      reg.registerFunction(FunctionIdentifier(ngramsFnName),
-        new ExpressionInfo(classOf[CharNGrams].getName, ngramsFnName),
-        { children =>
-          require(children.length == 2, s"$ngramsFnName expects 2 arguments")
-          CharNGrams(children.head, children(1))
-        })
-    if (!reg.functionExists(FunctionIdentifier(winnowFnName)))
-      reg.registerFunction(FunctionIdentifier(winnowFnName),
-        new ExpressionInfo(classOf[WinnowFps].getName, winnowFnName),
-        { children =>
-          require(children.length == 3, s"$winnowFnName expects 3 arguments")
-          WinnowFps(children.head, children(1), children(2))
-        })
-    if (!reg.functionExists(FunctionIdentifier(cdcChunksFnName)))
-      reg.registerFunction(FunctionIdentifier(cdcChunksFnName),
-        new ExpressionInfo(classOf[CdcChunks].getName, cdcChunksFnName),
-        { children =>
-          require(children.length == 2, s"$cdcChunksFnName expects 2 arguments")
-          CdcChunks(children.head, children(1))
-        })
-    if (!reg.functionExists(FunctionIdentifier(minhashFnName)))
-      reg.registerFunction(FunctionIdentifier(minhashFnName),
-        new ExpressionInfo(classOf[MinHashAgg].getName, minhashFnName),
-        { children =>
-          require(children.length == 1, s"$minhashFnName expects 1 argument")
-          MinHashAgg(children.head).toAggregateExpression()
-        })
-    if (!reg.functionExists(FunctionIdentifier(hammingPairsFnName)))
-      reg.registerFunction(FunctionIdentifier(hammingPairsFnName),
-        new ExpressionInfo(classOf[HammingPairs].getName, hammingPairsFnName),
-        hammingPairsBuilder _)
-    if (!reg.functionExists(FunctionIdentifier(minhashPairsFnName)))
-      reg.registerFunction(FunctionIdentifier(minhashPairsFnName),
-        new ExpressionInfo(classOf[MinHashAgreePairs].getName, minhashPairsFnName),
-        minhashPairsBuilder _)
-    if (!reg.functionExists(FunctionIdentifier(topkMinFnName)))
-      reg.registerFunction(FunctionIdentifier(topkMinFnName),
-        new ExpressionInfo(classOf[TopKMinAgg].getName, topkMinFnName),
-        topkMinBuilder _)
-    if (!reg.functionExists(FunctionIdentifier(earliestKFnName)))
-      reg.registerFunction(FunctionIdentifier(earliestKFnName),
-        new ExpressionInfo(classOf[EarliestKAgg].getName, earliestKFnName),
-        earliestKBuilder _)
-    if (!reg.functionExists(FunctionIdentifier(cmsEstimateFnName)))
-      reg.registerFunction(FunctionIdentifier(cmsEstimateFnName),
-        new ExpressionInfo(classOf[CmsEstimate].getName, cmsEstimateFnName),
-        cmsEstimateBuilder _)
-    if (!reg.functionExists(FunctionIdentifier(bloomAggFnName)))
-      reg.registerFunction(FunctionIdentifier(bloomAggFnName),
-        new ExpressionInfo(
-          "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-          bloomAggFnName),
-        bloomAggBuilder _)
-    if (!reg.functionExists(FunctionIdentifier(bloomContainsFnName)))
-      reg.registerFunction(FunctionIdentifier(bloomContainsFnName),
-        new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-          bloomContainsFnName),
-        bloomContainsBuilder _)
+    for ((id, info, builder) <- functions if !reg.functionExists(id))
+      reg.registerFunction(id, info, builder)
   }
 }
 
@@ -235,63 +157,6 @@ object VectorExpressions {
   * SparkSessionExtensions route of SURVEY.md §2.3/§4.3).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.fnName),
-      new ExpressionInfo(classOf[FloatVecCosine].getName,
-        VectorExpressions.fnName),
-      exprs => FloatVecCosine(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.shinglesFnName),
-      new ExpressionInfo(classOf[TextShingles].getName,
-        VectorExpressions.shinglesFnName),
-      exprs => TextShingles(exprs.head)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.pairsFnName),
-      new ExpressionInfo(classOf[ArrayPairs].getName,
-        VectorExpressions.pairsFnName),
-      exprs => ArrayPairs(exprs.head)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.simhashFnName),
-      new ExpressionInfo(classOf[SimHashAgg].getName,
-        VectorExpressions.simhashFnName),
-      exprs => SimHashAgg(exprs.head).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.ngramsFnName),
-      new ExpressionInfo(classOf[CharNGrams].getName,
-        VectorExpressions.ngramsFnName),
-      exprs => CharNGrams(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.winnowFnName),
-      new ExpressionInfo(classOf[WinnowFps].getName,
-        VectorExpressions.winnowFnName),
-      exprs => WinnowFps(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.cdcChunksFnName),
-      new ExpressionInfo(classOf[CdcChunks].getName,
-        VectorExpressions.cdcChunksFnName),
-      exprs => CdcChunks(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.minhashFnName),
-      new ExpressionInfo(classOf[MinHashAgg].getName,
-        VectorExpressions.minhashFnName),
-      exprs => MinHashAgg(exprs.head).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.hammingPairsFnName),
-      new ExpressionInfo(classOf[HammingPairs].getName,
-        VectorExpressions.hammingPairsFnName),
-      exprs => VectorExpressions.hammingPairsBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.minhashPairsFnName),
-      new ExpressionInfo(classOf[MinHashAgreePairs].getName,
-        VectorExpressions.minhashPairsFnName),
-      exprs => VectorExpressions.minhashPairsBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.topkMinFnName),
-      new ExpressionInfo(classOf[TopKMinAgg].getName,
-        VectorExpressions.topkMinFnName),
-      exprs => VectorExpressions.topkMinBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.cmsEstimateFnName),
-      new ExpressionInfo(classOf[CmsEstimate].getName,
-        VectorExpressions.cmsEstimateFnName),
-      exprs => VectorExpressions.cmsEstimateBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.bloomAggFnName),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-        VectorExpressions.bloomAggFnName),
-      exprs => VectorExpressions.bloomAggBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier(VectorExpressions.bloomContainsFnName),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        VectorExpressions.bloomContainsFnName),
-      exprs => VectorExpressions.bloomContainsBuilder(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    VectorExpressions.functions.foreach(ext.injectFunction)
 }

@@ -58,14 +58,14 @@ object Extensions {
     * pushes into suffixes. Candidates then verify EXACTLY via
     * array_intersect on the full per-doc gram arrays.
     *
-    * MEASURED REFUTATION (r10, JaccardStageProbe, 1×/10×/100×;
+    * MEASURED REFUTATION (r10, 1×/10×/100×, SURVEY.md §8.9;
     * RE-CONFIRMED r11 with fresh-JVM single-mode runs — the r10 113.6 s
     * vs 50.5 s headline came from the in-JVM interleaved A/B, whose own
     * 2.7× same-mode variance the r10 ADVICE flagged as too noisy to
     * carry the verdict alone): at the declared thresholds this path
     * LOSES to the plain inverted-index expansion at every decade. The
-    * clean arrangement (tools/run_jac_probe.sh: one JVM per sample,
-    * modes alternated so no stall window lands on one mode) measures at
+    * clean arrangement (one JVM per sample, modes alternated so no
+    * stall window lands on one mode) measures at
     * 100×: expand 42.5-61.1 s over 4 samples vs prefix 69.5-105.8 s
     * over 3 (a 4th prefix sample, 236 s, carried a multi-second host
     * freeze) — prefix 1.6-1.9× slower however paired. Two causes,
@@ -88,7 +88,7 @@ object Extensions {
     * rows). This is therefore the PRODUCTION path of
     * q101_near_exact_dup (t = 0.85, oracle-checked); byte-equivalence
     * with the expansion is property-spec-covered
-    * (GenerativePropertiesSpec) and probe-checked (JaccardStageProbe).
+    * (GenerativePropertiesSpec); the t = 0.85 record is SURVEY.md §8.8.
     *
     * Stage shape:
     *  - gramDocs: ONE corpus-sized exchange — groupBy(gram) computing
@@ -174,7 +174,7 @@ object Extensions {
 
   /** Shared DF-capped set-Jaccard pipeline behind q81 (word shingles) and
     * q95 (char n-grams): inverted-index pair expansion over under-cap
-    * grams, then per-pair intersection counts ([[jaccardFromKept]]).
+    * grams, then per-pair intersection counts.
     * Input: (doc_id, <gram>) rows, PER-DOC DISTINCT — generate with
     * `explode(array_distinct(<generator>))`. The per-doc dedup is a
     * doc-local operation; the r10 rewrite moved it into the generator
@@ -217,76 +217,10 @@ object Extensions {
     // The 26× soak caught the consequence: a broadcast plan whose build
     // blew past driver memory — at 100 TB the dictionary is a
     // non-starter to broadcast, ever.
+    // kept feeds two consumers (sizes + pair-gen): persisted diamond;
+    // callers own cache cleanup (see the contract note on
+    // [[graft.SparkEntry.queries]])
     val kept = docDistinctGrams.join(keep.hint("SHUFFLE_HASH"), Seq(gram), "left_semi")
-    jaccardFromKept(kept, gram, minJac)
-  }
-
-  /** The CM-sketch form of [[capJaccardPairs]]' stop-gram cap — the
-    * 100 TB path the exact variant's scale note promises: instead of an
-    * exact groupBy of EVERY distinct gram (a gram-domain-sized aggregate
-    * plus a semi-join exchange back onto the gram set), the document
-    * frequencies come from one Count-Min pass (a compact mergeable
-    * sketch, narrow shuffle of sketch partials only) collected
-    * driver-side like a broadcast dim, and the cap filter runs MAP-SIDE
-    * via `cms_estimate(sketch, g) <= maxDf`.
-    *
-    * Sketch sizing: the serialized sketch is embedded in the plan as a
-    * literal and referenced from generated code, so its footprint —
-    * ~16/eps bytes (width 2/eps long counters × depth ln(1/(1-conf)))
-    * — rides in every task binary that uses it. The 1e-3 default is
-    * ~160 KB: small enough to ship, wide enough that a 50-dup cap
-    * over-drops only grams within ~eps·N of the bound.
-    *
-    * Semantics trade (one-sided by the CM bound, property-tested in
-    * CapSketchSpec): estimates never undercount, so NO truly-hot gram
-    * survives the cap — the pair-expansion bound (≤ maxDf(maxDf-1)/2
-    * per gram) holds exactly as in the exact path. Grams whose true df
-    * is ≤ maxDf but whose estimate exceeds it are over-dropped.
-    *
-    * APPLICABILITY BOUND, measured (r8 soak, CapPathProbe): over-drop
-    * is a "sliver" only while eps·mass ≲ maxDf. The CM error is
-    * absolute (≈ eps × Σ gram occurrences), so a SMALL absolute cap
-    * drowns once the corpus grows: at the 26× soak (35M distinct
-    * grams), eps=1e-3 puts ~35k of error on every estimate against a
-    * cap of 50 — every gram reads hot and ZERO pairs survive. Keeping
-    * the error under a tiny cap needs width ∝ mass (tens of MB at the
-    * soak, GBs at 100 TB) — the sketch degenerates into the dictionary
-    * it was meant to avoid. Use THIS path only when maxDf is a
-    * meaningful fraction of eps·mass (rate caps, head-heavy domains);
-    * for near-dup DF caps (maxDf ~ tens) the exact co-partitioned
-    * semi-join in [[capJaccardPairs]] is the 100 TB path at every
-    * scale — its keep-dictionary never broadcasts (hint-pinned) and
-    * every stage is one linear exchange. Declared q81/q95 use the
-    * exact path (oracle-matched).
-    */
-  private[graft] def capJaccardPairsSketch(
-      docDistinctGrams: DataFrame, gram: String, maxDf: Int, minJac: Double,
-      eps: Double = 1e-3, confidence: Double = 0.999,
-      seed: Int = 42): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(docDistinctGrams.sparkSession)
-    // input is per-doc distinct (same contract as capJaccardPairs); the
-    // gram set feeds the sketch build AND the capped tail — persisted
-    // diamond (callers own cleanup, the usual contract)
-    val sh = docDistinctGrams
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cms = Sketches.gramFrequencySketch(sh, gram, eps, confidence, seed)
-    val bos = new java.io.ByteArrayOutputStream()
-    cms.writeTo(bos)
-    val kept = sh.filter(call_function(
-      graft.functions.VectorExpressions.cmsEstimateFnName,
-      lit(bos.toByteArray), col(gram)) <= maxDf)
-    jaccardFromKept(kept, gram, minJac)
-  }
-
-  /** Shared tail of the capped-Jaccard variants: per-doc kept-gram
-    * counts, bounded pair expansion, Jaccard threshold. `kept` feeds two
-    * consumers (sizes + pair-gen) — persisted here so both paths get the
-    * diamond treatment; callers own cache cleanup (see the contract note
-    * on [[graft.SparkEntry.queries]]).
-    */
-  private def jaccardFromKept(kept0: DataFrame, gram: String,
-                              minJac: Double): DataFrame = {
-    val kept = kept0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sz = kept.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = kept.groupBy(gram)
@@ -695,7 +629,7 @@ object Extensions {
       graft.functions.VectorExpressions.ensureRegistered(s)
       val docs = Tables(s, dir, "documents")
       // the train gram set feeds BOTH the sketch build and the confirm
-      // join — and is NOT persisted (r11, DecontamProbe): per-doc
+      // join — and is NOT persisted (r11, SURVEY.md §8.8): per-doc
       // array_distinct leaves cross-doc duplicates, so the r10 cache
       // held a 52.8×-duplicate-inflated set (~1 GB payload at the 100×
       // soak) while regenerating it is one parquet scan through a

@@ -52,32 +52,18 @@ object Sketches {
     * parametrization differs from the Cormode–Muthukrishnan paper
     * constants: width = ceil(2/eps) and depth = ceil(ln(1−confidence) /
     * ln(0.5)) — size from eps/confidence, don't derive bounds from
-    * width/depth via the e/width paper formulas. The 100 TB use is
-    * heavy-hitter discovery — the stop-gram caps in q81/q95 computed
-    * from a sketch pass instead of an exact groupBy of every gram, WIRED
-    * as [[graft.ops.Extensions.capJaccardPairsSketch]] (which builds its
-    * sketch via [[gramFrequencySketch]] and cap-filters map-side through
-    * the `cms_estimate` expression). Returns the sketch; callers
-    * point-query term counts driver-side or embed the serialized sketch
-    * as a `cms_estimate` constant (the sketch is KB-sized — broadcast
-    * it, the corpus never reshuffles).
+    * width/depth via the e/width paper formulas. Returns the sketch;
+    * callers point-query term counts driver-side (the sketch is
+    * KB-sized). Not a stop-gram cap for q81/q95: the CM error is
+    * absolute (≈ eps × total mass), so at soak scale it swamps a
+    * tens-of-docs DF cap and every gram reads hot (SURVEY.md §8.11);
+    * those queries keep the exact cap in [[Extensions.capJaccardPairs]].
     */
   def wordFrequencySketch(s: SparkSession, dir: String,
                           eps: Double = 0.001, confidence: Double = 0.99,
                           seed: Int = 42): org.apache.spark.util.sketch.CountMinSketch =
-    gramFrequencySketch(
-      Tables(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= ""),
-      "w", eps, confidence, seed)
-
-  /** [[wordFrequencySketch]] generalized to ANY gram/token DataFrame —
-    * the build half of the sketch-capped Jaccard path
-    * ([[graft.ops.Extensions.capJaccardPairsSketch]]). One pass over the
-    * rows, mergeable partials, narrow shuffle of sketch bytes.
-    */
-  def gramFrequencySketch(grams: DataFrame, column: String,
-                          eps: Double = 0.001, confidence: Double = 0.99,
-                          seed: Int = 42): org.apache.spark.util.sketch.CountMinSketch =
-    grams.stat.countMinSketch(column, eps, confidence, seed)
+    Tables(s, dir, "documents")
+      .select(explode(split(col("text"), " ")).as("w"))
+      .filter(col("w") =!= "")
+      .stat.countMinSketch("w", eps, confidence, seed)
 }

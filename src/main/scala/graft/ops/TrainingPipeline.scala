@@ -285,7 +285,7 @@ object TrainingPipeline {
     // TRAIN docs whose distinct 8-grams are mostly present in the eval
     // set (a leaked benchmark doc scores ~1.0; organic overlap stays
     // low). trainGrams NOT persisted (r11, same evidence as q75's
-    // DecontamProbe verdict): the per-doc-distinct gram set carries a
+    // verdict, SURVEY.md §8.8): the per-doc-distinct gram set carries a
     // ~53× cross-doc duplication factor, and both consumers regenerate
     // it with one doc-local codegen explode over the ALREADY-CACHED
     // nearDeduped — rebuilding beat the gram cache at every soak decade.

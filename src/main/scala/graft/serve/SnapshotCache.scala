@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Snapshot-pinned serving cache — the thin serving layer's answer to
-  * the per-request planning + scan floor ServeLatencyProbe measured
-  * (~200 ms p50 identical across read paths at local[16]).
+  * the per-request planning + scan floor recorded in SURVEY.md §8.8's
+  * serving latency table (~200 ms p50 identical across read paths at
+  * local[16]).
   *
   * The store tiers this serves are IMMUTABLE per version by
   * construction — Rollup's published `snap=<n>/` dirs behind the

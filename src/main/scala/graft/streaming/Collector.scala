@@ -139,9 +139,9 @@ object Collector {
     * `format`: "json" mirrors the drop-dir lineage and stays
     * human-greppable; "parquet" is the AT-SCALE sink — columnar scan,
     * compression, and ts row-group pruning on the serving path's range
-    * filters. Measured (LifecycleSoak, 50k rows/s composed, SURVEY
-    * §8 r9 record, runs 6 vs 8): parquet cuts raw-path query p50/p95
-    * 2222/2578 → 785/1072 ms (~2.8×) at identical ingest, with the
+    * filters. Measured (composed lifecycle soak, 50k rows/s, SURVEY.md
+    * §8.8 lifecycle table, runs 6 vs 8): parquet cuts raw-path query
+    * p50/p95 2222/2578 → 785/1072 ms (~2.8×) at identical ingest, with the
     * retention/compaction cycle format-clean and reconciliation exact.
     * The store layer downstream (RawStore / Retention / Compaction /
     * Grafana) is already format-parametric.

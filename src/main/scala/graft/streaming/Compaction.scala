@@ -37,9 +37,9 @@ object Compaction {
     * partitions strictly before it are candidates — before r11 the
     * caller had to know the closed-day rule from the scaladoc, and a
     * periodic maintenance job composed with a live collector (the
-    * LifecycleSoak arrangement) would happily rewrite the partition the
-    * collector is appending into. Returns the number of partitions
-    * rewritten.
+    * composed lifecycle soak, SURVEY.md §8.8) would happily rewrite
+    * the partition the collector is appending into. Returns the number
+    * of partitions rewritten.
     */
   /** `grace = Some(ms)` routes the swap through the [[RawStore]]
     * graceful protocol (fresh generation + manifest flip + delayed

@@ -247,11 +247,9 @@ object RawStore {
     * columns (the caller knows it; this is the collector-sink read
     * path). Generation dirs carry no `p_date=` path component, so the
     * day is restored as a literal column per generation.
-    * `cacheGenLegs = false` rebuilds every generation leg per read —
-    * the measured-baseline switch, not a correctness dial.
     */
   def read(spark: SparkSession, dir: String, schema: String,
-           format: String, cacheGenLegs: Boolean = true): DataFrame = {
+           format: String): DataFrame = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = readManifest(fs, dir)
@@ -274,20 +272,16 @@ object RawStore {
         .withColumn("p_date",
           org.apache.spark.sql.functions.lit(day).cast("date"))
     val gens = m.active.toSeq.sortBy(_._1).map { case (day, rel) =>
-      if (cacheGenLegs)
-        genCache.computeIfAbsent((spark, dir, rel, schema, format),
-          _ => genLeg(day, rel))
-      else genLeg(day, rel)
+      genCache.computeIfAbsent((spark, dir, rel, schema, format),
+        _ => genLeg(day, rel))
     }
-    if (cacheGenLegs) {
-      // evict legs of generations this table no longer serves (reaped
-      // or superseded) so the cache tracks the keep window, not history
-      val activeRels = m.active.values.toSet
-      genCache.keySet.removeIf(k =>
-        (k._1 == spark && k._2 == dir && !activeRels.contains(k._3)) ||
-          k._1.sparkContext.isStopped) // dead sessions can't re-read; drop theirs
-      boundGenCache()
-    }
+    // evict legs of generations this table no longer serves (reaped or
+    // superseded) so the cache tracks the keep window, not history
+    val activeRels = m.active.values.toSet
+    genCache.keySet.removeIf(k =>
+      (k._1 == spark && k._2 == dir && !activeRels.contains(k._3)) ||
+        k._1.sparkContext.isStopped) // dead sessions can't re-read; drop theirs
+    boundGenCache()
     val parts =
       (if (plainPaths.nonEmpty)
         Seq(spark.read.schema(schema).format(format)

@@ -255,8 +255,9 @@ object Rollup {
     * `_CURRENT.<n>` — snapshot isolation for readers that race the
     * maintenance writer.
     *
-    * WHY (measured, LifecycleSoak r11): the merge keeps the live table
-    * correct with in-place dynamic partition OVERWRITE, which deletes
+    * WHY (measured, composed lifecycle soak r11, SURVEY.md §8.8): the
+    * merge keeps the live table correct with in-place dynamic partition
+    * OVERWRITE, which deletes
     * the previous files of every touched partition — a reader that
     * planned its scan before the merge and executed after it fails with
     * FILE_NOT_EXIST; under a 1 s trigger the current day's partition is

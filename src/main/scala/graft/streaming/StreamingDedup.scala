@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *    Unbounded state: only for bounded key domains (e.g. a day's
   *    partition re-ingest).
   *  - [[dedupWithinWatermark]] — `dropDuplicatesWithinWatermark(key)`:
-  *    state holds a key only until the watermark passes its event time,
-  *    giving bounded state at any corpus size — the 100 TB discipline.
+  *    state holds a key only until the watermark passes its event time
+  *    + delay, giving bounded state at any corpus size — the 100 TB
+  *    discipline.
   *    The contract matches the real-world duplicate source (retries,
   *    re-deliveries, crawler revisits cluster in time): duplicates
   *    farther apart than the watermark are left for the batch dedup
@@ -37,7 +38,9 @@ object StreamingDedup {
 
   /** Content-keyed dedup with watermark-bounded state: duplicates within
     * `delay` of each other are dropped; state for a key is evicted once
-    * the watermark (max event time − delay) passes it.
+    * the watermark (max event time − delay) passes the key's event time
+    * + delay, so the state holds the keys of the newest two delays
+    * (StreamingStateBoundSpec asserts the bound).
     */
   def dedupWithinWatermark(docs: DataFrame, delay: String = "1 hour"): DataFrame =
     docs.withColumn("content_key", md5(col("text")))

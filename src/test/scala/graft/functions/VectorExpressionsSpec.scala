@@ -1,11 +1,13 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 /** The native cosine expression must agree with the exact decimal HOF
   * formulation the oracle queries use, in both interpreted and
-  * whole-stage-codegen execution.
+  * whole-stage-codegen execution; every native function's builder
+  * rejects a wrong argument count on both registration routes.
   */
 class VectorExpressionsSpec extends SparkSpec {
 
@@ -61,5 +63,21 @@ class VectorExpressionsSpec extends SparkSpec {
       val noCg = df.select(expr("vec_cosine(a, b)")).head().getDouble(0)
       assert(withCg == noCg)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+  }
+
+  test("every registered builder rejects a wrong argument count by name") {
+    // GraftExtensions injects exactly these entries and ensureRegistered
+    // registers them, so one check covers both routes. No native
+    // function takes 0 or 4 arguments.
+    VectorExpressions.ensureRegistered(spark)
+    val reg = spark.sessionState.functionRegistry
+    val names = VectorExpressions.functions.map(_._1.funcName)
+    assert(names.nonEmpty && names.distinct.size == names.size)
+    for ((id, _, builder) <- VectorExpressions.functions;
+         children <- Seq(Seq.empty, Seq.fill(4)(Literal(1)))) {
+      assert(reg.functionExists(id), s"${id.funcName} not registered")
+      val e = intercept[IllegalArgumentException](builder(children))
+      assert(e.getMessage.contains(s"${id.funcName} expects"), e.getMessage)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-soak corpus builder (test-scoped main) — materializes the N×
@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * contamination breaks those laws loudly.
   */
 object ScaleCorpus {
-  private[ops] val IdOff = 10000000L
+  private val IdOff = 10000000L
   private val KeyOff = 100000000L
 
   /** Per-replica letter bijection (from, to) for `translate`.
@@ -90,13 +90,7 @@ object ScaleCorpus {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(t: String): Boolean = tableFilter.forall(_.contains(t))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.localSession(cpus, cpus)
     def read(t: String)  = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")

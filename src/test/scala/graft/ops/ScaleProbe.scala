@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-soak probe (test-scoped main) — the measurement tool behind
@@ -110,14 +109,7 @@ object ScaleProbe {
     // are refuted; the override below exists only for re-running that
     // scan, not as a protocol knob.
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.localSession(cpus, parts)
     val counts = collection.mutable.Map.empty[(String, String), Long]
     for (dir <- args) {
       for ((q, law) <- family) {
@@ -132,31 +124,6 @@ object ScaleProbe {
         val (labels, rounds) = Dedup.connectedComponentsWithRounds(pairs)
         println(s"[scale-probe] cc $dir rounds=$rounds members=${labels.count()} " +
           s"clusters=${labels.select("cluster").distinct().count()}")
-        // SPARK_GRAFT_ATTR78=1: attribute q78's superlinear output ratio.
-        // ScaleCorpus replicas get disjoint id blocks (IdOff apart), so
-        // replica(id) = id / IdOff; any doc_a/doc_b pair straddling two
-        // replicas is a CHANCE 64-bit simhash band collision (the letter
-        // bijections preserve within-replica structure but can't prevent
-        // band-level hash coincidences between unrelated texts) — the
-        // within/cross split shows how much of the output is law-abiding
-        // replica structure vs quadratic-in-N collision noise.
-        sys.env.get("SPARK_GRAFT_ATTR78") match {
-          case Some("1") =>
-            val rep = (c: org.apache.spark.sql.Column) =>
-              floor(c / lit(ScaleCorpus.IdOff))
-            val split = pairs
-              .groupBy((rep(col("a")) === rep(col("b"))).as("within"))
-              .count().collect()
-              .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-            println(s"[scale-probe] attr78 $dir within=${split.getOrElse(true, 0L)} " +
-              s"cross=${split.getOrElse(false, 0L)}")
-          case Some(other) =>
-            // set-but-unrecognized must fail loudly, not silently skip —
-            // SPARK_GRAFT_ATTR78=true used to work before the value gate
-            sys.error(s"SPARK_GRAFT_ATTR78='$other' unrecognized; " +
-              "set '1' to run the within/cross attribution or unset to skip")
-          case None => ()
-        }
       }
     }
     // multi-dir: print each query's count ratio vs the FIRST dir — the
