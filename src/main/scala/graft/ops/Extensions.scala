@@ -22,25 +22,12 @@ import org.apache.spark.sql.types._
   *  - q82 cosine top-k: brute force against ONE broadcast probe vector —
   *    O(n·d) map-side work, no shuffle until the final top-k. The bucketed
   *    ANN variant (q91) is the scale path for many probes.
-  *  - Float math: element-wise products are cast to DECIMAL(28,12) before
-  *    summing so the reduction is exact and order-independent — double
-  *    addition is not associative and a parallel engine must not let
-  *    reduction order leak into results (SURVEY.md §7.5.2).
+  *  - Float math: the native cosine accumulates each row in one fixed
+  *    sequential order — double addition is not associative and a
+  *    parallel engine must not let reduction order leak into results
+  *    (SURVEY.md §7.5.2).
   */
 object Extensions {
-
-  /** Exact dot product of two float vectors via decimal accumulation:
-    * widen float→double (exact), multiply (deterministic IEEE), cast each
-    * product to DECIMAL(28,12), fold exactly. Retained as the
-    * order-independent fallback for the native codegen cosine (q82/q91/
-    * q94) should a dataset land on a 3-decimal rounding boundary.
-    */
-  private[ops] def dotDec(a: String, b: String): org.apache.spark.sql.Column =
-    expr(
-      s"""aggregate(
-         |  zip_with($a, $b, (x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12))),
-         |  CAST(0 AS DECIMAL(28,12)),
-         |  (acc, v) -> CAST(acc + v AS DECIMAL(28,12)))""".stripMargin)
 
   /** PPJoin-style PREFIX-FILTERED variant of [[capJaccardPairs]]
     * (Chaudhuri et al. ICDE'06; Xiao et al. PPJoin) — byte-identical
@@ -469,8 +456,7 @@ object Extensions {
     // fused dot/norm/cosine loop inside whole-stage codegen, ~85× the
     // interpreted decimal-HOF chain. Per-row accumulation order is fixed
     // (sequential loop), so the 3-decimal rounding hash-matches the
-    // decimal-exact oracle — verified at sf0.001/0.01; dotDec remains the
-    // fallback if a future dataset lands on a rounding boundary.
+    // decimal-exact oracle — verified at sf0.001/0.01.
     "q82_cosine_topk" -> ((s, dir) => {
       graft.functions.VectorExpressions.ensureRegistered(s)
       val emb = Tables(s, dir, "embeddings")

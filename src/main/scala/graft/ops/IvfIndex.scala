@@ -342,7 +342,7 @@ object IvfIndex {
     // RAW fs open + read to EOF from one handle (the readManifest idiom):
     // metas are written sidecar-free, and pre-sizing from a separate
     // getFileStatus would be a TOCTOU the single handle avoids
-    val in = graft.streaming.Rollup.rawFs(fs).open(p)
+    val in = graft.streaming.NumberedFiles.rawFs(fs).open(p)
     val bos = new java.io.ByteArrayOutputStream()
     try {
       val buf = new Array[Byte](4096)

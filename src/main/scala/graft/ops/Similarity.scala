@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
   * shuffle/partition key and each bucket's candidates fit one task.
   *
   * Cosines run on the native codegen expression (graft.functions.
-  * FloatVecCosine); [[dotDec]] is the decimal-exact, order-independent
-  * fallback (SURVEY.md §7.5.2) kept for datasets whose true cosine lands
-  * on a 3-decimal rounding boundary.
+  * FloatVecCosine).
   */
 object Similarity {
 
@@ -30,13 +28,6 @@ object Similarity {
     * build) iterates MLlib k-means to convergence instead.
     */
   private[graft] val LloydRounds = 2
-
-  private[ops] def dotDec(a: String, b: String) =
-    expr(
-      s"""aggregate(
-         |  zip_with($a, $b, (x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12))),
-         |  CAST(0 AS DECIMAL(28,12)),
-         |  (acc, v) -> CAST(acc + v AS DECIMAL(28,12)))""".stripMargin)
 
   /** embeddings + sign bucket: `bits` chars of '0'/'1' from the leading
     * dimensions — 2^bits buckets.
@@ -330,8 +321,7 @@ object Similarity {
       graft.functions.VectorExpressions.ensureRegistered(s)
       val all = bucketed(s, dir)
       // native codegen cosine (order-fixed per-row accumulation; rounding
-      // at 3 decimals hash-matches the decimal-exact oracle — dotDec is
-      // the fallback if a dataset ever lands on a rounding boundary)
+      // at 3 decimals hash-matches the decimal-exact oracle)
       val pairs = all.as("a")
         .join(all.as("b"),
           col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))

@@ -116,26 +116,25 @@ object Grafana {
     * one averaged point per bucket (bucket-start epoch-ms as the time).
     */
   def queryDownsampled(metrics: DataFrame, req: QueryRequest): String = {
-    val fromMs = java.sql.Timestamp.valueOf(req.range.fromIso.replace('T', ' ')
-      .stripSuffix("Z")).getTime
-    val toMs = java.sql.Timestamp.valueOf(req.range.toIso.replace('T', ' ')
-      .stripSuffix("Z")).getTime
+    // the bucket origin and width derive from the same session-zone
+    // instants the range filter uses (constants the optimizer folds), so
+    // bucket times never shift by a JVM-vs-session zone offset
+    val from = to_timestamp(lit(req.range.fromIso))
+    val to = to_timestamp(lit(req.range.toIso))
+    val fromMs = unix_millis(from)
     // ceiling division + index clamp so bucket indices stay
     // < maxDataPoints (floor division could emit maxDataPoints+1 buckets:
     // the range is inclusive, so a row at exactly `to` lands one past the
     // end — it's clamped into the last bucket)
     val max = math.max(1, req.maxDataPoints).toLong
-    val span = toMs - fromMs
-    val bucketMs = math.max(1L, (span + max - 1) / max)
+    val bucketMs = greatest(lit(1L), ceil((unix_millis(to) - fromMs) / max))
     val series = req.targets.filter(_.targetType != "table")
     val names = series.map(_.target).distinct
     // one isin scan + one (series, bucket) aggregation for the whole
     // request (see collectBySeries); output is ≤ maxDataPoints buckets
     // per series by the index clamp, so no further limit applies
     val dps = metrics
-      .filter(col("series").isin(names: _*) &&
-        col("ts").between(to_timestamp(lit(req.range.fromIso)),
-          to_timestamp(lit(req.range.toIso))))
+      .filter(col("series").isin(names: _*) && col("ts").between(from, to))
       .filter(col("value").isNotNull)
       .groupBy(col("series"),
         least(((unix_millis(col("ts")) - fromMs) / bucketMs).cast("long"),

@@ -18,9 +18,9 @@ import org.apache.spark.sql.types._
   *    `from_json` extraction (declarative, not arbitrary JS)
   *  - header-echo series labeling (index.js:210-212, 243) → the series
   *    column carried through the plan
-  *  - null guard (index.js:246) → validity filter `CAST AS DOUBLE IS NOT
-  *    NULL` (strengthened per SURVEY.md §1.4.9: error payloads must not
-  *    ingest)
+  *  - null guard (index.js:246) → validity filter: `TRY_CAST AS DOUBLE`
+  *    must yield a finite value (strengthened per SURVEY.md §1.4.9: error
+  *    payloads must not ingest)
   *  - `writePoints` (index.js:250-257) → `foreachBatch` idempotent write
   *    to a `p_date`-partitioned table (each batch overwrites its own
   *    `batch_id` subpartition, see [[writeBatch]]), with checkpointing —
@@ -41,7 +41,10 @@ object Collector {
     * (FIXTURES.md §2). `valueExpr` is the per-source response transform
     * (the reference's arbitrary `transformResponse`, config.js.dist:25-35,
     * made declarative): a SQL expression over the string column `body`
-    * that yields the sample's numeric value.
+    * that yields the sample's numeric value. Custom extractors must
+    * convert with `TRY_CAST`, not `CAST`: under ANSI mode (Spark's
+    * default) a `CAST` of one malformed payload throws, failing the
+    * micro-batch on every replay and stopping the collector for good.
     */
   final case class SourceConfig(series: String, active: Boolean,
                                 intervalS: Int, retainS: Long, url: String,
@@ -55,7 +58,7 @@ object Collector {
 
   /** Default response transform: the dist config's `{"count": N}` scrape. */
   val defaultValueExpr: String =
-    "CAST(get_json_object(body, '$.count') AS DOUBLE)"
+    "TRY_CAST(get_json_object(body, '$.count') AS DOUBLE)"
 
   /** Raw sample schema entering [[transform]]: (series, ts, body). */
   val rawSchema: StructType = StructType(Seq(
@@ -82,8 +85,13 @@ object Collector {
         case (acc, (series, e)) => acc.when(col("series") === series, expr(e))
       }.otherwise(expr(defaultValueExpr))
     raw
-      .withColumn("value", value.cast("double"))
-      .filter(col("value").isNotNull) // nulls, parse errors, non-numerics
+      .withColumn("value", value.try_cast("double"))
+      // keeps finite values only: nulls (parse errors, non-numerics) fail
+      // the comparison, and so do ±Infinity and NaN (which Spark orders
+      // above Infinity) — they have no JSON form and would poison every
+      // rollup total. ONE reference to `value`: the filter is pushed
+      // below the projection, so each reference re-parses the body
+      .filter(abs(col("value")) < lit(Double.PositiveInfinity))
       .select(col("series"), col("ts"), col("value"),
         to_date(col("ts")).as("p_date"))
   }

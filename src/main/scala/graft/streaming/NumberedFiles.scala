@@ -13,6 +13,15 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem
   */
 private[graft] object NumberedFiles {
 
+  /** The checksum-free view of a local filesystem — numbered files are
+    * written and read through it so no .crc sidecar can race their
+    * atomic rename (non-local filesystems pass through unchanged).
+    */
+  def rawFs(fs: FileSystem): FileSystem = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
   /** The numbers `n` of the files `<prefix><n>` directly under `root`
     * (none if `root` does not exist).
     */
@@ -44,7 +53,7 @@ private[graft] object NumberedFiles {
     */
   def commit(fs: FileSystem, root: Path, prefix: String, n: Long,
              bytes: Array[Byte], keep: Int = 8)(conflict: => String): Unit = {
-    val raw = Rollup.rawFs(fs)
+    val raw = rawFs(fs)
     val tmp = new Path(root, s".${prefix}tmp")
     val out = raw.create(tmp, true)
     try out.write(bytes) finally out.close()

@@ -10,12 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the raw store is the corpus, so its maintenance must REWRITE ONCE
   * and never copy).
   *
-  * The problem it closes (measured in the composed lifecycle soak): the
-  * in-place partition swap of [[Retention]]/[[Compaction]]
-  * (write-tmp → delete → rename) invalidates the file list of any query
-  * planned before the swap that executes after it — FILE_NOT_EXIST under
-  * a 30 s maintenance cadence, bounded but real (3/1455 requests with
-  * one fixed retry, 1/1428 with backoff).
+  * The problem it closes (measured in the composed lifecycle soak): an
+  * in-place partition swap (write-tmp → delete → rename) invalidates the
+  * file list of any query planned before the swap that executes after
+  * it — FILE_NOT_EXIST under a 30 s maintenance cadence, bounded but real
+  * (3/1455 requests with one fixed retry, 1/1428 with backoff) — and a
+  * crash between its delete and rename strands the day's survivors in a
+  * hidden tmp dir. [[Retention]] and [[Compaction]] therefore commit
+  * only through [[maintain]], the one maintenance walk, and no other
+  * code knows this commit protocol.
   *
   * Mechanism — paths are never reused or moved, only eventually deleted:
   *  - versioned manifest files `_MANIFEST.<seq>` at the table root map
@@ -36,15 +39,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    grace window — an in-flight reader's resolved file list stays
   *    VALID (and consistently pre-swap) for the whole window.
   *
-  * Readers go through [[read]]: resolve the manifest once, then scan
-  * live `p_date=` dirs that are neither retired nor remapped plus the
-  * active generation dirs. A bare `spark.read(dir)` keeps working but
-  * observes retired-not-yet-reaped content — tables under graceful
-  * maintenance must be read through this resolver. [[read]] also
-  * DETECTS the one contract violation that would otherwise lose data
-  * silently: an append into a remapped day's plain dir (ingest replay
-  * past [[Compaction]]'s `closedBefore` frontier) fails the read loudly
-  * rather than serving a state that hides the appended rows.
+  * The read contract is "read through [[read]]": resolve the manifest
+  * once, then scan live `p_date=` dirs that are neither retired nor
+  * remapped plus the active generation dirs. A bare `spark.read(dir)`
+  * misses every generation and observes retired-not-yet-reaped content.
+  * [[read]] also DETECTS the one contract violation that would otherwise
+  * lose data silently: an append into a remapped day's plain dir (ingest
+  * replay past [[Compaction]]'s `closedBefore` frontier) fails the read
+  * loudly rather than serving a state that hides the appended rows.
   *
   * At 100 TB the production substrate is a real table format
   * (Iceberg/Delta manifest lists + snapshot retention); this module is
@@ -79,7 +81,7 @@ object RawStore {
     // a checksummed open would race a .crc pair rename — the
     // ChecksumException flavor of the very race this module closes
     // (observed on Rollup's snapshot pointer in the soak)
-    val in = Rollup.rawFs(fs).open(p)
+    val in = NumberedFiles.rawFs(fs).open(p)
     val bos = new java.io.ByteArrayOutputStream()
     try { // read to EOF from one handle: never pre-size from a
       // separate stat
@@ -130,8 +132,9 @@ object RawStore {
 
   /** Active (day, path) pairs: live `p_date=` dirs that are neither
     * retired nor remapped, plus the manifest's generation dirs.
-    * Unparseable partition values are skipped (same rule as
-    * [[Retention]]: maintenance must never touch what it can't prove).
+    * Unparseable partition values (a null-ts row lands in
+    * `__HIVE_DEFAULT_PARTITION__`) are skipped: maintenance must never
+    * touch what it can't prove old or closed.
     */
   def activeDays(fs: FileSystem, dir: String,
                  m: Manifest): Seq[(java.time.LocalDate, Path)] = {
@@ -326,10 +329,48 @@ object RawStore {
       }
     }
 
+  /** One day's outcome in a [[maintain]] pass. */
+  sealed trait DayAction
+  case object Keep extends DayAction
+  case object Drop extends DayAction
+  final case class Replace(survivors: DataFrame) extends DayAction
+
+  /** The one maintenance walk over the table at `dir` — [[Retention]]
+    * and [[Compaction]] supply only `decide`, which sees each active
+    * (day, path) in date order and returns that day's [[DayAction]]:
+    * [[Drop]] commits the day's retirement ([[dropDay]]), [[Replace]]
+    * writes the survivors to a fresh generation and commits it
+    * ([[swapDay]]). The manifest is threaded through every commit, and
+    * the pass ends with a [[reap]] of the retired paths older than
+    * `graceMs` — with zero grace that includes the ones this pass
+    * retired, so the table holds only live content afterwards. Returns
+    * (droppedDays, replacedDays).
+    */
+  def maintain(spark: SparkSession, dir: String, format: String, graceMs: Long)
+              (decide: (java.time.LocalDate, Path) => DayAction): (Int, Int) = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var m = readManifest(fs, dir)
+    var dropped = 0
+    var replaced = 0
+    activeDays(fs, dir, m).foreach { case (day, p) =>
+      decide(day, p) match {
+        case Keep =>
+        case Drop =>
+          m = dropDay(fs, dir, m, day)
+          dropped += 1
+        case Replace(survivors) =>
+          m = swapDay(spark, fs, dir, m, day, survivors, format)
+          replaced += 1
+      }
+    }
+    reap(fs, dir, graceMs)
+    (dropped, replaced)
+  }
+
   /** Replace `day`'s active content with `survivors`, gracefully: write
     * a fresh generation, commit the manifest, retire the old path. The
-    * old files stay valid until [[reap]]'s grace expires. Preserves
-    * `batch_id` sub-partitioning like [[Retention]]'s in-place rewrite.
+    * old files stay valid until [[reap]]'s grace expires. Preserves the
+    * collector's `batch_id` sub-partitioning.
     */
   def swapDay(spark: SparkSession, fs: FileSystem, dir: String, m: Manifest,
               day: java.time.LocalDate, survivors: DataFrame, format: String,
@@ -357,8 +398,8 @@ object RawStore {
     next
   }
 
-  /** Physically delete retired paths older than `graceMs`. Call at the
-    * top of each maintenance pass: grace must exceed the slowest
+  /** Physically delete retired paths older than `graceMs`; every
+    * [[maintain]] pass ends with one. Grace must exceed the slowest
     * reader's plan-to-finish span (soak evidence: p95 well under 1 s
     * against a 30 s cadence — a few seconds of grace is orders of
     * magnitude of headroom).

@@ -57,16 +57,6 @@ object Rollup {
     * touched/replay bookkeeping — `isin` and map equality behave
     * identically for java.sql.Date and Timestamp.
     */
-  /** The checksum-free view of a local filesystem — pointer files are
-    * written and read through it so no .crc sidecar can race their
-    * atomic rename (non-local filesystems pass through unchanged).
-    */
-  private[graft] def rawFs(fs: org.apache.hadoop.fs.FileSystem)
-      : org.apache.hadoop.fs.FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
-
   private def mergeBatchOn(spark: SparkSession, batch: DataFrame,
                            batchId: Long, rollupDir: String,
                            partCol: String, bucket: Column): Boolean = {
@@ -85,18 +75,7 @@ object Rollup {
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) return false
 
-      // committed data present? bare path existence is not enough — a
-      // crash before any commit can leave staging dirs only, and
-      // read.parquet over them would wedge every subsequent batch
-      val dirPath = new org.apache.hadoop.fs.Path(rollupDir)
-      val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val hasData = fs.exists(dirPath) && {
-        val it = fs.listFiles(dirPath, true)
-        var found = false
-        while (!found && it.hasNext)
-          found = it.next().getPath.getName.endsWith(".parquet")
-        found
-      }
+      val hasData = hasParquet(spark, rollupDir)
 
       // one frame serves the replay check and the merge: nothing writes
       // the table between them
@@ -137,6 +116,23 @@ object Rollup {
         .parquet(rollupDir)
       true
     } finally partial.unpersist()
+  }
+
+  /** Whether `dir` holds a committed `.parquet` file anywhere below it.
+    * Bare path existence is not enough: a crash before any commit can
+    * leave staging dirs only, and a read over them would wedge every
+    * later batch.
+    */
+  private def hasParquet(spark: SparkSession, dir: String): Boolean = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(root) && {
+      val it = fs.listFiles(root, true)
+      var found = false
+      while (!found && it.hasNext)
+        found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
   }
 
   /** Hour→day demotion — the hour table's retention story. The hour
@@ -184,14 +180,7 @@ object Rollup {
     val old = hourParts.filter(_._2.before(cutoff))
     if (old.isEmpty) return (0, 0)
 
-    val dayPath = new Path(dayDir)
-    val hasDay = fs.exists(dayPath) && {
-      val it = fs.listFiles(dayPath, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
+    val hasDay = hasParquet(spark, dayDir)
     // mergeSchema: stream-written day partitions lack demoted_through;
     // a plain read could sample its schema from one of those footers
     // and silently hide every stored watermark
@@ -327,11 +316,22 @@ object Rollup {
   def currentSnapshot(spark: SparkSession, servedDir: String): Long = {
     val root = new org.apache.hadoop.fs.Path(servedDir)
     val ids = NumberedFiles.list(
-      rawFs(root.getFileSystem(spark.sessionState.newHadoopConf())), root, PointerPrefix)
+      NumberedFiles.rawFs(root.getFileSystem(spark.sessionState.newHadoopConf())),
+      root, PointerPrefix)
     if (ids.isEmpty) throw new IllegalStateException(
       s"no ${PointerPrefix}<n> under $servedDir — nothing published yet")
     ids.max
   }
+
+  /** The merge step for `granularity` ("day" or "hour"). */
+  private def mergeFor(spark: SparkSession, granularity: String,
+                       rollupDir: String): (DataFrame, Long) => Boolean =
+    granularity match {
+      case "day" => mergeBatch(spark, _, _, rollupDir)
+      case "hour" => mergeBatchHourly(spark, _, _, rollupDir)
+      case g => throw new IllegalArgumentException(
+        s"granularity must be 'day' or 'hour', got '$g'")
+    }
 
   /** [[start]] + snapshot publication per committed batch: the stream
     * merges into the live table (exactly-once discipline unchanged) and
@@ -360,12 +360,7 @@ object Rollup {
                   trigger: Trigger = Trigger.ProcessingTime("1 second"),
                   granularity: String = "day", keep: Int = 3,
                   minPublishIntervalS: Long = 0): StreamingQuery = {
-    val merge: (DataFrame, Long) => Boolean = granularity match {
-      case "day" => mergeBatch(spark, _, _, rollupDir)
-      case "hour" => mergeBatchHourly(spark, _, _, rollupDir)
-      case g => throw new IllegalArgumentException(
-        s"granularity must be 'day' or 'hour', got '$g'")
-    }
+    val merge = mergeFor(spark, granularity, rollupDir)
     // heal-on-restart: a crash between merge-commit and publish leaves
     // the served tier pointing at the pre-crash snapshot, and the
     // replayed batch's merge returns FALSE (already-in detection) — so
@@ -415,12 +410,7 @@ object Rollup {
             checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("1 second"),
             granularity: String = "day"): StreamingQuery = {
-    val merge: (DataFrame, Long) => Boolean = granularity match {
-      case "day" => mergeBatch(spark, _, _, rollupDir)
-      case "hour" => mergeBatchHourly(spark, _, _, rollupDir)
-      case g => throw new IllegalArgumentException(
-        s"granularity must be 'day' or 'hour', got '$g'")
-    }
+    val merge = mergeFor(spark, granularity, rollupDir)
     points.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -491,7 +491,7 @@ class IvfIndexSpec extends SparkSpec {
     val fs = fsOf(store)
     val before = IvfIndex.readMeta(spark, store)
     val body = {
-      val in = graft.streaming.Rollup.rawFs(fs).open(p)
+      val in = graft.streaming.NumberedFiles.rawFs(fs).open(p)
       val bos = new java.io.ByteArrayOutputStream()
       try {
         val buf = new Array[Byte](4096)
@@ -504,7 +504,7 @@ class IvfIndexSpec extends SparkSpec {
     try out.write(body ++ "   ".getBytes("UTF-8")) finally out.close()
     val crc = new org.apache.hadoop.fs.Path(store, s".${p.getName}.crc")
     assert(fs.exists(crc), "precondition: checksummed create left a sidecar")
-    val raw = graft.streaming.Rollup.rawFs(fs).create(p, true)
+    val raw = graft.streaming.NumberedFiles.rawFs(fs).create(p, true)
     try raw.write(body) finally raw.close()
     // the raw-fs read never verifies the stale sidecar
     assert(IvfIndex.readMeta(spark, store) == before)

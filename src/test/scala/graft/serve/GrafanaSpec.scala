@@ -113,6 +113,23 @@ class GrafanaSpec extends SparkSpec {
     assert(json == """[{"target":"cpu","datapoints":[[1,1704412800000]]}]""")
   }
 
+  test("downsampled bucket times use the session time zone, like the range") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    val warsaw = spark.newSession()
+    warsaw.conf.set("spark.sql.session.timeZone", "Europe/Warsaw")
+    import warsaw.implicits._
+    // 00:05 Warsaw time, parsed in the session zone like the range bounds
+    val m = Seq(("cpu", "2024-01-01 00:05:00", 1.0)).toDF("series", "local", "value")
+      .select(col("series"), to_timestamp(col("local")).as("ts"), col("value"))
+    // 7 buckets of 514286 ms: a shifted origin is no bucket-width multiple
+    val json = Grafana.queryDownsampled(m, QueryRequest(Seq(Target("cpu", "timeseries")),
+      TimeRange("2024-01-01 00:00:00", "2024-01-01 01:00:00"), 7))
+    val fromMs = java.time.LocalDateTime.parse("2024-01-01T00:00:00")
+      .atZone(java.time.ZoneId.of("Europe/Warsaw")).toInstant.toEpochMilli
+    assert(fromMs == 1704063600000L)
+    assert(json == s"""[{"target":"cpu","datapoints":[[1,$fromMs]]}]""")
+  }
+
   test("multi-target query: request order preserved, unknown answers empty (golden)") {
     val json = Grafana.query(metrics,
       QueryRequest(Seq(Target("click", "timeseries"), Target("purchase", "timeseries"),

@@ -20,7 +20,13 @@ class CollectorSpec extends SparkSpec {
       ("cpu", ts("2024-01-01 00:00:01"), """{"count": null}"""),    // null value
       ("cpu", ts("2024-01-01 00:00:02"), """not json at all"""),    // parse error
       ("cpu", ts("2024-01-01 00:00:03"), """{"other": 1}"""),       // missing field
-      ("mem", ts("2024-01-01 00:00:04"), """{"count": 7}""")
+      ("mem", ts("2024-01-01 00:00:04"), """{"count": 7}"""),
+      // under ANSI mode a plain CAST of these two throws and fails the batch
+      ("cpu", ts("2024-01-01 00:00:05"), """{"count": "abc"}"""),   // non-numeric
+      ("cpu", ts("2024-01-01 00:00:06"), """{"count": 1e400}"""),   // overflows
+      // these two parse to non-finite doubles, which have no JSON form
+      ("cpu", ts("2024-01-01 00:00:07"), """{"count": "NaN"}"""),
+      ("cpu", ts("2024-01-01 00:00:08"), """{"count": "Infinity"}""")
     ).toDF("series", "ts", "body")
     val out = Collector.transform(raw).orderBy("ts").collect()
     assert(out.length == 2)
@@ -39,7 +45,7 @@ class CollectorSpec extends SparkSpec {
       ("mem", ts("2024-01-01 00:00:02"), """{"count": 9}""") // wrong shape for mem
     ).toDF("series", "ts", "body")
     val out = Collector.transform(raw, Map(
-      "mem" -> "CAST(get_json_object(body, '$.data.used_pct') AS DOUBLE)"))
+      "mem" -> "TRY_CAST(get_json_object(body, '$.data.used_pct') AS DOUBLE)"))
       .orderBy("ts").collect()
     assert(out.length == 2) // mem's wrong-shape payload fails ITS extractor
     assert(out(0).getAs[String]("series") == "cpu" && out(0).getAs[Double]("value") == 42.5)

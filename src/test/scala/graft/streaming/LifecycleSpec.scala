@@ -33,9 +33,8 @@ class LifecycleSpec extends SparkSpec {
     val q = Collector.startFromDropDir(spark, dropDir, sinkDir, ckpt, "json")
     try q.processAllAvailable() finally q.stop()
 
-    def store = spark.read
-      .schema("series STRING, ts TIMESTAMP, value DOUBLE, p_date DATE")
-      .json(sinkDir)
+    def store = RawStore.read(spark, sinkDir,
+      "series STRING, ts TIMESTAMP, value DOUBLE, p_date DATE, batch_id BIGINT", "json")
     assert(store.count() == 5) // invalid payload never ingested
 
     // 2. RETAIN: cpu keeps 2 days (cutoff 01-02), mem keeps everything

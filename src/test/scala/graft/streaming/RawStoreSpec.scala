@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** RawStore graceful-maintenance protocol: manifest flips + retired-path
   * grace windows close the raw-store reader/maintenance race the
-  * composed lifecycle soak measured (a query planned before a partition
-  * swap, executed after it, fails FILE_NOT_EXIST on the in-place path).
+  * composed lifecycle soak measured (a query planned before an in-place
+  * partition swap, executed after it, failed FILE_NOT_EXIST).
   * The contract under test: paths are never reused or moved, only
   * reaped after grace — so an in-flight reader's resolved snapshot stays
   * valid and consistently PRE-swap for the whole window.
@@ -41,8 +41,7 @@ class RawStoreSpec extends SparkSpec {
   private def fsOf(dir: String) = new org.apache.hadoop.fs.Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  test("an in-flight reader survives a graceful edge rewrite where the " +
-      "in-place swap kills it") {
+  test("an in-flight reader survives a graceful edge rewrite") {
     val dir = Files.createTempDirectory("rawstore_swap").toString
     writeTable(dir)
     val cutoff = Timestamp.valueOf("2024-01-02 12:00:00")
@@ -61,14 +60,6 @@ class RawStoreSpec extends SparkSpec {
     assert(values(fresh) == Seq(4.0, 5.0))
     assert(fresh.filter(col("p_date") === lit("2024-01-02").cast("date"))
       .count() == 1)
-
-    // contrast: the same arrangement through the IN-PLACE path loses the
-    // in-flight reader's files (this is the measured soak failure mode)
-    val dir2 = Files.createTempDirectory("rawstore_inplace").toString
-    writeTable(dir2)
-    val doomed = RawStore.read(spark, dir2, schema, "json")
-    Retention.enforce(spark, dir2, cutoff, format = "json")
-    intercept[org.apache.spark.SparkException] { doomed.count() }
   }
 
   test("graceful drop hides the day from fresh reads, keeps it for " +

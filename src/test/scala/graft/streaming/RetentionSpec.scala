@@ -8,9 +8,15 @@ import org.apache.spark.sql.functions._
 /** Retention partition-drop semantics (reference index.js:269-282 →
   * SURVEY.md §3.3): whole days before the cutoff vanish without reading
   * data; the edge day is rewritten to sub-day precision; rows at/after the
-  * cutoff survive (reference deletes `time < cutoff` exclusively).
+  * cutoff survive (reference deletes `time < cutoff` exclusively). Every
+  * result is read back through [[RawStore.read]], the store's read
+  * contract.
   */
 class RetentionSpec extends SparkSpec {
+
+  /** The table as readers see it: resolved through the manifest. */
+  private def store(dir: String) = RawStore.read(spark, dir,
+    "series STRING, ts TIMESTAMP, value DOUBLE, p_date DATE", "parquet")
 
   test("drops whole partitions before cutoff, rewrites the edge day") {
     import spark.implicits._
@@ -31,7 +37,7 @@ class RetentionSpec extends SparkSpec {
     assert(dropped == 2)   // 01-01, 01-02 gone without a read
     assert(rewritten == 1) // 01-03 filtered to ts >= cutoff
 
-    val left = spark.read.parquet(dir).select("value")
+    val left = store(dir).select("value")
       .as[Double].collect().sorted.toSeq
     assert(left == Seq(4.0, 5.0))
   }
@@ -59,7 +65,7 @@ class RetentionSpec extends SparkSpec {
     // no day is before EVERY cutoff (mem keeps from 01-01) → no drops;
     // days 01-01..01-03 rewritten with the per-series predicate
     assert(dropped == 0 && rewritten == 3)
-    val left = spark.read.parquet(dir)
+    val left = store(dir)
       .select("series", "value").as[(String, Double)].collect().toSet
     assert(left == Set(("cpu", 4.0),
       ("mem", 10.0), ("mem", 20.0), ("mem", 30.0), ("gpu", 99.0)))
@@ -83,7 +89,7 @@ class RetentionSpec extends SparkSpec {
     // has a policy → metadata drop; 01-05 is at/after the latest cutoff's
     // midnight → untouched
     assert(dropped == 1 && rewritten == 0)
-    val left = spark.read.parquet(dir).select("value").as[Double].collect().sorted.toSeq
+    val left = store(dir).select("value").as[Double].collect().sorted.toSeq
     assert(left == Seq(3.0, 4.0))
   }
 
@@ -98,11 +104,11 @@ class RetentionSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("p_date").parquet(dir)
     // no allSeries inventory → the cutoff map can't be proven complete, so
     // 01-01 must go through the per-series rewrite (keeping gpu) rather
-    // than a wholesale fs.delete
+    // than a wholesale drop
     val (dropped, rewritten) = Retention.enforcePerSeries(spark, dir, Map(
       "cpu" -> Timestamp.valueOf("2024-01-04 00:00:00")), "parquet")
     assert(dropped == 0 && rewritten == 1)
-    val left = spark.read.parquet(dir)
+    val left = store(dir)
       .select("series", "value").as[(String, Double)].collect().toSet
     assert(left == Set(("gpu", 99.0), ("cpu", 3.0)))
   }
@@ -119,7 +125,7 @@ class RetentionSpec extends SparkSpec {
       Retention.enforce(spark, dir, Timestamp.valueOf("2024-01-02 00:00:00"),
         "parquet")
     assert(dropped == 1 && rewritten == 0)
-    val left = spark.read.parquet(dir).select("value").as[Double].collect().toSeq
+    val left = store(dir).select("value").as[Double].collect().toSeq
     assert(left == Seq(2.0))
   }
 }
