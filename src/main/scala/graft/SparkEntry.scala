@@ -33,7 +33,11 @@ object SparkEntry {
     * the query function cannot unpersist it itself — the CALLER owns
     * cleanup: run the action, then `spark.catalog.clearCache()` (as
     * Bench and Verify do after every query) or track and unpersist the
-    * cached plans via `spark.sharedState.cacheManager`.
+    * cached plans via `spark.sharedState.cacheManager`. The composed
+    * pipeline queries (q126–q133) leave no stage cache behind:
+    * TrainingPipeline.prepare() releases its own before it returns, and
+    * the survivor checkpoint the returned frame reads is freed with that
+    * frame (q132 releases it in-query).
     *
     * EAGERNESS EXCEPTION: a few CONSTRUCTORS run Spark jobs. q75 builds
     * the train-gram bloom sketch and collects it driver-side (the
@@ -52,12 +56,9 @@ object SparkEntry {
     * their round loops the same way (one <= k-row winner collect per
     * round). q123 and q124 run the Lloyd rounds at construction and
     * eagerly checkpoint the trained centroid frame (one tiny k × dim
-    * job each). The composed pipeline queries (q126, q127, q128) run
-    * prepare() TO COMPLETION at construction and release every stage
-    * cache they created before returning (r17 ADVICE — repeated
-    * constructions no longer accumulate corpus-scale persists); the
-    * returned frame re-derives chunk+pack from the survivor
-    * checkpoint blocks.
+    * job each). The composed pipeline queries (q126–q133) run
+    * TrainingPipeline.prepare(), which materializes the survivors and
+    * releases its stage caches before it returns.
     * No construction state outlives the call: every construction
     * pays its own estimate and learning jobs, so re-constructing a
     * query repeats them, and q125 re-learns q122's merge table even

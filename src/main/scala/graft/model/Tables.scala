@@ -109,15 +109,4 @@ object Tables {
       case TimestampNTZType => col("ts") >= tsLit(fromIso)
       case _ => col("ts_ns") >= lit(nsOf(fromIso))
     }
-
-  /** Unified metric-store schema — the Spark mapping of the reference's
-    * point model `(measurement, time, value: FLOAT)`
-    * (reference index.js:196-202): series-as-column in ONE table instead of
-    * measurement-per-series, so cross-series queries are plain filters.
-    */
-  val metricsSchema: StructType = StructType(Seq(
-    StructField("series", StringType, nullable = false),
-    StructField("ts", TimestampType, nullable = false),
-    StructField("value", DoubleType, nullable = true)
-  ))
 }

@@ -446,8 +446,9 @@ object TextAnalysis {
     * persist/release-previous — Spark's CacheManager recaches dependent
     * cached plans when a parent cache is dropped, so the persist idiom
     * silently rebuilds each round from the round-0 lineage (measured
-    * time-DOUBLING per round). Superseded round blocks are freed by the
-    * ContextCleaner once unreferenced.
+    * time-DOUBLING per round). Only the merges leave the loop, so the
+    * vocab checkpoint and every round checkpoint are released when it
+    * returns.
     */
   private def learnRounds(seqs0: DataFrame, nRounds: Int)(
       candidates: DataFrame => IndexedSeq[(String, String, Long)],
@@ -455,6 +456,7 @@ object TextAnalysis {
         IndexedSeq[(String, String, Long)])
       : Seq[(Long, String, String, String, Long)] = {
     var seqs = seqs0
+    val checkpoints = Seq.newBuilder[DataFrame] += seqs0
     val out = Seq.newBuilder[(Long, String, String, String, Long)]
     var rank = 0L
     var exhausted = false
@@ -467,9 +469,14 @@ object TextAnalysis {
           rank += 1
           out += ((rank, a, b, a + b, cnt))
         }
-        if (kept.nonEmpty) seqs = batchApply(seqs, kept)
+        if (kept.nonEmpty) {
+          val steps = batchApply(seqs, kept)
+          checkpoints ++= steps
+          seqs = steps.last
+        }
       }
     }
+    checkpoints.result().foreach(releaseCheckpoints)
     out.result()
   }
 
@@ -521,22 +528,35 @@ object TextAnalysis {
     * anyway so the expression text is deterministic. Symbols are
     * [a-z]+ — safe SQL literals.
     * Lazy checkpoint, no materializing count: the next round's pair
-    * aggregation is the first action and materializes it then.
+    * aggregation is the first action and materializes it then. Returns
+    * every checkpointed step; the last is the applied frame.
     */
   private def batchApply(seqs: DataFrame,
-      kept: Seq[(String, String, Long)]): DataFrame = {
+      kept: Seq[(String, String, Long)]): Seq[DataFrame] = {
     // [[SegFoldChunk]] replaces per projection — the declared dials
     // (capJ <= 24) keep one projection; a larger batch chunks instead
     // of building one k-deep expression (the q120 fold-depth guard,
     // applied to the learner's apply side). Disjointness makes the
     // split points semantically free.
-    kept.grouped(SegFoldChunk).foldLeft(seqs) { (df, g) =>
+    kept.grouped(SegFoldChunk).toSeq.scanLeft(seqs) { (df, g) =>
       val repl = g.foldLeft("s") { case (acc, (a, b, _)) =>
         s"replace($acc, ' $a  $b ', ' $a$b ')"
       }
       df.withColumn("s", expr(repl)).localCheckpoint(false)
-    }
+    }.tail
   }
+
+  /** Drop the blocks of every localCheckpoint `df` reads now, instead
+    * of when the ContextCleaner collects the frame: unpersist each
+    * LogicalRDD leaf's backing RDD, the one handle that reaches them.
+    * Only for frames that own their checkpoints. Idempotent.
+    */
+  private[graft] def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** BATCHED BPE learning over the HOT-PARTITIONED candidate window
     * (r15 VERDICT #1 — the yield rule that unlocks realistic merge

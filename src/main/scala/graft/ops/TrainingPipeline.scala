@@ -66,12 +66,9 @@ object TrainingPipeline {
   private[graft] val OrderSeed = "42"
   private[graft] val ExportShards = 8
 
-  /** The optional stages, each off by default. prepare() builds one
-    * lazy graph: nothing materializes until the caller's first action
-    * (apart from the decontamination dispatcher's eval-sized estimate
-    * job — see stage 4, and the BPE learner when `bpeEncode` is on), and
-    * `Result.cleanup()` releases the stage caches once the caller has
-    * materialized what it needs.
+  /** The optional stages, each off by default. prepare() runs the
+    * pipeline through the survivors and releases its stage caches
+    * before it returns.
     */
   case class Config(
       // near-dup survivors chosen per CLUSTER (q104 semantics — keep
@@ -120,28 +117,18 @@ object TrainingPipeline {
       // bounded jobs per merge round.
       bpeEncode: Boolean = false)
 
-  /** Stage outputs: the surviving corpus and the packed bins. `cleanup`
-    * unpersists every cache this prepare() call created (idempotent;
-    * safe after the caller's last action on `survivors`/`packed`) — a
-    * selective release, without reaching for `spark.catalog.clearCache()`
-    * and dropping unrelated caches.
+  /** Stage outputs over the materialized survivors. `release` drops
+    * every block they read (the survivor checkpoint and, with
+    * `bpeEncode`, the encode's type-map cache): idempotent, and only
+    * after the last action on any Result frame.
     */
   case class Result(survivors: DataFrame, packed: DataFrame,
-                    cleanup: () => Unit,
                     // the (shard, pos, doc_id) training order over the
                     // survivors — Some iff cfg.exportOrder
                     order: Option[DataFrame],
                     // (doc_id, n_subwords, seq) BPE encoding of the
                     // survivors — Some iff cfg.bpeEncode
                     bpe: Option[DataFrame],
-                    // drops the survivor localCheckpoint blocks themselves
-                    // (tight-loop callers shouldn't wait on
-                    // GC/ContextCleaner). STRICTLY LAST-RITES: survivors/
-                    // packed/order/bpe ALL read these blocks, so call only
-                    // after the final action on every Result frame —
-                    // lineage is truncated, nothing can recompute them.
-                    // Idempotent; independent of cleanup() (which releases
-                    // only the stage caches and stays action-safe).
                     release: () => Unit)
 
   private def words(c: Column): Column = filter(split(c, " "), w => w =!= "")
@@ -311,8 +298,6 @@ object TrainingPipeline {
       .select(explode(array_distinct(expr("char_ngrams(text, 8)"))).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val contam = contamIds(nearDeduped, evalGrams, MaxContamRatio)
-    // the upstream persists stay for the caller's first action to
-    // populate once; cleanup() releases them
     val clean = nearDeduped.join(contam, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -360,29 +345,15 @@ object TrainingPipeline {
     // 0.3 s (a per-action traversal of the nested cached plans, not
     // data work; 3 consumer actions ≈ 27 s of pure overhead, growing
     // with decade). localCheckpoint collapses the plan to a LogicalRDD:
-    // post-truncation actions measured 0.1 s. Lazy (eager = false), so
-    // the "nothing materializes until the caller's first action"
-    // contract holds; the checkpoint blocks free with the
-    // Result's GC (ContextCleaner), while cleanup() releases the named
-    // upstream caches — which the checkpoint makes safe to drop even
-    // before the caller's last action. Known localCheckpoint caveat
-    // (same as q100/q114): blocks are not fault-tolerant — an executor
-    // loss on a real cluster recomputes nothing; swap for reliable
-    // checkpointing there.
-    val survivors = mixed.localCheckpoint(false)
-    // Result.release: unpersist the LogicalRDD's backing RDD directly —
-    // the one handle that reaches the checkpoint blocks without waiting
-    // for the frame's GC (ContextCleaner) or Bench's getPersistentRDDs
-    // sweep. Non-blocking; a never-materialized (lazy) checkpoint just
-    // clears the persist mark.
-    val releaseCheckpoint: () => Unit = () => {
-      survivors.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => // plan shape changed upstream: fall back to GC release
-      }
-      ()
-    }
+    // post-truncation actions measured 0.1 s. Eager: its job is the one
+    // pass that populates the stage caches, and nothing reads those
+    // caches after it, so they are released here. Known localCheckpoint
+    // caveat (same as q100/q114): blocks are not fault-tolerant — an
+    // executor loss on a real cluster recomputes nothing; swap for
+    // reliable checkpointing there.
+    val survivors = mixed.localCheckpoint(eager = true)
+    (Seq(exact, nearDedupedRaw, evalGrams, clean) ++ scrubbedOpt)
+      .foreach(_.unpersist())
 
     // 5+6. chunk + pack: the SAME q97 geometry / q58 packing helpers the
     // oracle-checked queries run (Extensions.docChunks / packBins)
@@ -404,19 +375,19 @@ object TrainingPipeline {
     // merges on what training will actually see (q114), encode every
     // survivor with them (q116's type-level machinery). Learning is
     // eager (bounded jobs per round, localCheckpoint-truncated); the
-    // encode's seg cache joins the cleanup list.
+    // encode's seg cache is released with the survivors.
     val bpe = if (!cfg.bpeEncode) None else {
       val corpus = survivors.select(col("doc_id"), col("text"))
       val merges = TextAnalysis.learnBpeMerges(corpus, TextAnalysis.BpeMerges)
       Some(TextAnalysis.bpeEncodeTokens(corpus, merges))
     }
 
-    val cleanup = () => {
-      (Seq(exact, nearDedupedRaw, evalGrams, clean) ++ scrubbedOpt)
-        .foreach(_.unpersist())
-      bpe.foreach(_._2.unpersist()) // the encode's seg type-map cache
+    val release = () => {
+      TextAnalysis.releaseCheckpoints(survivors)
+      bpe.foreach(_._2.unpersist())
+      ()
     }
-    Result(survivors, packed, cleanup, order, bpe.map(_._1), releaseCheckpoint)
+    Result(survivors, packed, order, bpe.map(_._1), release)
   }
 
   /** q126's pinned configuration: every optional stage (keep-best,
@@ -509,26 +480,10 @@ object TrainingPipeline {
   private[graft] val DeclaredOrderFullCfg =
     DeclaredFullCfg.copy(exportOrder = true)
 
-  /** The shared composed-pipeline query body: run [[prepare]] ITSELF at
-    * `cfg` over the documents table, with the [[DeclaredEvalMod]] slice
-    * as the eval set, and return the packed-bin output in declared
-    * order. EAGER (r17 ADVICE): the survivors checkpoint materializes
-    * in-lambda and `cleanup()` releases every stage cache prepare()
-    * created — repeated constructions (bench sweeps, long sessions) no
-    * longer accumulate corpus-scale MEMORY_AND_DISK persists; the
-    * returned frame re-derives chunk+pack from the survivor
-    * checkpoint blocks, so total work is unchanged. RESIDUAL: the
-    * survivor checkpoint blocks themselves outlive cleanup() by design
-    * (they ARE the serving copy) — released when the returned frame is
-    * GC'd (ContextCleaner), force-cleared by Bench's per-run
-    * getPersistentRDDs sweep, or dropped explicitly by Result.release
-    * once the caller's last action ran (r18 ADVICE: the tight-loop
-    * escape hatch). The pack/order lambdas can't call release — the
-    * frame they RETURN still reads the blocks; bpeQuery CAN and does,
-    * because its eager output checkpoint makes the returned frame
-    * self-contained. And construction is the WHOLE pipeline:
-    * plan-inspection tooling should expect these three queries to run
-    * jobs at construction (SparkEntry's EAGERNESS EXCEPTION).
+  /** The shared composed-pipeline query body: run [[prepare]] at `cfg`
+    * over the documents table, with the [[DeclaredEvalMod]] slice as
+    * the eval set, so construction runs the pipeline and the returned
+    * frames read the survivor checkpoint.
     */
   private def pipelineResult(s: org.apache.spark.sql.SparkSession,
                              dir: String, cfg: Config): Result = {
@@ -542,41 +497,22 @@ object TrainingPipeline {
       cfg)
   }
 
-  private def runPipeline(s: org.apache.spark.sql.SparkSession, dir: String,
-                          cfg: Config): Result = {
-    val res = pipelineResult(s, dir, cfg)
-    res.survivors.count()
-    res.cleanup()
-    res
-  }
-
-  /** q132's runner. [[runPipeline]]'s eager cleanup() would release the
-    * encode's seg type-map cache BEFORE the caller's actions consume
-    * Result.bpe (prepare() documents cleanup as safe only after the
-    * LAST action — r19 self-review), so the declared output
-    * materializes FIRST: one construction-time checkpoint job (the
-    * pipeline queries' declared EAGERNESS EXCEPTION; the blocks are
-    * three narrow columns × survivor count — tiny), then every stage
-    * cache releases and actions on the returned frame read the
-    * checkpoint.
+  /** q132's runner: the declared output checkpoints eagerly (three
+    * narrow columns × survivor count — tiny), so the returned frame is
+    * self-contained and the Result is released in-query.
     */
   private def bpeQuery(s: org.apache.spark.sql.SparkSession, dir: String,
                        cfg: Config): DataFrame = {
     val res = pipelineResult(s, dir, cfg)
     val out = TextAnalysis.bpeEncodeHashed(res.survivors, res.bpe.get)
       .localCheckpoint()
-    res.cleanup()
-    // r19 self-review: `out`'s eager checkpoint just made the returned
-    // frame self-contained, so the survivor blocks ARE at end-of-life
-    // here — q132 is the one pipeline lambda that can release them
-    // in-query instead of leaving them to GC/Bench's sweep
     res.release()
     out.orderBy("doc_id")
   }
 
   private def packQuery(s: org.apache.spark.sql.SparkSession, dir: String,
                         cfg: Config): DataFrame =
-    runPipeline(s, dir, cfg).packed.orderBy("shard", "bin")
+    pipelineResult(s, dir, cfg).packed.orderBy("shard", "bin")
 
   /** The composed-pipeline oracle queries (r16 VERDICT #4; widened by
     * r17 VERDICT #1/#5): the oracle re-expresses each composition as
@@ -600,7 +536,7 @@ object TrainingPipeline {
     "q128_pipeline_mix" -> ((s, dir) => packQuery(s, dir, DeclaredMixCfg)),
     "q129_pipeline_full" -> ((s, dir) => packQuery(s, dir, DeclaredFullCfg)),
     "q130_pipeline_order" -> ((s, dir) =>
-      runPipeline(s, dir, DeclaredOrderCfg).order.get.orderBy("shard", "pos")),
+      pipelineResult(s, dir, DeclaredOrderCfg).order.get.orderBy("shard", "pos")),
     "q131_pipeline_keepbest" ->
       ((s, dir) => packQuery(s, dir, DeclaredBestCfg)),
     // q132: Result.bpe gated in q116's declared shape — the SHARED
@@ -609,7 +545,7 @@ object TrainingPipeline {
     // set through the pinned SHUFFLE_HASH join)
     "q132_pipeline_bpe" -> ((s, dir) => bpeQuery(s, dir, DeclaredBpeCfg)),
     "q133_pipeline_order_full" -> ((s, dir) =>
-      runPipeline(s, dir, DeclaredOrderFullCfg).order.get
+      pipelineResult(s, dir, DeclaredOrderFullCfg).order.get
         .orderBy("shard", "pos"))
   )
 

@@ -50,12 +50,6 @@ object Collector {
                                 intervalS: Int, retainS: Long, url: String,
                                 valueExpr: String = Collector.defaultValueExpr)
 
-  /** Payload schema the demo fetcher produces; mirrors the dist
-    * transform's `{"count": N}` scrape (config.js.dist:25-35).
-    */
-  val payloadSchema: StructType =
-    StructType(Seq(StructField("count", DoubleType)))
-
   /** Default response transform: the dist config's `{"count": N}` scrape. */
   val defaultValueExpr: String =
     "TRY_CAST(get_json_object(body, '$.count') AS DOUBLE)"
@@ -127,14 +121,19 @@ object Collector {
       .select(col("series"), col("timestamp").as("ts"),
         fetch(col("url")).as("body"))
     val extractors = sources.map(s => s.series -> s.valueExpr).toMap
-    transform(due, extractors).writeStream
+    sink(transform(due, extractors), sinkDir, checkpointDir, sinkFormat)
+  }
+
+  /** Write a transformed stream to the sink on a 1 s trigger. */
+  private def sink(points: DataFrame, sinkDir: String, checkpointDir: String,
+                   sinkFormat: String): StreamingQuery =
+    points.writeStream
       .trigger(Trigger.ProcessingTime("1 second"))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         writeBatch(batch, batchId, sinkDir, sinkFormat)
       }
       .start()
-  }
 
   /** Idempotent micro-batch append: each batch lands under its own
     * `batch_id=<id>` subpartition via dynamic partition OVERWRITE, so a
@@ -203,12 +202,6 @@ object Collector {
       df.withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark("series", "ts")
     }
-    cleaned.writeStream
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, sinkDir, sinkFormat)
-      }
-      .start()
+    sink(cleaned, sinkDir, checkpointDir, sinkFormat)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.time.{LocalTime, ZoneId, ZonedDateTime}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -27,6 +28,12 @@ import org.apache.spark.sql.functions._
   * single-box reduction.
   */
 object Retention {
+
+  /** `t` on the session zone's clock: the `p_date` partitions come from
+    * `to_date(ts)`, which reads the session zone, not the JVM's.
+    */
+  private def sessionTime(spark: SparkSession, t: Timestamp): ZonedDateTime =
+    t.toInstant.atZone(ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
 
   /** Per-series retention — the reference's per-proxy `autoRemove.age`
     * (index.js:272-273, each proxy deletes with its OWN age from
@@ -60,12 +67,11 @@ object Retention {
                        allSeries: Set[String] = Set.empty,
                        grace: Option[Long] = None): (Int, Int) = {
     if (cutoffs.isEmpty) return (0, 0)
-    val earliest = cutoffs.values.min(Ordering.by((t: Timestamp) => t.getTime))
-    val latest = cutoffs.values.max(Ordering.by((t: Timestamp) => t.getTime))
-    val dropBefore = earliest.toLocalDateTime.toLocalDate
-    val latestDate = latest.toLocalDateTime.toLocalDate
-    val latestMidnight =
-      latest.toLocalDateTime.toLocalTime == java.time.LocalTime.MIDNIGHT
+    val byTime = Ordering.by((t: Timestamp) => t.getTime)
+    val dropBefore = sessionTime(spark, cutoffs.values.min(byTime)).toLocalDate
+    val latest = sessionTime(spark, cutoffs.values.max(byTime))
+    val latestDate = latest.toLocalDate
+    val latestMidnight = latest.toLocalTime == LocalTime.MIDNIGHT
     // metadata drop is provably safe only when every series the table can
     // contain has a cutoff; otherwise an unlisted (no-policy) series in an
     // old day would be silently deleted
@@ -92,9 +98,9 @@ object Retention {
   def enforce(spark: SparkSession, tableDir: String, cutoff: Timestamp,
               format: String,
               grace: Option[Long] = None): (Int, Int) = {
-    val cutoffDate = cutoff.toLocalDateTime.toLocalDate
-    val midnight =
-      cutoff.toLocalDateTime.toLocalTime == java.time.LocalTime.MIDNIGHT
+    val at = sessionTime(spark, cutoff)
+    val cutoffDate = at.toLocalDate
+    val midnight = at.toLocalTime == LocalTime.MIDNIGHT
     RawStore.maintain(spark, tableDir, format, grace.getOrElse(0L)) { (date, p) =>
       if (date.isBefore(cutoffDate)) RawStore.Drop
       else if (date.isEqual(cutoffDate) && !midnight)

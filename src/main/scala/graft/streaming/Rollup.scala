@@ -169,13 +169,17 @@ object Rollup {
     val root = new Path(hourDir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return (0, 0)
+    // Spark names hour partitions, and reads them back, on the session
+    // zone's clock
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val hourParts = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("p_hour="))
       .map { s =>
         // partition dir names escape ':' etc. URL-style (%3A)
         val v = java.net.URLDecoder.decode(
           s.getPath.getName.stripPrefix("p_hour="), "UTF-8")
-        (s.getPath, java.sql.Timestamp.valueOf(v))
+        (s.getPath, java.sql.Timestamp.from(java.time.LocalDateTime
+          .parse(v.replace(' ', 'T')).atZone(zone).toInstant))
       }
     val old = hourParts.filter(_._2.before(cutoff))
     if (old.isEmpty) return (0, 0)
@@ -192,8 +196,7 @@ object Rollup {
         .collect()
         .flatMap(r => Option(r.getTimestamp(1)).map(r.getDate(0).toString -> _))
         .toMap
-    def dayOf(h: java.sql.Timestamp) =
-      java.sql.Date.valueOf(h.toLocalDateTime.toLocalDate)
+    def dayOf(h: java.sql.Timestamp) = h.toInstant.atZone(zone).toLocalDate
     val toMerge = old.filter { case (_, h) =>
       !watermarks.get(dayOf(h).toString).exists(w => !h.after(w))
     }
@@ -333,9 +336,12 @@ object Rollup {
         s"granularity must be 'day' or 'hour', got '$g'")
     }
 
-  /** [[start]] + snapshot publication per committed batch: the stream
-    * merges into the live table (exactly-once discipline unchanged) and
-    * then publishes the post-merge state for racing readers. The serving
+  /** Maintain the rollup from a streaming points DataFrame
+    * (series, ts, value) and publish snapshots of it. `granularity`:
+    * "day" (partition `p_date`) or "hour" (partition `p_hour`) — run two
+    * streams for both tables. Each committed batch merges into the live
+    * table (the exactly-once discipline of [[mergeBatch]]) and then
+    * publishes the post-merge state for racing readers. The serving
     * layer reads [[servedTable]] and never touches the live dir.
     *
     * `minPublishIntervalS` (r13): the publish-cadence dial the
@@ -398,25 +404,6 @@ object Rollup {
           lastPubMs.set(now)
         }
         ()
-      }
-      .start()
-  }
-
-  /** Maintain the rollup from a streaming points DataFrame
-    * (series, ts, value). `granularity`: "day" (partition `p_date`) or
-    * "hour" (partition `p_hour`) — run two streams for both tables.
-    */
-  def start(spark: SparkSession, points: DataFrame, rollupDir: String,
-            checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second"),
-            granularity: String = "day"): StreamingQuery = {
-    val merge = mergeFor(spark, granularity, rollupDir)
-    points.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        merge(batch, batchId); ()
       }
       .start()
   }

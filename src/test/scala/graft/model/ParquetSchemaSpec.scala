@@ -90,8 +90,8 @@ class ParquetSchemaSpec extends SparkSpec {
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, Timestamp, Double)]
       input.addData(points)
-      val q = Rollup.start(spark, input.toDS().toDF("series", "ts", "value"),
-        s"$base/$g", s"$base/ckpt_$g",
+      val q = Rollup.startServed(spark, input.toDS().toDF("series", "ts", "value"),
+        s"$base/$g", s"$base/served_$g", s"$base/ckpt_$g",
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(), granularity = g)
       try q.processAllAvailable() finally q.stop()
       assertLoadsAsInferred(s"$base/$g")

@@ -104,7 +104,7 @@ class PiiSpec extends SparkSpec {
       // and the planted markers actually made it through
       assert(res.survivors.filter(col("text").contains("<EMAIL>")).count() > 0)
     } finally {
-      res.cleanup()
+      res.release()
       spark.catalog.clearCache()
     }
   }

@@ -343,10 +343,11 @@ class PlanLintSpec extends SparkSpec {
       s"q125 construction after q122 ran only $q125Jobs TextAnalysis jobs")
   }
 
-  /** Engine knobs do not come in through the process environment: only
-    * the harness mains in package `graft` may read it.
+  /** `file:line: text` for every line of the engine packages' sources
+    * (everything under `graft` except the harness mains) that contains
+    * one of `tokens`.
     */
-  test("no engine package reads the process environment") {
+  private def engineLinesWith(tokens: String*): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val pkgs = Seq("ops", "functions", "model", "streaming", "serve")
     val files = pkgs.flatMap { p =>
@@ -357,12 +358,28 @@ class PlanLintSpec extends SparkSpec {
       finally walk.close()
     }
     assert(files.nonEmpty, s"no sources found under $root")
-    val hits = for {
+    for {
       f <- files
       (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("sys.env") || line.contains("System.getenv")
+      if tokens.exists(line.contains)
     } yield s"$f:${n + 1}: ${line.trim}"
+  }
+
+  /** Engine knobs do not come in through the process environment: only
+    * the harness mains in package `graft` may read it.
+    */
+  test("no engine package reads the process environment") {
+    val hits = engineLinesWith("sys.env", "System.getenv")
     assert(hits.isEmpty, s"environment reads in engine code:\n${hits.mkString("\n")}")
+  }
+
+  /** Spark derives dates and partition values in the session time zone;
+    * these conversions use the JVM's default zone instead.
+    */
+  test("no engine package converts times in the JVM's default zone") {
+    val hits = engineLinesWith("toLocalDateTime", "Timestamp.valueOf",
+      "Date.valueOf", "TimeZone.getDefault", "ZoneId.systemDefault")
+    assert(hits.isEmpty, s"JVM-zone conversions in engine code:\n${hits.mkString("\n")}")
   }
 }
 

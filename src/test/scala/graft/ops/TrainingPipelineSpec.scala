@@ -172,10 +172,10 @@ class TrainingPipelineSpec extends SparkSpec {
         val o1 = order.as[(Long, Long, Long)].collect().sorted.toSeq
         val o2 = res2.order.get.as[(Long, Long, Long)].collect().sorted.toSeq
         assert(o1 == o2)
-      } finally res2.cleanup()
+      } finally res2.release()
       // absent unless requested
       assert(TrainingPipeline.prepare(train, eval_).order.isEmpty)
-    } finally { res.cleanup(); spark.catalog.clearCache() }
+    } finally { res.release(); spark.catalog.clearCache() }
   }
 
   test("bpeEncode stage: every survivor encoded, round-trip exact, cleanup releases the type map") {
@@ -201,48 +201,39 @@ class TrainingPipelineSpec extends SparkSpec {
         "bpe round-trip must reconstruct the survivor text's words")
       // absent unless requested
       assert(TrainingPipeline.prepare(train, eval_).bpe.isEmpty)
-    } finally { res.cleanup(); spark.catalog.clearCache() }
+    } finally { res.release(); spark.catalog.clearCache() }
   }
 
-  test("cleanup() releases the caches prepare() created, in non-audit mode too") {
+  test("prepare() keeps only what its Result reads; release() drops it") {
     val docs = graft.model.Tables(spark, sf(), "documents")
     val train = docs.filter(col("doc_id") % 2 === 0)
     val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
     try {
-      spark.catalog.clearCache()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val res = TrainingPipeline.prepare(train, eval_)
-      res.packed.count() // first action populates the lazy persists
-      val afterMat = spark.sparkContext.getPersistentRDDs.keySet -- before
-      // no optional stages: exact + nearDeduped + evalGrams
-      // (r18: the decontamination dispatcher's estimate input) + clean
-      // caches, plus the survivors lineage-truncation checkpoint (r14)
-      assert(afterMat.size == 5,
-        s"expected 4 pipeline caches + 1 checkpoint, got ${afterMat.size}")
-      // the truncation contract: survivors' analyzed plan is a flat
-      // LogicalRDD — downstream actions never re-traverse the composed
-      // lineage (the measured 8-9 s/action driver overhead)
-      assert(res.survivors.queryExecution.analyzed.isInstanceOf[
-        org.apache.spark.sql.execution.LogicalRDD],
-        "survivors must be lineage-truncated")
-      res.cleanup()
-      val afterClean = spark.sparkContext.getPersistentRDDs.keySet -- before
-      // the three named caches released; only the checkpoint's backing
-      // RDD remains (freed by the ContextCleaner with the Result's GC)
-      assert(afterClean.size == 1,
-        s"cleanup must release the named caches, left: ${afterClean.size}")
-      // survivors stay fully usable after cleanup — the checkpoint IS
-      // the serving copy
-      assert(res.survivors.count() > 0)
-      res.cleanup() // idempotent
-      // r19 (r18 ADVICE): release() is the last-rites escape hatch —
-      // drops the checkpoint blocks without waiting for the Result's
-      // GC. After it, NO pipeline-created persistent RDD remains.
-      res.release()
-      val afterRelease = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(afterRelease.isEmpty,
-        s"release must drop the checkpoint RDD, left: ${afterRelease.size}")
-      res.release() // idempotent, like cleanup
+      for (cfg <- Seq(TrainingPipeline.Config(),
+          TrainingPipeline.Config(bpeEncode = true))) {
+        spark.catalog.clearCache()
+        val before = persisted
+        val res = TrainingPipeline.prepare(train, eval_, cfg)
+        val created = persisted -- before
+        // survivors are lineage-truncated: downstream actions never
+        // re-traverse the composed plan
+        val checkpoint = res.survivors.queryExecution.analyzed match {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+          case p => fail(s"survivors must be a LogicalRDD, got ${p.nodeName}")
+        }
+        // every stage cache is already released: what is left is the
+        // survivor checkpoint, plus the encode's type map with bpeEncode
+        assert(created.contains(checkpoint) &&
+          created.size == (if (cfg.bpeEncode) 2 else 1),
+          s"$cfg left ${created.size} persistent RDDs")
+        assert(res.survivors.count() > 0 && res.packed.count() > 0)
+        res.bpe.foreach(b => assert(b.count() > 0))
+        res.release()
+        assert((persisted -- before).isEmpty,
+          s"release must drop what prepare() left, left: ${persisted -- before}")
+        res.release() // idempotent
+      }
     } finally spark.catalog.clearCache()
   }
 

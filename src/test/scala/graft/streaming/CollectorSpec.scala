@@ -82,6 +82,50 @@ class CollectorSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("polling collector lands each active source on its own cadence (ref index.js:225-284)") {
+    import spark.implicits._
+    val sinkDir = java.nio.file.Files.createTempDirectory("sink_poll").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_poll").toString
+    val sources = Seq(
+      Collector.SourceConfig("every1", active = true, intervalS = 1,
+        retainS = 3600, url = "http://agent-a/stats"),
+      Collector.SourceConfig("every2", active = true, intervalS = 2,
+        retainS = 3600, url = "http://agent-b/stats",
+        valueExpr = "TRY_CAST(get_json_object(body, '$.count') AS DOUBLE) + 1000"),
+      Collector.SourceConfig("off", active = false, intervalS = 1,
+        retainS = 3600, url = "http://agent-c/stats"))
+    val q = Collector.start(spark, sources, sinkDir, ckpt, "json")
+    try {
+      // one rate row per wall-clock second; wait for six ticks
+      val deadline = System.currentTimeMillis() + 60000
+      while (q.recentProgress.map(_.numInputRows).sum < 6 &&
+          System.currentTimeMillis() < deadline) {
+        assert(q.exception.isEmpty, q.exception.toString)
+        Thread.sleep(200)
+      }
+    } finally q.stop()
+    val out = spark.read
+      .schema("series STRING, ts TIMESTAMP, value DOUBLE, p_date DATE")
+      .json(sinkDir)
+      .select(col("series"), unix_seconds(col("ts")), col("value"))
+      .as[(String, Long, Double)].collect().toSeq
+    // the count the stand-in fetch reports for a url
+    def fetched(url: String) =
+      "[0-9.]+".r.findFirstIn(Collector.defaultFetch(url)).get.toDouble
+    val bySeries = out.groupBy(_._1)
+    val n1 = bySeries.getOrElse("every1", Nil).size
+    val evens = bySeries.getOrElse("every2", Nil)
+    assert(n1 >= 6, s"the 1 s source landed only $n1 samples")
+    // the 2 s source is due on every other tick, and only on even seconds
+    assert(evens.size >= n1 / 2 - 1 && evens.size <= n1 / 2 + 1,
+      s"2 s source landed ${evens.size} samples against $n1 for the 1 s source")
+    assert(evens.forall(_._2 % 2 == 0), s"2 s source landed on odd seconds: $evens")
+    assert(!bySeries.contains("off"), "an inactive source landed samples")
+    // the default extractor for every1, the custom one for every2
+    assert(bySeries("every1").forall(_._3 == fetched("http://agent-a/stats")))
+    assert(evens.forall(_._3 == fetched("http://agent-b/stats") + 1000))
+  }
+
   test("drop-dir file source collects and partitions by date (R1 file variant)") {
     import spark.implicits._
     val dropDir = java.nio.file.Files.createTempDirectory("drop").toString

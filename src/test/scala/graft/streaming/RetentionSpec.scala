@@ -113,6 +113,37 @@ class RetentionSpec extends SparkSpec {
     assert(left == Set(("gpu", 99.0), ("cpu", 3.0)))
   }
 
+  test("cutoff days follow the session time zone, not the JVM's") {
+    import spark.implicits._
+    def utc(s: String) = Timestamp.from(java.time.Instant.parse(s))
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "Asia/Tokyo") // UTC+9: p_date runs ahead of UTC
+    try {
+      // cutoff 2024-01-02T20:00Z is 2024-01-03 05:00 in Tokyo
+      val cutoff = utc("2024-01-02T20:00:00Z")
+      val runs = Seq[String => (Int, Int)](
+        Retention.enforce(spark, _, cutoff, "parquet"),
+        Retention.enforcePerSeries(spark, _, Map("cpu" -> cutoff), "parquet",
+          allSeries = Set("cpu")))
+      for (run <- runs) {
+        val dir = Files.createTempDirectory("retention_tz").toString
+        Seq(("cpu", utc("2024-01-01T20:00:00Z"), 1.0), // Tokyo 01-02 05:00
+          ("cpu", utc("2024-01-02T16:00:00Z"), 2.0),   // Tokyo 01-03 01:00
+          ("cpu", utc("2024-01-02T21:00:00Z"), 3.0),   // Tokyo 01-03 06:00
+          ("cpu", utc("2024-01-03T16:00:00Z"), 4.0))   // Tokyo 01-04 01:00
+          .toDF("series", "ts", "value")
+          .withColumn("p_date", to_date(col("ts")))
+          .write.mode("overwrite").partitionBy("p_date").parquet(dir)
+        // Tokyo 01-02 drops whole; 01-03 is the edge day and loses the
+        // 01:00 row; 01-04 is untouched
+        assert(run(dir) == ((1, 1)))
+        val left = store(dir).select("value").as[Double].collect().sorted.toSeq
+        assert(left == Seq(3.0, 4.0))
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
   test("midnight cutoff needs no edge rewrite (pure partition drop)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("retention2").toString

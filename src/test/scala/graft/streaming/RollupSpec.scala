@@ -229,9 +229,9 @@ class RollupSpec extends SparkSpec {
     val base = Files.createTempDirectory("rollup_stream_h").toString
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Timestamp, Double)]
-    val q = Rollup.start(spark,
+    val q = Rollup.startServed(spark,
       input.toDS().toDF("series", "ts", "value"),
-      s"$base/table", s"$base/ckpt",
+      s"$base/table", s"$base/served", s"$base/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       granularity = "hour")
     try {
@@ -245,8 +245,8 @@ class RollupSpec extends SparkSpec {
         .head().getAs[Double]("total") == 6.0)
     } finally q.stop()
     intercept[IllegalArgumentException] {
-      Rollup.start(spark, input.toDS().toDF("series", "ts", "value"),
-        s"$base/t2", s"$base/c2", granularity = "minute")
+      Rollup.startServed(spark, input.toDS().toDF("series", "ts", "value"),
+        s"$base/t2", s"$base/s2", s"$base/c2", granularity = "minute")
     }
   }
 
@@ -474,6 +474,34 @@ class RollupSpec extends SparkSpec {
     assert(json.contains("\"target\":\"cpu\"") && json.contains("[3,"))
   }
 
+  test("hour→day demotion reads hours and days in the session time zone") {
+    import spark.implicits._
+    def utc(s: String) = Timestamp.from(java.time.Instant.parse(s))
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "Asia/Tokyo") // UTC+9
+    try {
+      val base = Files.createTempDirectory("rollup_demote_tz").toString
+      val (hourDir, dayDir) = (s"$base/hourly", s"$base/daily")
+      // three hours of Tokyo's 2024-05-01, one of them on UTC's 04-30
+      val raw = Seq(
+        ("cpu", utc("2024-04-30T23:00:00Z"), 4.0), // Tokyo 08:00
+        ("cpu", utc("2024-05-01T02:00:00Z"), 6.0), // Tokyo 11:00
+        ("cpu", utc("2024-05-01T11:00:00Z"), 2.0)  // Tokyo 20:00
+      ).toDF("series", "ts", "value")
+      assert(Rollup.mergeBatchHourly(spark, raw, 0L, hourDir))
+      // Tokyo midnight closes the whole day
+      assert(Rollup.demoteHours(spark, hourDir, dayDir,
+        utc("2024-05-01T15:00:00Z")) == ((3, 1)))
+      val days = spark.read.option("mergeSchema", "true").parquet(dayDir)
+        .select(col("p_date").cast("string"), col("series"), col("cnt"),
+          col("total"), col("vmin"), col("vmax"))
+        .as[(String, String, Long, Double, Double, Double)].collect().toSeq
+      assert(days == Seq(("2024-05-01", "cpu", 3L, 12.0, 2.0, 6.0)))
+      assert(new java.io.File(hourDir).list().forall(!_.startsWith("p_hour=")))
+    } finally spark.conf.set(key, saved)
+  }
+
   test("demotion is replay-safe: re-merged hours are recognized by the watermark") {
     import spark.implicits._
     val base = Files.createTempDirectory("rollup_demote_replay").toString
@@ -531,9 +559,9 @@ class RollupSpec extends SparkSpec {
     val base = Files.createTempDirectory("rollup_stream").toString
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Timestamp, Double)]
-    val q = Rollup.start(spark,
+    val q = Rollup.startServed(spark,
       input.toDS().toDF("series", "ts", "value"),
-      s"$base/table", s"$base/ckpt",
+      s"$base/table", s"$base/served", s"$base/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     try {
       input.addData(("cpu", ts("2024-02-01 10:00:00"), 2.0),
