@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,22 +26,32 @@ import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 object ParquetSchema {
 
   /** The footer Spark's schema inference would read for `path`. */
-  def footer(spark: SparkSession, path: String): Footer = {
+  def footer(spark: SparkSession, path: String): Footer =
+    footerOption(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no parquet file under $path to read a schema from"))
+
+  private def footerOption(spark: SparkSession, path: String): Option[Footer] = {
     val root = new Path(path)
     val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
+    val files = dataFiles(root.getFileSystem(conf), root).sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map(FooterSchema.footer(conf, _))
+  }
+
+  /** The leaf files a Spark reader of `root` lists: recursive, with
+    * hidden `_`/`.` names (`_SUCCESS`, checksums, `.spark-staging-*`
+    * output of an unfinished write) skipped at every level by Spark's own
+    * rule. Empty when `root` does not exist.
+    */
+  def dataFiles(fs: FileSystem, root: Path): Seq[FileStatus] = {
     def leaves(s: FileStatus): Seq[FileStatus] =
       if (!s.isDirectory) Seq(s)
       else fs.listStatus(s.getPath).toSeq
         .filterNot(c => FooterSchema.hidden(c.getPath.getName))
         .flatMap(leaves)
-    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
-    val summaries = Seq("_common_metadata", "_metadata")
-    val file = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
-      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no parquet file under $path to read a schema from"))
-    FooterSchema.footer(conf, file)
+    if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Seq.empty
   }
 
   /** `spark.read.parquet(path)` with the schema read from `footer`. */
@@ -50,6 +60,12 @@ object ParquetSchema {
 
   def read(spark: SparkSession, path: String): DataFrame =
     read(spark, path, footer(spark, path))
+
+  /** [[read]], or None when a reader of `path` would list no file: the
+    * path is absent, empty, or holds only hidden output.
+    */
+  def readOption(spark: SparkSession, path: String): Option[DataFrame] =
+    footerOption(spark, path).map(read(spark, path, _))
 
   /** True iff `column` is a top-level TIMESTAMP(NANOS) in the footer's
     * parquet schema, which Spark reads only as a BIGINT under

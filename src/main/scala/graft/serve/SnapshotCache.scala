@@ -144,14 +144,14 @@ final class SnapshotCache(version: () => Long,
 object SnapshotCache {
 
   /** Cache over [[graft.streaming.Rollup]]'s published snapshot tier:
-    * version = the highest `_CURRENT.<n>` pointer, resolve = the immutable
-    * `snap=<n>` dir.
+    * version = the highest `_CURRENT.<n>` pointer, resolve = that
+    * immutable snapshot.
     */
   def forServedRollup(spark: SparkSession, servedDir: String,
                       maxResults: Int = 64): SnapshotCache =
     new SnapshotCache(
       () => graft.streaming.Rollup.currentSnapshot(spark, servedDir),
-      v => graft.model.ParquetSchema.read(spark, s"$servedDir/snap=$v"),
+      v => graft.streaming.Rollup.snapshot(spark, servedDir, v),
       maxResults)
 
   /** Cache over the RAW tier (r13): version =

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.model.ParquetSchema
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
@@ -40,15 +41,8 @@ object Compaction {
               closedBefore: Option[java.time.LocalDate] = None,
               grace: Option[Long] = None): Int = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-        else if (st.isDirectory) dataFiles(st.getPath)
-        else Seq(st.getPath)
-      }
     RawStore.maintain(spark, tableDir, format, grace.getOrElse(0L)) { (date, p) =>
-      if (closedBefore.forall(date.isBefore) && dataFiles(p).length > maxFiles) {
+      if (closedBefore.forall(date.isBefore) && ParquetSchema.dataFiles(fs, p).length > maxFiles) {
         val df = spark.read.format(format).load(p.toString)
         RawStore.Replace((if (df.columns.contains("batch_id"))
           df.withColumn("batch_id", lit(-1)) else df).repartition(targetFiles))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.model.ParquetSchema
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -315,14 +316,9 @@ object RawStore {
             "replay past the closedBefore frontier?) and would be invisible " +
             "to this resolver")
         case Some(retiredAt) =>
-          def newest(p: Path): Long =
-            fs.listStatus(p).foldLeft(0L) { (mx, st) =>
-              val n = st.getPath.getName
-              if (n.startsWith("_") || n.startsWith(".")) mx
-              else if (st.isDirectory) math.max(mx, newest(st.getPath))
-              else math.max(mx, st.getModificationTime)
-            }
-          if (newest(plain) > retiredAt) throw new IllegalStateException(
+          val newest = ParquetSchema.dataFiles(fs, plain)
+            .foldLeft(0L)((mx, st) => math.max(mx, st.getModificationTime))
+          if (newest > retiredAt) throw new IllegalStateException(
             s"$plain holds data files newer than its retirement " +
               s"($retiredAt) — rows were appended to a remapped day and " +
               "would be invisible to this resolver")

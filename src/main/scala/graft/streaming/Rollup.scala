@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.model.ParquetSchema
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -75,11 +76,10 @@ object Rollup {
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) return false
 
-      val hasData = hasParquet(spark, rollupDir)
-
       // one frame serves the replay check and the merge: nothing writes
-      // the table between them
-      val stored = if (hasData) Some(ParquetSchema.read(spark, rollupDir)) else None
+      // the table between them. Its listing skips hidden names, so the
+      // staging output of a crashed first merge reads as no table.
+      val stored = ParquetSchema.readOption(spark, rollupDir)
       val todo: Seq[Any] = stored match {
         case None => touched
         case Some(table) =>
@@ -118,23 +118,6 @@ object Rollup {
     } finally partial.unpersist()
   }
 
-  /** Whether `dir` holds a committed `.parquet` file anywhere below it.
-    * Bare path existence is not enough: a crash before any commit can
-    * leave staging dirs only, and a read over them would wedge every
-    * later batch.
-    */
-  private def hasParquet(spark: SparkSession, dir: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(root) && {
-      val it = fs.listFiles(root, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-  }
-
   /** Hour→day demotion — the hour table's retention story. The hour
     * rollup grows at 8760 × series rows/year; dashboards only zoom
     * into RECENT hours, so hours older than `cutoff` (exclusive, the
@@ -165,7 +148,6 @@ object Rollup {
     */
   def demoteHours(spark: SparkSession, hourDir: String, dayDir: String,
                   cutoff: java.sql.Timestamp): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(hourDir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return (0, 0)
@@ -184,18 +166,21 @@ object Rollup {
     val old = hourParts.filter(_._2.before(cutoff))
     if (old.isEmpty) return (0, 0)
 
-    val hasDay = hasParquet(spark, dayDir)
     // mergeSchema: stream-written day partitions lack demoted_through;
     // a plain read could sample its schema from one of those footers
-    // and silently hide every stored watermark
-    def dayTable = spark.read.option("mergeSchema", "true").parquet(dayDir)
-    val watermarks: Map[String, java.sql.Timestamp] =
-      if (!hasDay || !dayTable.columns.contains("demoted_through")) Map.empty
-      else dayTable.groupBy(col("p_date"))
+    // and silently hide every stored watermark. Resolved once: the loop
+    // below reads each day's rows before it rewrites that day alone.
+    val dayRoot = new Path(dayDir)
+    val dayTable =
+      if (ParquetSchema.dataFiles(dayRoot.getFileSystem(fs.getConf), dayRoot).isEmpty) None
+      else Some(spark.read.option("mergeSchema", "true").parquet(dayDir))
+    val watermarks: Map[String, java.sql.Timestamp] = dayTable
+      .filter(_.columns.contains("demoted_through"))
+      .fold(Map.empty[String, java.sql.Timestamp])(_.groupBy(col("p_date"))
         .agg(max(col("demoted_through")).as("w"))
         .collect()
         .flatMap(r => Option(r.getTimestamp(1)).map(r.getDate(0).toString -> _))
-        .toMap
+        .toMap)
     def dayOf(h: java.sql.Timestamp) = h.toInstant.atZone(zone).toLocalDate
     val toMerge = old.filter { case (_, h) =>
       !watermarks.get(dayOf(h).toString).exists(w => !h.after(w))
@@ -209,20 +194,16 @@ object Rollup {
           .filter(col("p_hour").isin(hrs.map(_._2): _*))
           .select(col("series"), col("cnt"), col("total"),
             col("vmin"), col("vmax"))
-        val existing =
-          if (hasDay) dayTable.filter(col("p_date") === lit(day))
-            .select(col("series"), col("cnt"), col("total"),
-              col("vmin"), col("vmax"))
-          else null
+        val existing = dayTable.map(_.filter(col("p_date") === lit(day)))
         // keep the partition's replay bookkeeping intact across the
         // rewrite (mergeBatch reads last_batch per partition)
-        val lastBatch: Long =
-          if (existing == null) -1L
-          else dayTable.filter(col("p_date") === lit(day))
-            .agg(coalesce(max(col("last_batch")), lit(-1L)))
-            .head().getLong(0)
-        val merged = (if (existing == null) hourRows
-          else existing.unionByName(hourRows))
+        val lastBatch: Long = existing.fold(-1L)(_
+          .agg(coalesce(max(col("last_batch")), lit(-1L)))
+          .head().getLong(0))
+        val merged = existing.fold(hourRows)(_
+          .select(col("series"), col("cnt"), col("total"),
+            col("vmin"), col("vmax"))
+          .unionByName(hourRows))
           .groupBy(col("series"))
           .agg(sum(col("cnt")).as("cnt"), sum(col("total")).as("total"),
             min(col("vmin")).as("vmin"), max(col("vmax")).as("vmax"))
@@ -245,7 +226,8 @@ object Rollup {
   /** Publish the maintained table's CURRENT state as an immutable
     * snapshot under `servedDir/snap=<n>/` and commit the pointer
     * `_CURRENT.<n>` — snapshot isolation for readers that race the
-    * maintenance writer.
+    * maintenance writer. [[startServed]] publishes after every merged
+    * batch; call it directly to snapshot a table no stream maintains.
     *
     * WHY (measured, composed lifecycle soak r11, SURVEY.md §8.8): the
     * merge keeps the live table correct with in-place dynamic partition
@@ -262,11 +244,10 @@ object Rollup {
     * DESIGN (days-or-hours × series rows — the table's whole point at
     * 100 TB), so a complete snapshot per publish is one small write,
     * independent of raw corpus size. Snapshots are append-only until
-    * pruned; `keep` bounds disk while giving in-flight readers a
-    * `keep`-generations grace window (a reader must finish within
-    * `keep` publishes — the single-box analog of a table format's
-    * snapshot retention; at production scale this tier IS the table
-    * format's manifest commit).
+    * pruned: the newest [[Keep]] stay, so an in-flight reader must
+    * finish within [[Keep]] publishes (the single-box analog of a table
+    * format's snapshot retention; at production scale this tier IS the
+    * table format's manifest commit).
     *
     * Pointers are [[NumberedFiles]], like [[RawStore]]'s manifests:
     * each publish adds an empty `_CURRENT.<n>` and the reader takes the
@@ -277,28 +258,34 @@ object Rollup {
     * (ConcurrentModificationException).
     * Returns the published snapshot id.
     */
-  def publish(spark: SparkSession, tableDir: String, servedDir: String,
-              keep: Int = 3): Long = {
-    import org.apache.hadoop.fs.Path
+  def publish(spark: SparkSession, tableDir: String, servedDir: String): Long = {
     val root = new Path(servedDir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(root)
     val existing = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("snap="))
-      .map(_.getPath.getName.stripPrefix("snap=").toLong)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(SnapPrefix))
+      .map(_.getPath.getName.stripPrefix(SnapPrefix).toLong)
     val id = if (existing.isEmpty) 0L else existing.max + 1L
     ParquetSchema.read(spark, tableDir)
-      .write.mode("overwrite").parquet(s"$servedDir/snap=$id")
+      .write.mode("overwrite").parquet(snapDir(servedDir, id))
     NumberedFiles.commit(fs, root, PointerPrefix, id, Array.emptyByteArray, keep = 2)(
       s"snapshot $id already published under $servedDir — a concurrent " +
         "publisher violated the single-writer contract")
     // prune beyond the grace window, oldest first, never the current
-    existing.sorted.dropRight(math.max(keep - 1, 0))
-      .foreach(old => fs.delete(new Path(root, s"snap=$old"), true))
+    existing.sorted.dropRight(Keep - 1)
+      .foreach(old => fs.delete(new Path(snapDir(servedDir, old)), true))
     id
   }
 
+  /** Snapshots [[publish]] keeps: the current one and its `Keep - 1`
+    * predecessors, the grace window of in-flight readers.
+    */
+  private[streaming] val Keep = 3
+
   private val PointerPrefix = "_CURRENT."
+  private val SnapPrefix = "snap="
+
+  private def snapDir(servedDir: String, id: Long) = s"$servedDir/$SnapPrefix$id"
 
   /** The reader half of [[publish]]: resolve the current pointer and
     * read that immutable snapshot. Plans built from this DataFrame never
@@ -306,8 +293,11 @@ object Rollup {
     * rollup dashboard read is the correct trade.
     */
   def servedTable(spark: SparkSession, servedDir: String): DataFrame =
-    ParquetSchema.read(spark,
-      s"$servedDir/snap=${currentSnapshot(spark, servedDir)}")
+    snapshot(spark, servedDir, currentSnapshot(spark, servedDir))
+
+  /** The immutable snapshot `id` that [[publish]] wrote under `servedDir`. */
+  def snapshot(spark: SparkSession, servedDir: String, id: Long): DataFrame =
+    ParquetSchema.read(spark, snapDir(servedDir, id))
 
   /** The published snapshot id: the highest `_CURRENT.<n>` under
     * `servedDir` — the cheap (one listing, no file opened) per-request
@@ -317,7 +307,7 @@ object Rollup {
     * id, never an error (RollupSpec).
     */
   def currentSnapshot(spark: SparkSession, servedDir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(servedDir)
+    val root = new Path(servedDir)
     val ids = NumberedFiles.list(
       NumberedFiles.rawFs(root.getFileSystem(spark.sessionState.newHadoopConf())),
       root, PointerPrefix)
@@ -339,33 +329,16 @@ object Rollup {
   /** Maintain the rollup from a streaming points DataFrame
     * (series, ts, value) and publish snapshots of it. `granularity`:
     * "day" (partition `p_date`) or "hour" (partition `p_hour`) — run two
-    * streams for both tables. Each committed batch merges into the live
-    * table (the exactly-once discipline of [[mergeBatch]]) and then
-    * publishes the post-merge state for racing readers. The serving
-    * layer reads [[servedTable]] and never touches the live dir.
-    *
-    * `minPublishIntervalS` (r13): the publish-cadence dial the
-    * SnapshotCache regime analysis asks for — 0 publishes per committed
-    * batch (second-scale churn: maximal freshness, the cache's measured
-    * LOSING regime), N > 0 publishes at most every N seconds (the served
-    * tier lags the live table by up to N — the dashboard arrangement
-    * where snapshot lifetime ≫ request interarrival and the cache's
-    * pinned frame + memo pay off). Merging is NEVER gated — only
-    * publication; the heal-on-restart publish also bypasses the gate.
-    *
-    * DRAIN CONTRACT (gated mode): state merged after the last publish
-    * stays unpublished until the next batch opens the gate — up to N
-    * seconds of served-tier lag persists across a drain-then-stop. A
-    * deployment that stops the stream and keeps serving flushes with
-    * one explicit [[publish]] call after `stop()` (publishing an
-    * unchanged state is harmless — a fresh snapshot of identical
-    * content, same as the heal path).
+    * streams for both tables. Each batch that merges into the live table
+    * (the exactly-once discipline of [[mergeBatch]]) then [[publish]]es
+    * the post-merge state for racing readers, so the served tier is
+    * never behind a completed batch. The serving layer reads
+    * [[servedTable]] and never touches the live dir.
     */
   def startServed(spark: SparkSession, points: DataFrame, rollupDir: String,
                   servedDir: String, checkpointDir: String,
                   trigger: Trigger = Trigger.ProcessingTime("1 second"),
-                  granularity: String = "day", keep: Int = 3,
-                  minPublishIntervalS: Long = 0): StreamingQuery = {
+                  granularity: String = "day"): StreamingQuery = {
     val merge = mergeFor(spark, granularity, rollupDir)
     // heal-on-restart: a crash between merge-commit and publish leaves
     // the served tier pointing at the pre-crash snapshot, and the
@@ -374,17 +347,6 @@ object Rollup {
     // the live table has data. Publishing an unchanged state is
     // harmless (a fresh snapshot of identical content).
     val healed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // epoch-0 start: the FIRST merged batch always publishes (readers
-    // need a snapshot to exist before the cadence gate matters). NOT
-    // Long.MinValue — `now - MinValue` overflows negative and the gate
-    // would never open.
-    // PER-PROCESS by contract (r13 VERDICT #4, closed document-only): a
-    // stream restart re-arms the gate, so the first post-restart batch
-    // always publishes. Intentional: the cadence dial exists to bound
-    // publish I/O under steady ingest, and a fresh process publishing
-    // immediately re-establishes serving freshness after downtime —
-    // persisting the gate across restarts would trade that for nothing.
-    val lastPubMs = new java.util.concurrent.atomic.AtomicLong(0L)
     points.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -392,17 +354,11 @@ object Rollup {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val merged = merge(batch, batchId)
         val mustHeal = !healed.getAndSet(true) && !merged && {
-          val root = new org.apache.hadoop.fs.Path(rollupDir)
-          val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          fs.exists(root) && fs.listStatus(root).nonEmpty
+          val root = new Path(rollupDir)
+          ParquetSchema.dataFiles(
+            root.getFileSystem(spark.sessionState.newHadoopConf()), root).nonEmpty
         }
-        val now = System.currentTimeMillis()
-        val due = minPublishIntervalS <= 0 ||
-          now - lastPubMs.get() >= minPublishIntervalS * 1000
-        if (mustHeal || (merged && due)) {
-          publish(spark, rollupDir, servedDir, keep)
-          lastPubMs.set(now)
-        }
+        if (merged || mustHeal) publish(spark, rollupDir, servedDir)
         ()
       }
       .start()

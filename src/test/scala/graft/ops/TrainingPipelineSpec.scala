@@ -178,7 +178,7 @@ class TrainingPipelineSpec extends SparkSpec {
     } finally { res.release(); spark.catalog.clearCache() }
   }
 
-  test("bpeEncode stage: every survivor encoded, round-trip exact, cleanup releases the type map") {
+  test("bpeEncode stage: every survivor encoded, round-trip exact") {
     val docs = graft.model.Tables(spark, sf(), "documents")
     val train = docs.filter(col("doc_id") % 2 === 0)
     val eval_ = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")

@@ -281,12 +281,12 @@ class RollupSpec extends SparkSpec {
       val b = Seq(("cpu", ts(s"2024-01-01 1$i:00:00"), i.toDouble))
         .toDF("series", "ts", "value")
       assert(Rollup.mergeBatch(spark, b, i.toLong, live))
-      Rollup.publish(spark, live, served, keep = 2)
+      Rollup.publish(spark, live, served)
     }
     val snaps = new java.io.File(served).listFiles()
       .filter(_.getName.startsWith("snap=")).map(_.getName).sorted
-    assert(snaps.toSeq == Seq("snap=3", "snap=4"),
-      s"grace window should hold exactly the 2 newest, got ${snaps.mkString(",")}")
+    assert(snaps.toSeq == (5 - Rollup.Keep until 5).map(i => s"snap=$i"),
+      s"grace window should hold exactly the ${Rollup.Keep} newest, got ${snaps.mkString(",")}")
     // current resolves to the newest and reads the full merged state
     assert(Rollup.servedTable(spark, served).head().getAs[Long]("cnt") == 5L)
     // nothing published yet elsewhere → loud failure, not an empty frame
@@ -373,40 +373,41 @@ class RollupSpec extends SparkSpec {
       "healed snapshot must equal the live merged state (no double count)")
   }
 
-  test("gated publish: first batch publishes, the gate holds later batches, " +
-      "explicit publish flushes the drain lag") {
+  test("a crashed first merge's staging output neither hides the batch " +
+      "nor wedges the restarted stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("rollup_gate").toString
-    val (live, served, ckpt) = (s"$base/table", s"$base/served", s"$base/ckpt")
-    def currentSnap(): Long = Rollup.currentSnapshot(spark, served)
+    val base = Files.createTempDirectory("rollup_staging").toString
+    val (live, served) = (s"$base/table", s"$base/served")
+    // the crash left one task's output under Spark's hidden staging dir
+    // and nothing committed
+    val rows = Seq(("cpu", ts("2024-03-01 10:00:00"), 2.0),
+      ("cpu", ts("2024-03-01 11:00:00"), 4.0))
+    rows.toDF("series", "ts", "value").coalesce(1).write.parquet(s"$base/out")
+    val part = new java.io.File(s"$base/out").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    val staged = java.nio.file.Paths.get(live, ".spark-staging-0", "_temporary",
+      "0", "_temporary", "attempt_0", "p_date=2024-03-01", part.getFileName.toString)
+    Files.createDirectories(staged.getParent)
+    Files.copy(part, staged)
+
+    val batch = rows.toDF("series", "ts", "value")
+    assert(Rollup.mergeBatch(spark, batch, 0L, live))
+    val table = spark.read.parquet(live).select("series", "cnt", "total").as[(String, Long, Double)]
+    assert(table.collect().toSeq == Seq(("cpu", 2L, 6.0)))
+
+    // the restarted stream replays batch 0: the merge recognizes it, and
+    // the heal publishes the live table
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Timestamp, Double)]
-    val points = input.toDS().toDF("series", "ts", "value")
-    // huge gate, ONE long-lived query: the first merged batch publishes
-    // (epoch-0 gate start), every later one is held. The gate is
-    // in-memory cadence state, so both batches must ride the SAME query.
-    val q = Rollup.startServed(spark, points, live, served, ckpt,
-      minPublishIntervalS = 3600)
-    try {
-      input.addData(("cpu", ts("2024-03-01 10:00:00"), 2.0))
-      q.processAllAvailable()
-      val snapFirst = currentSnap()
-      input.addData(("cpu", ts("2024-03-01 11:00:00"), 4.0))
-      q.processAllAvailable()
-      assert(currentSnap() == snapFirst,
-        "the gate must hold the second batch's publish")
-    } finally q.stop()
-    val snap1 = currentSnap()
-    val merged = spark.read.parquet(live)
-    assert(merged.head().getAs[Long]("cnt") == 2L,
-      "merging is never gated")
-    // drain flush: explicit publish surfaces the merged state
-    Rollup.publish(spark, live, served)
-    assert(currentSnap() != snap1, "drain publish must flip the pointer")
-    val r = Rollup.servedTable(spark, served)
-    assert(r.head().getAs[Long]("cnt") == 2L,
-      "flushed snapshot must equal the live merged state")
+    input.addData(rows: _*)
+    val q = Rollup.startServed(spark, input.toDS().toDF("series", "ts", "value"),
+      live, served, s"$base/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    try q.processAllAvailable() finally q.stop()
+    val r = Rollup.servedTable(spark, served).select("series", "cnt", "total")
+      .as[(String, Long, Double)]
+    assert(r.collect().toSeq == Seq(("cpu", 2L, 6.0)))
   }
 
   test("rollup partitions expire through the shared Retention machinery") {
